@@ -210,7 +210,7 @@ object AnnIndex {
   // probed it safe, r11 promoted it).                                 //
   // The legacy anti-join reads the postings' narrow vec_id column on  //
   // every incremental batch: measured flat through 640k vectors       //
-  // (IngestProbe), but it is O(store) and eventually dominates the    //
+  // (PERF.md r8), but it is O(store) and eventually dominates the     //
   // per-batch floor. The manifest is the named escalation: one row    //
   // appended per update — (n, min_id, max_id, bloom) — so membership  //
   // for a new batch reads the TINY manifest instead of the store:     //

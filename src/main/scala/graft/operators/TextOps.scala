@@ -859,10 +859,6 @@ object TextOps {
   // rounds ≤ graph diameter). Oracle: recursive-CTE transitive closure. //
   // -------------------------------------------------------------------- //
 
-  /** Connected components over an undirected pair list via min-label
-    * propagation to fixpoint. Returns (node, label) for every node that
-    * appears in a pair; label = the component's minimum node id.
-    */
   /** Edge-count bound under which connected components run as driver
     * union-find instead of the distributed fixpoint — the same adaptive
     * call AQE makes when it broadcasts a small join side. 1M undirected
@@ -872,19 +868,25 @@ object TextOps {
     */
   private[operators] val LocalComponentEdgeLimit = 1000000L
 
-  /** Rounds the last distributed components() fixpoint took — probe
-    * observability only ([[graft.ComponentsProbe]] reads it beside the
-    * wall time; a query never does). Single-threaded per probe run.
+  /** Rounds the last [[componentsFixpoint]] run took — observability
+    * only: ComponentsSpec reads it to pin the fixpoint's diameter-bound
+    * round count; a query never does. Single-threaded per spec run.
     */
   private[graft] val lastFixpointRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Rounds the last star-contraction run took — probe observability
-    * only, like [[lastFixpointRounds]].
+  /** Rounds the last star-contraction run took — observability only,
+    * read by ComponentsSpec like [[lastFixpointRounds]].
     */
   private[graft] val lastStarRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Connected components over an undirected pair list. Returns
+    * (node, label) for every node that appears in a pair; label = the
+    * component's minimum node id. Graphs up to `localEdgeLimit` edges
+    * run as driver union-find, larger ones as the distributed star
+    * contraction ([[componentsStarOn]]).
+    */
   private[graft] def components(pairs: DataFrame,
       localEdgeLimit: Long = LocalComponentEdgeLimit): DataFrame = {
     // eager localCheckpoint: every contraction round's plan embeds
@@ -915,9 +917,9 @@ object TextOps {
   }
 
   /** The previous distributed leg — iterative min-label propagation to
-    * fixpoint. Kept as the probe/gate REFERENCE for the star
-    * contraction (ComponentsProbe times both; ComponentsSpec gates
-    * label-identical output): its round count tracks graph DIAMETER
+    * fixpoint. Kept as ComponentsSpec's REFERENCE for the star
+    * contraction (the spec gates label-identical output): its round
+    * count tracks graph DIAMETER
     * (chain@10M edges: 11 rounds, 42 s vs star-shape's 2 rounds —
     * PERF.md round 10), which is exactly what [[componentsStarOn]]
     * bounds logarithmically.
@@ -1243,20 +1245,6 @@ object TextOps {
   private val bpeCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]
 
-  /** Train ONCE per JVM per corpus dir (the StoreUtil.cachedTempDir
-    * memoization every durable-store query here uses — both gated rows
-    * and repeated bench runs share one training): the loop writes the
-    * final re-tokenized corpus to `dir/corpus` and the learned merge
-    * list to `dir/merges` as parquet, and each round unpersists the
-    * previous checkpoint as soon as the next is materialized, so peak
-    * executor storage is TWO corpus-width frames, not N — and zero
-    * once training ends (the parquet files are the durable face).
-    */
-  /** The raw trainer loop over an arbitrary (doc_id, text) frame —
-    * exposed for [[graft.BpeProbe]], which measures its per-round
-    * near-linearity. Returns the final (still-checkpointed) corpus
-    * frame — caller must unpersist it — and the learned merges.
-    */
   /** Text → the double-separator representation (every boundary and
     * both ends = exactly two separators). */
   private[graft] def bpeRepr(text: Column): Column = {
@@ -1280,7 +1268,11 @@ object TextOps {
     replace(txt, lit(S + a + SS + b + S), lit(S + a + " " + b + S))
   }
 
-  private[graft] def bpeTrainOn(docs: DataFrame)
+  /** The raw trainer loop over a (doc_id, text) frame. Returns the
+    * final (still-checkpointed) corpus frame — caller must unpersist
+    * it — and the learned merges.
+    */
+  private def bpeTrainOn(docs: DataFrame)
       : (DataFrame, Seq[(Int, String, String, String, Long)]) = {
     var t = docs
       .select(col("doc_id"), bpeRepr(col("text")).as("txt"))
@@ -1319,6 +1311,15 @@ object TextOps {
     (t, out.toSeq)
   }
 
+  /** Train ONCE per JVM per corpus dir (the StoreUtil.cachedTempDir
+    * memoization every durable-store query here uses — both gated rows
+    * and repeated bench runs share one training): the loop writes the
+    * final re-tokenized corpus to `dir/corpus` and the learned merge
+    * list to `dir/merges` as parquet, and each round unpersists the
+    * previous checkpoint as soon as the next is materialized, so peak
+    * executor storage is TWO corpus-width frames, not N — and zero
+    * once training ends (the parquet files are the durable face).
+    */
   private def bpeTrained(spark: SparkSession, sfDir: String): String =
     StoreUtil.cachedTempDir(bpeCache, sfDir, "graft-bpe") { dir =>
       import spark.implicits._
@@ -1495,14 +1496,8 @@ object TextOps {
         .mkString(" + ")).as("sh"))
   }
 
-  def simhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    simhashPairsOn(Tables(spark, sfDir, "documents"))
-
-  /** Same pipeline over an arbitrary corpus frame (doc_id, text) — the
-    * SimhashProbe times it at 25k–100k synthetic docs.
-    */
-  private[graft] def simhashPairsOn(docs: DataFrame): DataFrame = {
-    val t = simhash60(docs)
+  def simhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
+    val t = simhash60(Tables(spark, sfDir, "documents"))
     // 4 banded rows per doc; key = the band's 15-bit slice (sh < 2^60,
     // always non-negative, so shiftright/% are exact)
     val banded = t.select(col("doc_id"), col("sh"),
@@ -1608,15 +1603,9 @@ object TextOps {
   // minhashPairs uses for resemblance.                                  //
   // -------------------------------------------------------------------- //
 
-  def containmentPairs(spark: SparkSession, sfDir: String): DataFrame =
-    containmentPairsOn(Tables(spark, sfDir, "documents"))
-
-  /** The blocked form over an arbitrary (doc_id, source, text) frame —
-    * the ContainmentProbe times it against the prefix twin.
-    */
-  private[graft] def containmentPairsOn(docs: DataFrame): DataFrame = {
+  def containmentPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val fp = expr(fp60)
-    val t = docs
+    val t = Tables(spark, sfDir, "documents")
       .select(col("doc_id"), col("source"), fp.as("s"))
     val a = t.select(col("source"), col("doc_id").as("a_id"),
       col("s").as("a_s"))
@@ -1683,11 +1672,8 @@ object TextOps {
   // -------------------------------------------------------------------- //
 
   def containmentPrefixPairs(spark: SparkSession, sfDir: String)
-      : DataFrame =
-    containmentPrefixPairsOn(Tables(spark, sfDir, "documents"))
-
-  private[graft] def containmentPrefixPairsOn(docs: DataFrame)
       : DataFrame = {
+    val docs = Tables(spark, sfDir, "documents")
     val fp = expr(fp60)
     val tok = docs
       .select(col("doc_id"), col("source"), explode(fp).as("f"))
@@ -1756,14 +1742,7 @@ object TextOps {
   private val b = bm25B
 
   def bm25Topk(spark: SparkSession, sfDir: String): DataFrame =
-    bm25TopkOf(Tables(spark, sfDir, "documents"))
-
-  /** The same plan over an arbitrary (doc_id, text) frame — the probe
-    * harness feeds replicated corpora through this to compare
-    * from-scratch cost against [[TermIndex]] serving at N× scale.
-    */
-  private[graft] def bm25TopkOf(corpus: DataFrame): DataFrame =
-    bm25ScoresOf(corpus)
+    bm25ScoresOf(Tables(spark, sfDir, "documents"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(20)
 
@@ -1875,8 +1854,7 @@ object TextOps {
     * postings live in the same store), deleted on JVM exit. Without the
     * cache each invocation rebuilt a fresh temp store and leaked its
     * directory, folding index-build cost into what is nominally a
-    * query; [[graft.StoreProbe]] remains the build-vs-serve timing
-    * surface.
+    * query.
     */
   private val termIndexCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -3757,17 +3735,22 @@ object TextOps {
   // trivial (shard = prefix of the key space).                          //
   // -------------------------------------------------------------------- //
 
-  /** The declared row now runs the RANGE-EXCHANGE core (r17: guide §2 —
+  /** The declared row runs the RANGE-EXCHANGE core (r17: guide §2 —
     * the global `row_number()` window was a single-partition sort of
-    * the whole corpus; positions are invariant to the partitioning, so
-    * the ranged core's output is value-identical and the oracle is
-    * unchanged). [[trainOrderGlobalOn]] is kept as the reference shape
-    * `graft.OrderProbe` measures the crossover against. Partition count
-    * follows the session's shuffle parallelism, not a constant.
+    * the whole corpus): positions derive from a range partitioning on
+    * the shuffle key + within-partition sort + per-partition offsets
+    * lifted by a ≤`parts`-row count collect — zero global windows.
+    * Positions are invariant to the partitioning, so the output is
+    * value-identical to the global window and the oracle is unchanged;
+    * [[trainOrderGlobalOn]] is kept as TextOpsSpec's reference shape.
+    * Partition count follows the session's shuffle parallelism, not a
+    * constant. `docs_train_order_ranged` is the same row under its
+    * older name.
     */
   def trainOrder(spark: SparkSession, sfDir: String): DataFrame =
-    trainOrderRangedOn(spark, docsKeyed(spark, sfDir),
-      parts = spark.sessionState.conf.numShufflePartitions)
+    rangedPositionsOn(spark, docsKeyed(spark, sfDir),
+      parts = spark.sessionState.conf.numShufflePartitions,
+      keys = Seq("shuffle_key", "doc_id"), posCol = "shuffle_pos")
 
   private def docsKeyed(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "documents")
@@ -3776,8 +3759,8 @@ object TextOps {
           .as("shuffle_key"))
 
   /** The oracle-parity form: ONE global row_number window (a
-    * single-partition sort — `graft.OrderProbe` measures where it
-    * stops scaling against the ranged core below).
+    * single-partition sort) — TextOpsSpec's reference for
+    * [[trainOrder]]'s ranged positions.
     */
   private[graft] def trainOrderGlobalOn(keyed: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -3803,10 +3786,11 @@ object TextOps {
     * calibration row's ONE bounded-state percentile broadcast (never a
     * global sort to FIND bands), position = row_number over
     * (band ASC, seeded content hash, doc_id) so the highest-quality
-    * decile streams last. The global window is the oracle-parity
-    * shape; at scale [[trainOrderRangedOn]]'s range-exchange core
-    * applies unchanged with (band, shuffle_key) as the range key —
-    * `graft.OrderProbe` measured that crossover.
+    * decile streams last. The oracle's global window is the parity
+    * shape; the declared row runs [[rangedPositionsOn]]'s range-exchange
+    * core with (band, shuffle_key, doc_id) as the range key.
+    * `docs_curriculum_order_ranged` is the same row under its older
+    * name.
     */
   def curriculumOrder(spark: SparkSession, sfDir: String): DataFrame =
     // r17: the declared row runs the range-exchange core (guide §2) —
@@ -3842,18 +3826,6 @@ object TextOps {
         col("shuffle_key"))
   }
 
-  /** The SCALE form of [[curriculumOrder]] — [[rangedPositionsOn]]'s
-    * range-exchange core with (band, shuffle_key, doc_id) as the range
-    * key, exactly as the parity row's scaladoc claims: one range
-    * exchange, per-partition offsets, no global window. Positions are
-    * invariant to the partitioning, so this shares
-    * `docs_curriculum_order`'s oracle bit-for-bit.
-    */
-  def curriculumOrderRanged(spark: SparkSession, sfDir: String): DataFrame =
-    rangedPositionsOn(spark, curriculumBanded(spark, sfDir), parts = 32,
-      keys = Seq("band", "shuffle_key", "doc_id"),
-      posCol = "curriculum_pos")
-
   val curriculumOrderSql: String =
     s"""WITH sc AS (
        |  SELECT doc_id,
@@ -3878,28 +3850,6 @@ object TextOps {
        |  row_number() OVER (ORDER BY band, shuffle_key, doc_id)
        |    AS curriculum_pos
        |FROM banded ORDER BY curriculum_pos""".stripMargin
-
-  /** The SCALE form of [[trainOrder]] — closing the one documented
-    * parity-only shape: instead of the single-partition global
-    * `row_number` window (fine as an oracle anchor, a serialization
-    * point at 100 TB), positions derive from a RANGE partitioning on
-    * the shuffle key + within-partition sort + per-partition offsets:
-    * one range exchange, one ≤`parts`-row count collect, zero global
-    * windows. `monotonically_increasing_id`'s (partitionId << 33 |
-    * localIndex) layout yields the within-partition rank after the
-    * sort; cumulative per-partition counts lift it to the global
-    * position. The output is INVARIANT to where the sampled range
-    * bounds fall (positions are determined by the total order, not the
-    * partitioning), so this row shares `docs_train_order`'s oracle
-    * bit-for-bit.
-    */
-  def trainOrderRanged(spark: SparkSession, sfDir: String): DataFrame =
-    trainOrderRangedOn(spark, docsKeyed(spark, sfDir), parts = 32)
-
-  private[graft] def trainOrderRangedOn(spark: SparkSession,
-      keyed: DataFrame, parts: Int): DataFrame =
-    rangedPositionsOn(spark, keyed, parts,
-      keys = Seq("shuffle_key", "doc_id"), posCol = "shuffle_pos")
 
   /** The reusable range-exchange positions core: range-partition on
     * `keys`, sort within partitions on the same keys, lift local ranks
@@ -4424,9 +4374,9 @@ object TextOps {
     "docs_group_sample" -> groupSample,
     "docs_blocklist_filter" -> blocklistFilter,
     "docs_train_order" -> trainOrder,
-    "docs_train_order_ranged" -> trainOrderRanged,
+    "docs_train_order_ranged" -> trainOrder,
     "docs_curriculum_order" -> curriculumOrder,
-    "docs_curriculum_order_ranged" -> curriculumOrderRanged,
+    "docs_curriculum_order_ranged" -> curriculumOrder,
     "docs_length_batching" -> lengthBatching,
     "docs_phrase_search" -> phraseSearch,
     "docs_phrase3_indexed" -> phrase3Indexed,

@@ -1734,8 +1734,8 @@ object VectorOps {
     * [[graft.plans.GroupTopK]] operator. Q single-query plans pay Q
     * store scans and 2·Q job schedules; this pays one of each — the
     * text/hybrid twin of `searchAllAdc`'s 13–17× batch amortization
-    * (StoreProbe `batchtext` measures it; VectorOpsSpec pins per-query
-    * bit-identity to the single-query fusion).
+    * (PERF.md round 9 records the batch timing; VectorOpsSpec pins
+    * per-query bit-identity to the single-query fusion).
     *
     * Inputs: `tq` = (q_id, terms: array&lt;string&gt;),
     * `vq` = (q_id, qe: array&lt;float&gt;) — same q_id space.
@@ -1982,8 +1982,7 @@ object VectorOps {
 
   /** The codegen'd Hamming scan over pre-packed sketches: every
     * candidate against the 5 broadcast query sketches — shared by the
-    * top-10 query, the recall audit's top-50 shortlist, and the
-    * BinaryProbe's serving-scan arm.
+    * top-10 query and the recall audit's top-50 shortlist.
     */
   private[graft] def hammingScoredOn(sk: DataFrame): DataFrame = {
     val q = sk.filter(col("vec_id") < 5)
@@ -2000,8 +1999,8 @@ object VectorOps {
       : DataFrame =
     hammingScoredOn(signSketches(Tables(spark, sfDir, "embeddings")))
 
-  /** Binary top-10 per query over a pre-packed sketch frame (probe
-    * surface — serving-scan cost only, packing paid at index time).
+  /** Binary top-10 per query over a pre-packed sketch frame (packing
+    * is paid at index time; this is the serving scan only).
     */
   private[graft] def binaryTopkOn(sk: DataFrame): DataFrame =
     graft.plans.GroupTopK.topK(hammingScoredOn(sk),
@@ -2009,7 +2008,8 @@ object VectorOps {
       orderKeys = Seq(("hamming", false), ("vec_id", false)), k = 10)
 
   /** Exact cosine top-10 per query over an arbitrary embedding frame —
-    * the probe's raw-vector arm (codegen'd vec_dot kernels).
+    * the recall audit's raw-vector reference (codegen'd vec_dot
+    * kernels).
     */
   private[graft] def bruteTopkOn(spark: SparkSession,
       emb: DataFrame): DataFrame = {
@@ -2025,8 +2025,7 @@ object VectorOps {
   }
 
   /** Hamming top-10 per query (vec_id < 5) over the sign sketches —
-    * the gated query IS the probe kernel, so BinaryProbe can never
-    * validate a plan this row no longer runs.
+    * the same [[binaryTopkOn]] kernel the streaming serve path runs.
     */
   def binaryHamming(spark: SparkSession, sfDir: String): DataFrame =
     binaryTopkOn(signSketches(Tables(spark, sfDir, "embeddings")))

@@ -11,7 +11,8 @@ import graft.stats.RunStats
 
 /** Pipeline configuration — the reference's indexer-config.yaml surface
   * (config/indexer-config.yaml: root_path, mode, skip_patterns,
-  * batch sizes, ES index). Parsed from `key=value` lines by
+  * batch sizes, ES index). Parsed from the reference YAML by
+  * [[IndexerConfig.loadYaml]] or from flat `key=value` lines by
   * [[IndexerConfig.load]] (no YAML dependency in a zero-egress build;
   * the keys match the reference's).
   */
@@ -24,14 +25,7 @@ final case class IndexerConfig(
     esIndex: String = "files",
     esBatchSize: Int = 1000,
     snapshotFiles: Int = 4,
-    getDirectLinks: Boolean = true,
-    partitionByPath: Boolean = true,
-    // z-ordered snapshot layout (path-bucket × mtime Morton interleave
-    // + per-file manifest) instead of path partitioning — the layout
-    // for deployments whose hot queries are path+TIME windows
-    // (growth timelines, retention cleanups) rather than pure
-    // path prefixes; see ParquetIndex.zorderExprs
-    zorderSnapshot: Boolean = false)
+    getDirectLinks: Boolean = true)
 
 object IndexerConfig {
   /** Reference defaults (config/indexer-config.yaml:121-152, abridged). */
@@ -39,40 +33,22 @@ object IndexerConfig {
     ".git", ".svn", "node_modules", "__pycache__", ".DS_Store",
     "*.tmp", "*.swp", "*.lock")
 
-  def load(lines: Seq[String]): IndexerConfig = {
-    val kv = lines.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+  /** Flat `key=value` lines to a key map; blank and `#` lines are
+    * skipped, as are lines without `=`.
+    */
+  private[pipeline] def kvPairs(lines: Seq[String]): Map[String, String] =
+    lines.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
       .flatMap { l =>
         l.split("=", 2) match {
           case Array(k, v) => Some(k.trim -> v.trim)
           case _ => None
         }
       }.toMap
-    IndexerConfig(
-      rootPath = kv.getOrElse("root_path",
-        sys.error("root_path is required")),
-      indexRoot = kv.getOrElse("index_root",
-        sys.error("index_root is required")),
-      mode = kv.getOrElse("mode", "elasticsearch"),
-      skipPatterns = kv.get("skip_patterns")
-        .map(_.split(",").map(_.trim).toSeq).getOrElse(defaultSkips),
-      includeHidden = kv.get("include_hidden").exists(_.toBoolean),
-      esIndex = kv.getOrElse("es_index", "files"),
-      esBatchSize = kv.get("es_batch_size").map(_.toInt).getOrElse(1000),
-      // single-node parity default (the reference's store is ONE DuckDB
-      // file); set 0 on a cluster to keep the distributed write width
-      snapshotFiles = kv.get("snapshot_files").map(_.toInt).getOrElse(4),
-      // reference default true (main.py:121); effective only when a
-      // link-fetch client is wired (mode=elasticsearch, main.py:190)
-      getDirectLinks =
-        kv.get("get_direct_links").forall(_.toBoolean),
-      // snapshot partitioning by first path segment — the ART-index
-      // replacement (SURVEY §4.1); off for flat trees where one segment
-      // would hold everything
-      partitionByPath =
-        kv.get("partition_by_path").forall(_.toBoolean),
-      zorderSnapshot =
-        kv.get("zorder_snapshot").exists(_.toBoolean))
-  }
+
+  /** Flat `key=value` config: the same keys, defaults and parsing as
+    * [[loadYaml]]'s overrides, with no YAML document under them.
+    */
+  def load(lines: Seq[String]): IndexerConfig = loadYaml("", kvPairs(lines))
 
   /** Load the reference's actual YAML config surface
     * (config/indexer-config.yaml via config/config.py:6-26
@@ -121,20 +97,19 @@ object IndexerConfig {
       esBatchSize = over("es_batch_size").map(_.toInt)
         .orElse(Yaml.long(doc, "elasticsearch", "bulk_size").map(_.toInt))
         .getOrElse(1000),
-      // graft extension keys: honored as top-level YAML keys too, not
-      // just flat overrides (they have no reference-yaml equivalent)
+      // graft extension key: honored as a top-level YAML key too, not
+      // just a flat override (it has no reference-yaml equivalent).
+      // Single-node parity default (the reference's store is ONE
+      // DuckDB file); set 0 on a cluster to keep the distributed
+      // write width
       snapshotFiles = over("snapshot_files").map(_.toInt)
         .orElse(Yaml.long(doc, "snapshot_files").map(_.toInt))
         .getOrElse(4),
+      // reference default true (main.py:121); effective only when a
+      // link-fetch client is wired (mode=elasticsearch, main.py:190)
       getDirectLinks = over("get_direct_links").map(_.toBoolean)
         .orElse(Yaml.bool(doc, "lucidlink_filespace", "get_direct_links"))
-        .getOrElse(true),
-      partitionByPath = over("partition_by_path").map(_.toBoolean)
-        .orElse(Yaml.bool(doc, "partition_by_path"))
-        .getOrElse(true),
-      zorderSnapshot = over("zorder_snapshot").map(_.toBoolean)
-        .orElse(Yaml.bool(doc, "zorder_snapshot"))
-        .getOrElse(false))
+        .getOrElse(true))
   }
 }
 
@@ -321,19 +296,13 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
       .withColumn("size", SizeFormat.format_size(col("size_bytes")))
   }
 
+  /** The snapshot store, partitioned by a hash bucket of the first
+    * path segment — the ART-index replacement (SURVEY §4.1): point and
+    * prefix queries prune to one partition directory.
+    */
   private def store(): ParquetIndex =
-    if (cfg.zorderSnapshot)
-      // 2-D layout: path-bucket × modification time. A path point/
-      // prefix predicate maps to one bucket span, a time window to an
-      // epoch span — readPruned opens only overlapping files
-      // (ZOrderIndexSpec pins the pruning on this exact store shape)
-      new ParquetIndex(cfg.indexRoot,
-        writeFiles = cfg.snapshotFiles,
-        zorderExprs = Indexer.zorderSnapshotExprs)
-    else new ParquetIndex(cfg.indexRoot,
-      partitionBy =
-        if (cfg.partitionByPath) Seq(ParquetIndex.PathPartitionCol)
-        else Nil,
+    new ParquetIndex(cfg.indexRoot,
+      partitionBy = Seq(ParquetIndex.PathPartitionCol),
       writeFiles = cfg.snapshotFiles,
       // row-group stats stay selective for point/prefix lookups within
       // each partition bucket (the read-side predicate is always a
@@ -1010,17 +979,12 @@ object Indexer {
   */
 object IndexerCli {
   def main(args: Array[String]): Unit = {
-    def kvPairs(xs: Seq[String]): Map[String, String] =
-      xs.flatMap(_.split("=", 2) match {
-        case Array(k, v) => Some(k.trim -> v.trim)
-        case _ => None
-      }).toMap
     val cfg =
       if (args.nonEmpty && (args(0).endsWith(".yaml") ||
           args(0).endsWith(".yml")))
         IndexerConfig.loadYaml(
           java.nio.file.Files.readString(java.nio.file.Paths.get(args(0))),
-          kvPairs(args.drop(1).toSeq))
+          IndexerConfig.kvPairs(args.drop(1).toSeq))
       else {
         val lines =
           if (args.length == 1 && java.nio.file.Files.exists(

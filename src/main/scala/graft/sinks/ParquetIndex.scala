@@ -238,8 +238,8 @@ final class ParquetIndex(root: String, keep: Int = 2,
     * pre-write `readMor` resolve: the deletion anti-join and the
     * rollup maintainer's prev-vs-current diff execute after the
     * commit, and a sweep here would delete the old base's log files
-    * out from under them (FAILED_READ_FILE mid-run — found by
-    * PublishProbe's scoped-then-full sequence). The caller must
+    * out from under them (FAILED_READ_FILE mid-run after a scoped
+    * publish — IndexerSpec pins the sequence). The caller must
     * [[sweepConsumedLogs]] once those frames have executed; a crash
     * before that leaves an orphan log dir, removed by the next sweep
     * (every plain [[write]] sweeps).

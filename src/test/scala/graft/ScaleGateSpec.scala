@@ -8,7 +8,11 @@ import org.apache.spark.sql.functions._
   * remove a trailing global Sort — the k=1000 dumps previously funneled
   * a 600M-row range exchange into one task and ENOSPC'd — while (b)
   * preserving the row multiset exactly and (c) leaving interior sorts
-  * (window semantics) untouched.
+  * (window semantics) untouched. It also pins that the cross-join
+  * replica builder [[ScaleGate.materialize]] emits EXACTLY the row
+  * multiset the original k-way-union form produced, so the k=10/k=100
+  * decade history (PERF.md tables) stays comparable after the k=1000
+  * rewrite; the union form lives here as the reference shape.
   */
 class ScaleGateSpec extends SparkSpecBase {
 
@@ -134,5 +138,53 @@ class ScaleGateSpec extends SparkSpecBase {
       assert(cols.contains(key),
         s"$n: bucket key $key not in output columns $cols")
     }
+  }
+
+  private def unionCopies(df: org.apache.spark.sql.DataFrame, k: Int,
+      f: (org.apache.spark.sql.DataFrame, Int) =>
+        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    (0 until k).map(i => f(df, i)).reduce(_.unionAll(_))
+
+  test("cross-join replica == union replica for every scaled table") {
+    val src = "/root/testdata/sf0.001"
+    val k = 3
+    val dst = java.nio.file.Files.createTempDirectory("scalegatespec")
+    ScaleGate.materialize(spark, src, k, dst)
+
+    val li = spark.read.parquet(s"$src/lineitem.parquet")
+    val shift = spark.read.parquet(s"$src/orders.parquet")
+      .agg(max("o_orderkey")).head().getLong(0) + 1
+    assert(rows(spark.read.parquet(s"$dst/lineitem.parquet")) ==
+      rows(unionCopies(li, k, (d, i) => d.withColumn("l_orderkey",
+        col("l_orderkey") + lit(i * shift)))))
+
+    // orders went through the same copies() rewrite as lineitem and
+    // shares its shift (disjoint o_orderkey ranges per copy)
+    val ord = spark.read.parquet(s"$src/orders.parquet")
+    assert(rows(spark.read.parquet(s"$dst/orders.parquet")) ==
+      rows(unionCopies(ord, k, (d, i) => d.withColumn("o_orderkey",
+        col("o_orderkey") + lit(i * shift)))))
+
+    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docShift = docs.agg(max("doc_id")).head().getLong(0) + 1
+    // copy 0 unprefixed (term-addressed serving rows need real hits);
+    // prefixed copies i>0 keep the shingle spaces pairwise disjoint
+    assert(rows(spark.read.parquet(s"$dst/documents.parquet")) ==
+      rows(unionCopies(docs, k, (d, i) => d
+        .withColumn("doc_id", col("doc_id") + lit(i * docShift))
+        .withColumn("text", if (i == 0) col("text") else array_join(
+          transform(split(col("text"), " "),
+            t => concat(lit(s"c${i}_"), t)), " "))
+        .withColumn("n_chars", length(col("text"))))))
+
+    val ev = spark.read.parquet(s"$src/events.parquet")
+    val evShift = ev.agg(max("event_id")).head().getLong(0) + 1
+    val userShift = ev.agg(max("user_id")).head().getLong(0) + 1
+    assert(rows(spark.read.parquet(s"$dst/events.parquet")) ==
+      rows(unionCopies(ev, k, (d, i) => d
+        .withColumn("event_id", col("event_id") + lit(i * evShift))
+        .withColumn("user_id", col("user_id") + lit(i * userShift)))))
+
+    Bench.rm(dst)
   }
 }

@@ -37,7 +37,8 @@ class TextOpsSpec extends SparkSpecBase {
       .toSeq
     assert(a == b)
     // and the declared twin stays in lockstep with the ranged form
-    val c = TextOps.trainOrderRanged(spark, "/root/testdata/sf0.001")
+    val c = graft.SparkEntry.queries("docs_train_order_ranged")(
+      spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       .toSeq
@@ -66,7 +67,8 @@ class TextOpsSpec extends SparkSpecBase {
         r.getInt(3).toLong))
       .toSeq
     assert(a == b)
-    val c = TextOps.curriculumOrderRanged(spark, "/root/testdata/sf0.001")
+    val c = graft.SparkEntry.queries("docs_curriculum_order_ranged")(
+      spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
         r.getLong(3)))

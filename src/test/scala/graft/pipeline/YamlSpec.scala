@@ -49,11 +49,9 @@ class YamlSpec extends AnyFunSuite {
         |database:
         |  connection:
         |    url: "duckdb:///idx/store.duckdb"
-        |partition_by_path: false
         |snapshot_files: 8
         |""".stripMargin
     val cfg = IndexerConfig.loadYaml(doc)
-    assert(!cfg.partitionByPath)
     assert(cfg.snapshotFiles == 8)
     assert(cfg.indexRoot == "/idx/store.duckdb")
   }
