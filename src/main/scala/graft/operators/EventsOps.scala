@@ -805,9 +805,10 @@ object EventsOps {
     //   percent_rank = (pos-1)/(N-1), defined 0.0 at N=1;
     //   cume_dist   = pos/N.
     // N rides along from the core's own per-partition counts collect.
-    val (pos, n) = TextOps.rangedPositionsCols(spark, totals,
+    val (pos, n) = TextOps.rangedCumSumOn(spark, totals,
       parts = spark.sessionState.conf.numShufflePartitions,
-      sortCols = Seq(col("total").desc, col("user_id")), posCol = "__pos")
+      keys = Seq(col("total").desc, col("user_id")), value = lit(1L),
+      cumCol = "__pos")
     val q = n / 4
     val r = n % 4
     val quartile =

@@ -2071,7 +2071,7 @@ object TextOps {
       .select(col("doc_id"), expr(s"size($toks)").cast("long").as("nt"))
     rangedCumSumOn(spark, base,
         parts = spark.sessionState.conf.numShufflePartitions,
-        keys = Seq("doc_id"), valCol = "nt", cumCol = "cum")
+        keys = Seq(col("doc_id")), value = col("nt"), cumCol = "cum")._1
       .withColumn("bin", expr("(cum - nt) div 2048"))
       .groupBy("bin")
       .agg(count(lit(1)).as("n_docs"), sum("nt").as("tokens"))
@@ -2117,7 +2117,7 @@ object TextOps {
       .select(col("doc_id"), expr(s"size($toks)").cast("long").as("nt"))
     rangedCumSumOn(spark, base,
         parts = spark.sessionState.conf.numShufflePartitions,
-        keys = Seq("doc_id"), valCol = "nt", cumCol = "e")
+        keys = Seq(col("doc_id")), value = col("nt"), cumCol = "e")._1
       .withColumn("s", col("e") - col("nt"))
       // nt > 0 guard BEFORE the explode (the byteHistogram discipline):
       // split() always yields ≥1 token today, but if any upstream ever
@@ -3851,117 +3851,79 @@ object TextOps {
        |    AS curriculum_pos
        |FROM banded ORDER BY curriculum_pos""".stripMargin
 
-  /** The reusable range-exchange positions core: range-partition on
-    * `keys`, sort within partitions on the same keys, lift local ranks
-    * to global positions via cumulative per-partition counts (a
-    * ≤`parts`-row collect). Emits every column of `keyed` plus
-    * `posCol`; the result is invariant to where the sampled range
-    * bounds fall.
-    *
-    * Positions are BIGINT (the ranged forms exist precisely for
-    * corpora past 2³¹ documents, where the parity twins' global
-    * `row_number()` window is already off the table — an int position
-    * would wrap negative in the operator's own target regime; DuckDB's
-    * `row_number()` oracle is BIGINT natively, and the driver compare
-    * accepts integer-width drift against the int parity twins).
-    * `base` offsets every emitted position — positions continue from
-    * `base + 1` — so a resumable multi-epoch/multi-shard order can
-    * chain calls without renumbering; TextOpsSpec drives it across the
-    * 2³¹ boundary to pin that positions stay exact longs there.
+  /** Range-exchange positions: a position is the running sum of 1 over
+    * the total `keys` order — [[rangedCumSumOn]] over a constant `1L`,
+    * ordered by position. Positions are BIGINT (the ranged forms exist
+    * precisely for corpora past 2³¹ documents, where the parity twins'
+    * global `row_number()` window is already off the table — an int
+    * position would wrap negative in the operator's own target regime;
+    * DuckDB's `row_number()` oracle is BIGINT natively, and the oracle
+    * compare accepts integer-width drift against the int parity twins).
+    * TextOpsSpec drives `base` across the 2³¹ boundary to pin that
+    * positions stay exact longs there.
     */
   private[graft] def rangedPositionsOn(spark: SparkSession,
       keyed: DataFrame, parts: Int, keys: Seq[String],
       posCol: String, base: Long = 0L): DataFrame =
-    rangedPositionsCols(spark, keyed, parts, keys.map(col), posCol, base)._1
+    rangedCumSumOn(spark, keyed, parts, keys.map(col), lit(1L), posCol,
+      base)._1.orderBy(posCol)
 
-  /** Column-keyed core of [[rangedPositionsOn]] — sort-direction-aware
-    * (pass `col(...).desc` for descending keys, as the rank-window
-    * rewrites over score orders need) — that ALSO returns the total row
-    * count: it is already on the driver from the per-partition counts
-    * collect, so rank-arithmetic callers (ntile / percent_rank /
-    * cume_dist, which are pure functions of (position, N) when the
-    * order is a unique total order) don't pay a second aggregate for N.
-    */
-  private[graft] def rangedPositionsCols(spark: SparkSession,
-      keyed: DataFrame, parts: Int, sortCols: Seq[Column],
-      posCol: String, base: Long = 0L): (DataFrame, Long) = {
-    val outCols = keyed.columns.toSeq
-    // checkpoint AFTER the id projection: the per-partition counts job
-    // and the final output must see identical row/partition placement
-    val mid = keyed
-      .repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .select(outCols.map(col) ++ Seq(
-        spark_partition_id().as("__pid"),
-        monotonically_increasing_id()
-          .bitwiseAND(lit((1L << 33) - 1)).as("__loc")): _*)
-      .localCheckpoint(true)
-    val counts = mid.groupBy("__pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.scanLeft((0, 0L)) {
-      case ((_, acc), (pid, n)) => (pid, acc + n)
-    }
-    val offByPid = counts.map(_._1)
-      .zip(offsets.map(_._2)).toMap
-    val offDf = {
-      import spark.implicits._
-      offByPid.toSeq.toDF("__pid", "__off")
-    }
-    val out = mid.join(broadcast(offDf), Seq("__pid"))
-      .select(outCols.map(col) :+
-        ((col("__off") + col("__loc") + lit(1L) + lit(base))
-          .as(posCol)): _*)
-      .orderBy(posCol)
-    (out, counts.map(_._2).sum)
-  }
-
-  /** Range-exchange running-SUM core — [[rangedPositionsCols]]'s shape
-    * with a weighted position: range-partition on `keys`, sort within
-    * partitions, lift per-partition running sums of `valCol` (one
-    * streaming O(1)-state pass per partition — no per-pid re-shuffle,
-    * no window buffer) to the global running sum via cumulative
-    * per-partition totals (a ≤`parts`-row collect). Emits every column
-    * of `df` plus `cumCol` = the INCLUSIVE prefix sum of `valCol` in
-    * the total `keys` order — value-identical to
-    * `sum(valCol).over(Window.orderBy(keys).rowsBetween(unboundedPreceding,
-    * currentRow))` when `keys` is a unique total order (exact long
-    * arithmetic, associative regardless of where the partition bounds
-    * fall), with no single-partition window anywhere. `valCol` must be
-    * LONG — the token/byte-count shapes this serves.
+  /** The one range-exchange core: range-partition on `keys`, sort
+    * within partitions on the same keys, lift per-partition running
+    * sums of `value` (one streaming O(1)-state pass per partition — no
+    * per-pid re-shuffle, no window buffer) to the global running sum
+    * via cumulative per-partition totals (a ≤`parts`-row collect).
+    * Emits every column of `df` plus `cumCol` = `base` + the INCLUSIVE
+    * prefix sum of `value` in the total `keys` order — value-identical
+    * to `sum(value).over(Window.orderBy(keys).rowsBetween(
+    * unboundedPreceding, currentRow))` when `keys` is a unique total
+    * order (exact long arithmetic, associative regardless of where the
+    * sampled range bounds fall), with no single-partition window
+    * anywhere. `keys` are columns, so `.desc` orders work (the
+    * rank-window rewrites over score orders need them); `value` must be
+    * LONG. `base` offsets every sum, so a resumable multi-epoch order
+    * can chain calls without renumbering.
+    *
+    * Also returns the row count N: it is already on the driver from the
+    * per-partition totals collect, so rank-arithmetic callers (ntile /
+    * percent_rank / cume_dist, pure functions of (position, N) over a
+    * unique total order) don't pay a second aggregate for it.
     */
   private[graft] def rangedCumSumOn(spark: SparkSession, df: DataFrame,
-      parts: Int, keys: Seq[String], valCol: String,
-      cumCol: String): DataFrame = {
+      parts: Int, keys: Seq[Column], value: Column, cumCol: String,
+      base: Long = 0L): (DataFrame, Long) = {
     import org.apache.spark.sql.{Encoders, Row}
     val outCols = df.columns.toSeq
     // checkpoint pins row/partition placement, so the totals job and
-    // the running-sum pass see the same split (rangedPositionsCols doc)
+    // the running-sum pass see the same split
     val mid = df
-      .repartitionByRange(parts, keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col): _*)
-      .select(outCols.map(col) :+ spark_partition_id().as("__pid"): _*)
+      .repartitionByRange(parts, keys: _*)
+      .sortWithinPartitions(keys: _*)
+      .select(outCols.map(col) ++ Seq(value.as("__v"),
+        spark_partition_id().as("__pid")): _*)
       .localCheckpoint(true)
     val totals = mid.groupBy("__pid")
-      .agg(coalesce(sum(col(valCol)), lit(0L)).as("t"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      .agg(count(lit(1)), coalesce(sum(col("__v")), lit(0L)))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
     val offByPid: Map[Int, Long] = totals.map(_._1)
-      .zip(totals.scanLeft(0L)(_ + _._2)).toMap
-    val vIdx = mid.columns.indexOf(valCol)
+      .zip(totals.scanLeft(base)(_ + _._3)).toMap
+    val vIdx = mid.columns.indexOf("__v")
     val pIdx = mid.columns.indexOf("__pid")
     val outSchema = org.apache.spark.sql.types.StructType(
       mid.schema.fields :+ org.apache.spark.sql.types.StructField(
         cumCol, org.apache.spark.sql.types.LongType, nullable = false))
-    mid.mapPartitions { it =>
-      var off = 0L
+    val out = mid.mapPartitions { it =>
       var acc = 0L
       var first = true
       it.map { r =>
-        if (first) { off = offByPid.getOrElse(r.getInt(pIdx), 0L); first = false }
+        if (first) { acc = offByPid.getOrElse(r.getInt(pIdx), base); first = false }
         acc += r.getLong(vIdx)
-        Row.fromSeq(r.toSeq :+ (off + acc))
+        Row.fromSeq(r.toSeq :+ acc)
       }
     }(Encoders.row(outSchema))
       .select((outCols :+ cumCol).map(col): _*)
+    (out, totals.map(_._2).sum)
   }
 
   // -------------------------------------------------------------------- //

@@ -1460,19 +1460,19 @@ object VectorOps {
     // ranks are determined by the unique total order (score DESC, id),
     // not the partitioning, so the fused output is value-identical.
     val parts = spark.sessionState.conf.numShufflePartitions
-    val (textPos, _) = TextOps.rangedPositionsCols(spark,
+    val (textPos, _) = TextOps.rangedCumSumOn(spark,
       TextOps.bm25ScoresOf(Tables(spark, sfDir, "documents")),
-      parts, Seq(col("score").desc, col("doc_id")), "__r")
+      parts, Seq(col("score").desc, col("doc_id")), lit(1L), "__r")
     val text = textPos
       .select(col("doc_id"), col("__r").cast("int").as("r_text"))
     val emb = Tables(spark, sfDir, "embeddings")
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"))
-    val (vecPos, _) = TextOps.rangedPositionsCols(spark,
+    val (vecPos, _) = TextOps.rangedCumSumOn(spark,
       emb.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .select(col("vec_id").as("doc_id"), cosine.as("cos_sim")),
-      parts, Seq(col("cos_sim").desc, col("doc_id")), "__r")
+      parts, Seq(col("cos_sim").desc, col("doc_id")), lit(1L), "__r")
     val vec = vecPos
       .select(col("doc_id"), col("__r").cast("int").as("r_vec"))
     val rrf =

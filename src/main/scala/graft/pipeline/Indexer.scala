@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SizeFormat
@@ -191,19 +191,13 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     require(fs.rename(tmp, p), s"token rename failed: $tmp -> $p")
   }
 
+  /** The corpus token the stored rollup is valid for. Written AFTER
+    * the rollup snapshot (crash between the two leaves a stale token →
+    * the next publish recomputes; never a silent drift).
+    */
   private def rollupTokenPath =
     new org.apache.hadoop.fs.Path(
       s"${cfg.indexRoot}/dirsizes/_corpus_token")
-
-  private def readRollupToken(spark: SparkSession): Option[String] =
-    readToken(spark, rollupTokenPath)
-
-  /** Stamp the rollup as valid for the files store's CURRENT corpus.
-    * Written AFTER the rollup snapshot (crash between the two leaves a
-    * stale token → the next publish recomputes; never a silent drift).
-    */
-  private def writeRollupToken(spark: SparkSession, t: String): Unit =
-    writeToken(spark, rollupTokenPath, t)
 
   /** ES-PUBLISHED WATERMARK: the corpus token whose resolved view
     * Elasticsearch last received in full (a clean full [[run]] publish
@@ -219,12 +213,6 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     */
   private def esWatermarkPath =
     new org.apache.hadoop.fs.Path(s"${cfg.indexRoot}/_es_published")
-
-  private def readEsWatermark(spark: SparkSession): Option[String] =
-    readToken(spark, esWatermarkPath)
-
-  private def writeEsWatermark(spark: SparkSession, t: String): Unit =
-    writeToken(spark, esWatermarkPath, t)
 
   /** Maintain the stored rollup across a corpus transition
     * `previous → current` and return the (directory_path, sz, fc)
@@ -242,7 +230,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     val rs = rollupStore()
     val next = previous match {
       case Some(prev) if rs.currentId.isDefined &&
-          readRollupToken(spark).contains(prevToken) =>
+          readToken(spark, rollupTokenPath).contains(prevToken) =>
         graft.operators.FsOps.dirRollupFoldAgg(rs.read(spark).get,
           graft.operators.FsOps.rollupDeltaAgg(
             Indexer.signedFileChanges(prev, current)))
@@ -253,7 +241,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
             .select(col("filepath"), col("size_bytes")))
     }
     rs.write(next)
-    writeRollupToken(spark, Indexer.corpusToken(idx))
+    writeToken(spark, rollupTokenPath, Indexer.corpusToken(idx))
     rs.read(spark).get
   }
 
@@ -315,11 +303,12 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     * notifications) through the snapshot store's merge-on-read log.
     * Scan cost ∝ the changed subtrees, write cost ∝ their entries
     * ([[ParquetIndex.refreshScopeMor]]); every other key is untouched.
-    * A vanished subtree resolves to an empty rescan = scope-wide
-    * deletion, INCLUDING the dir's own row. The scope dir itself is
-    * re-statted (one lstat) and refreshed with its children: child
-    * churn bumps the dir's mtime, and full-rescan parity requires
-    * that row to move too. Also patches the stored dirSizes rollup
+    * The scope is walked by the full run's own walker with the scope
+    * pushed in, so it reads exactly the rows a full rescan would: the
+    * dir's own row (child churn bumps its mtime) and its subtree, or
+    * nothing — a scope-wide deletion — when the dir vanished or a full
+    * scan would prune it (skip-matched, hidden, or under a symlink; a
+    * symlink scope itself is its own file row). Also patches the stored dirSizes rollup
     * with the scope's signed change feed when its corpus token is
     * current. Returns the number of entries refreshed. Fold the log
     * with [[checkpointScoped]]; any later full [[run]] supersedes the
@@ -340,9 +329,6 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     require(idx.currentId.isDefined,
       "runScoped: no base snapshot — run a full scan first")
     val baseCols = idx.read(spark).get.columns.toSeq
-    val skipRe =
-      if (cfg.skipPatterns.isEmpty) None
-      else Some(graft.functions.Globs.skipRegex(cfg.skipPatterns).r)
     val dirs0 = changedDirs.map(_.stripPrefix("/").stripSuffix("/"))
     dirs0.foreach(d => require(d.nonEmpty,
       "runScoped: a root-wide event is a full rescan — use run()"))
@@ -364,72 +350,29 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // (`foldable` is loop-invariant: an incremental patch re-stamps
     // the token current, a skipped patch leaves it stale).
     val foldable = rollupStore().currentId.isDefined &&
-      readRollupToken(spark).contains(Indexer.corpusToken(idx))
+      readToken(spark, rollupTokenPath).contains(Indexer.corpusToken(idx))
     val preAll: Option[DataFrame] =
       if (!foldable) None
       else preScoped.orElse(Some(
         idx.readMor(spark, "relative_path", "modified_time").get
-          .filter(dirs.map(d => col("relative_path")
-            .startsWith(d + "/")).reduce(_ || _))
+          .filter(dirs.map(Indexer.inScope(col("relative_path"), _))
+            .reduce(_ || _))
           .localCheckpoint(true)))
     dirs.map { d =>
-      val abs = cfg.rootPath.stripSuffix("/") + "/" + d
-      // full-scan parity for the scope dir ITSELF: a full run prunes a
-      // skip-matched or hidden directory before recursing, so an event
-      // for (or under) one resolves to an empty rescan = subtree
-      // deletion; a symlinked dir is likewise never recursed into by
-      // the full scan (find -P), so its event must not index the
-      // target's children
-      val prefixes = d.split("/").toSeq
-        .scanLeft("")((acc, s) => if (acc.isEmpty) s else s"$acc/$s")
-        .drop(1)
-      val prunedByFullScan =
-        prefixes.exists(p =>
-          skipRe.exists(_.findFirstIn(p).isDefined)) ||
-          (!cfg.includeHidden &&
-            d.split("/").exists(_.startsWith("."))) ||
-          java.nio.file.Files.isSymbolicLink(
-            java.nio.file.Paths.get(abs))
-      val entries =
-        (if (!prunedByFullScan && new java.io.File(abs).isDirectory) {
-           val walked = normalize(FsListing.list(spark, abs,
-             cfg.skipPatterns, cfg.includeHidden,
-             // skip patterns are ROOT-relative: anchor the subtree
-             // walk's matching at the subtree's own prefix
-             matchPrefix = d + "/")
-             // the subtree walk emits paths relative to ITS root;
-             // re-root them so ids/keys match full-scan entries
-             .withColumn("filepath",
-               concat(lit("/" + d), col("filepath"))))
-             .select(baseCols.map(col): _*)
-           // re-stat the scope dir's OWN entry (one lstat): an event
-           // for d means d's children changed, which also bumped d's
-           // mtime — a full rescan would republish that row, so the
-           // scoped refresh must too (IndexerSpec pins the parity).
-           // A vanished/pruned d falls to the empty branch and the
-           // widened scope predicate below deletes its row with the
-           // subtree's.
-           import spark.implicits._
-           val f = new java.io.File(abs)
-           val self = normalize(spark.createDataset(Seq(
-             FsListing.Listed("/" + d, f.getName, 0L,
-               new java.sql.Timestamp(f.lastModified()), "directory",
-               ("/" + d).count(_ == '/')))).toDF())
-             .select(baseCols.map(col): _*)
-           walked.unionByName(self)
-         } else idx.read(spark).get.limit(0))
-          .localCheckpoint(true) // walk the subtree once, not per write
+      // the root walk with the scope pushed in: only the path down to
+      // d and d's subtree are visited, under every full-scan rule
+      val entries = normalize(FsListing.list(spark, cfg.rootPath,
+          cfg.skipPatterns, cfg.includeHidden)
+          .filter(Indexer.inScope(col("filepath"), "/" + d)))
+        .select(baseCols.map(col): _*)
+        .localCheckpoint(true) // walk the subtree once, not per write
       // rollup maintenance anchor: this dir's slice of the SHARED
       // pre-refresh scope frame (one resolve per call, not per dir —
       // valid because surviving dirs are key-disjoint)
       val prevScope = preAll.map(
-        _.filter(col("relative_path").startsWith(d + "/")))
+        _.filter(Indexer.inScope(col("relative_path"), d)))
       idx.refreshScopeMor(spark, entries,
-        // the scope covers the dir's OWN row too (re-statted above):
-        // its mtime moves with child churn, and a vanished subtree
-        // deletes the dir row with its contents
-        col("relative_path").startsWith(d + "/") ||
-          col("relative_path") === d,
+        Indexer.inScope(col("relative_path"), d),
         "relative_path", "modified_time")
       // patch the stored dirSizes with the scope's signed change feed
       // — O(|scope| × depth); a stale/absent rollup stays stale (the
@@ -442,7 +385,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
             graft.operators.FsOps.rollupDeltaAgg(
               Indexer.signedFileChanges(prev, entries)))
           .filter(col("sz") =!= 0L || col("fc") =!= 0L))
-        writeRollupToken(spark, Indexer.corpusToken(idx))
+        writeToken(spark, rollupTokenPath, Indexer.corpusToken(idx))
       }
       entries.count()
     }.sum
@@ -490,16 +433,15 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // state ES has already seen in full — refuse otherwise, pointing
     // at the repair, instead of leaving ES silently stale forever
     val pre = Indexer.corpusToken(idx)
-    val wm = readEsWatermark(spark)
+    val wm = readToken(spark, esWatermarkPath)
     require(wm.contains(pre),
       s"publishScoped: ES watermark ${wm.getOrElse("(none)")} != " +
         s"store state $pre — the store moved without a publish (bare " +
         "runScoped interlude, a failed publish, or ES never saw a " +
         "full publish); run publishCatchUp() (or a full run()) first")
     val dirs = changedDirs.map(_.stripPrefix("/").stripSuffix("/"))
-    val scopePred = dirs.map(d =>
-      col("relative_path").startsWith(d + "/") ||
-        col("relative_path") === d).reduce(_ || _)
+    val scopePred = dirs.map(Indexer.inScope(col("relative_path"), _))
+      .reduce(_ || _)
     val prevScope = idx.readMor(spark, "relative_path", "modified_time")
       .get.filter(scopePred).localCheckpoint(true)
     // store + rollup refreshed; the materialized pre-state rides along
@@ -535,7 +477,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     require(idx.currentId.isDefined,
       "publishCatchUp: no base snapshot — run a full scan first")
     val cur = Indexer.corpusToken(idx)
-    val wm = readEsWatermark(spark)
+    val wm = readToken(spark, esWatermarkPath)
     if (wm.contains(cur))
       return RunReport(RunStats.Stats(0L, 0L, 0L,
         (System.nanoTime() - t0) / 1e9), 0L, 0L, 0L,
@@ -580,7 +522,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     require(idx.currentId.isDefined,
       "assertPublished: no base snapshot — nothing to stamp")
     val t = Indexer.corpusToken(idx)
-    writeEsWatermark(spark, t)
+    writeToken(spark, esWatermarkPath, t)
     t
   }
 
@@ -601,13 +543,14 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // interludes) — reconcile it now so the publish reads real totals
     val sizesAll = {
       val rs = rollupStore()
-      if (readRollupToken(spark).contains(Indexer.corpusToken(idx)) &&
-          rs.currentId.isDefined) rs.read(spark).get
+      if (readToken(spark, rollupTokenPath)
+          .contains(Indexer.corpusToken(idx)) && rs.currentId.isDefined)
+        rs.read(spark).get
       else {
         rs.write(graft.operators.FsOps.rollupOf(
           after.filter(col("type") === "file")
             .select(col("filepath"), col("size_bytes"))))
-        writeRollupToken(spark, Indexer.corpusToken(idx))
+        writeToken(spark, rollupTokenPath, Indexer.corpusToken(idx))
         rs.read(spark).get
       }
     }
@@ -627,22 +570,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
 
     admin.foreach(a => EsAdmin.ensureIndex(a, cfg.esIndex))
     val sink = new EsSink(transport.get, cfg.esBatchSize)
-    val linksIdx = new ParquetIndex(s"${cfg.indexRoot}/links",
-      writeFiles = cfg.snapshotFiles)
-    val nLinks = (cfg.getDirectLinks, linkFetch) match {
-      case (true, Some(fetch)) =>
-        LinkRefresh.refreshIndexMor(spark,
-          toPublish.filter(col("type") === "file"), linksIdx, fetch,
-          skipPatterns = cfg.skipPatterns)
-      case _ => 0L
-    }
-    val links = LinkRefresh.align(
-      LinkRefresh.readLinksMor(spark, linksIdx).getOrElse(
-        LinkRefresh.emptyLinks(spark)))
-      .select(col("file_id"), col("direct_link").as("dl"),
-        col("fsentry_id").as("fse"),
-        col("api_creation_time").as("act"),
-        col("api_modified_time").as("amt"))
+    val (nLinks, links) = refreshedLinks(spark, toPublish)
     val sizes = sizesAll.select(col("directory_path").as("dp"),
       col("sz").as("total_size"))
     val s = sink.bulkIndex(buildDocs(toPublish, sizes, links),
@@ -659,7 +587,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // watermark, but only on a zero-failure send: a rejected batch
     // keeps it behind so publishCatchUp re-sends (idempotent by id)
     if (s.failed + delFailed == 0L)
-      writeEsWatermark(spark, Indexer.corpusToken(idx))
+      writeToken(spark, esWatermarkPath, Indexer.corpusToken(idx))
     val elapsed = (System.nanoTime() - t0) / 1e9
     RunReport(RunStats.collect(obs, elapsed), s.indexed,
       s.failed + delFailed, removedCount,
@@ -696,11 +624,43 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
   private def migrateWatermark(spark: SparkSession)(
       fold: => Option[String]): Option[String] = {
     val preTok = Indexer.corpusToken(store())
-    val matched = readEsWatermark(spark).contains(preTok)
+    val matched = readToken(spark, esWatermarkPath).contains(preTok)
     val r = fold
     if (r.isDefined && matched)
-      writeEsWatermark(spark, Indexer.corpusToken(store()))
+      writeToken(spark, esWatermarkPath, Indexer.corpusToken(store()))
     r
+  }
+
+  /** Direct-link refresh of `entries`' files (when enabled and a fetch
+    * client is wired — the reference's DirectLinkManager step,
+    * main.py:190-192), then the links store's aligned columns keyed
+    * file_id (`dl`/`fse`/`act`/`amt`), read AFTER the refresh's append
+    * so they include this batch. The links store lives beside the files
+    * snapshots, like the reference's sibling direct_links DB
+    * (main.py:124). MERGE-ON-READ: a refresh appends only its fetched
+    * batch (+ orphan delete keys) to the store's log instead of
+    * rewriting the snapshot — write cost ∝ stale set, not store size.
+    * Returns (links fetched, aligned frame).
+    */
+  private def refreshedLinks(spark: SparkSession,
+      entries: DataFrame): (Long, DataFrame) = {
+    val linksIdx = new ParquetIndex(s"${cfg.indexRoot}/links",
+      writeFiles = cfg.snapshotFiles)
+    val n = (cfg.getDirectLinks, linkFetch) match {
+      case (true, Some(fetch)) => step(spark, "link refresh") {
+        LinkRefresh.refreshIndexMor(spark,
+          entries.filter(col("type") === "file"), linksIdx, fetch,
+          skipPatterns = cfg.skipPatterns)
+      }
+      case _ => 0L
+    }
+    (n, LinkRefresh.align(
+      LinkRefresh.readLinksMor(spark, linksIdx).getOrElse(
+        LinkRefresh.emptyLinks(spark)))
+      .select(col("file_id"), col("direct_link").as("dl"),
+        col("fsentry_id").as("fse"),
+        col("api_creation_time").as("act"),
+        col("api_modified_time").as("amt")))
   }
 
   /** Label the jobs of one pipeline step (optimization guide §1.5 —
@@ -762,15 +722,16 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
             "modified_time")
       })
     }
-    // Deletion set AFTER the write, for two reasons: (a) the write is
-    // then the FIRST action on the observed scan, so the run counters
-    // report real values even when AQE prunes the scan out of an
-    // empty-previous anti-join; (b) keep=2 retention guarantees the
-    // previous snapshot's files still exist here. localCheckpoint cuts
-    // the lazy plan's lineage before those files are eventually pruned
-    // (deltas are small; cheap even at scale).
+    // everything downstream reads the committed snapshot, so the write
+    // above is the run's one and only walk of the tree
+    val current = idx.read(spark).get
+    // Deletion set AFTER the write: the snapshot's key set is exactly
+    // the scan's (mergeReconcile keeps only scanned keys). keep=2 retention guarantees the previous
+    // snapshot's files still exist here; localCheckpoint cuts the lazy
+    // plan's lineage before they are eventually pruned (deltas are
+    // small; cheap even at scale).
     // r17: launched as a THIRD concurrent leg (guide §2.6) — the
-    // anti-join reads only (previous, entries), disjoint from the link
+    // anti-join reads only (previous, current), disjoint from the link
     // refresh and rollup maintenance below, so its jobs back-fill
     // their straggler tails instead of running serially before them.
     // Awaited before anything consumes it (bulk delete / the report),
@@ -781,13 +742,12 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     val removedIdsF: Future[Option[DataFrame]] = Future {
       previous.map(prev =>
         step(spark, "deletion reconcile") {
-          prev.join(entries, Seq("relative_path"), "left_anti")
-            .select("id").localCheckpoint(true)
+          prev.join(current.select("relative_path"), Seq("relative_path"),
+            "left_anti").select("id").localCheckpoint(true)
         })
     }
 
-    // ES publish (elasticsearch mode): direct-link refresh (the
-    // reference's DirectLinkManager step, main.py:190-192) then the
+    // ES publish (elasticsearch mode): direct-link refresh then the
     // enrichment join + formatting (J4/J8/F3/F11) and bulk index;
     // deletions → bulk delete (S11).
     val (indexed, esFailed, linksRefreshed) = (cfg.mode, transport) match {
@@ -797,16 +757,6 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
         // path_hierarchy analyzer — NOT dynamic mappings
         admin.foreach(a => EsAdmin.ensureIndex(a, cfg.esIndex))
         val sink = new EsSink(t, cfg.esBatchSize)
-        val current = idx.read(spark).get
-        // links live beside the files snapshots, like the reference's
-        // sibling direct_links DB (main.py:124)
-        val linksIdx = new ParquetIndex(s"${cfg.indexRoot}/links",
-          writeFiles = cfg.snapshotFiles)
-        // MERGE-ON-READ refresh: each run appends only its fetched
-        // batch (+ orphan delete keys) to the links store's MOR log
-        // instead of rewriting the snapshot — write cost ∝ stale set,
-        // not links-store size (LinkRefreshSpec pins equivalence with
-        // the copy-on-write twin)
         // Link refresh and rollup maintenance are INDEPENDENT (disjoint
         // stores; both only read `current`), so their jobs run
         // concurrently from two driver threads (guide §2.6 "overlap
@@ -815,26 +765,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
         // correct — `step` sets the THREAD-local description inside
         // each future. Await rethrows the first failure, preserving
         // the sequential error contract.
-        val linksF = Future {
-          val n = (cfg.getDirectLinks, linkFetch) match {
-            case (true, Some(fetch)) => step(spark, "link refresh") {
-              LinkRefresh.refreshIndexMor(spark,
-                current.filter(col("type") === "file"), linksIdx, fetch,
-                skipPatterns = cfg.skipPatterns)
-            }
-            case _ => 0L
-          }
-          // manifest snapshot AFTER the refresh's append, inside the
-          // same future — the read must see this run's batch
-          val frame = LinkRefresh.align(
-            LinkRefresh.readLinksMor(spark, linksIdx).getOrElse(
-              LinkRefresh.emptyLinks(spark)))
-            .select(col("file_id"), col("direct_link").as("dl"),
-              col("fsentry_id").as("fse"),
-              col("api_creation_time").as("act"),
-              col("api_modified_time").as("amt"))
-          (n, frame)
-        }
+        val linksF = Future { refreshedLinks(spark, current) }
         // sizes from the MAINTAINED rollup snapshot: incremental fold
         // of the merge's own change feed when valid, recompute
         // otherwise — never the per-run ancestor explode by default
@@ -863,7 +794,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
         // whole resolved corpus; advance only on a clean send so a
         // failed batch keeps catch-up/scoped publishes honest
         if (s.failed + delFailed == 0L)
-          writeEsWatermark(spark, Indexer.corpusToken(idx))
+          writeToken(spark, esWatermarkPath, Indexer.corpusToken(idx))
         (s.indexed, s.failed + delFailed, nLinks)
       case _ => (0L, 0L, 0L) // index-only
     }
@@ -896,6 +827,14 @@ object Indexer {
     idx.currentId
       .map(id => s"$id+${idx.morEntries(id).length}")
       .getOrElse("empty")
+
+  /** The rows a scoped event for `d` refreshes: d's OWN row (its mtime
+    * moves with child churn; it may also be a file or a symlink) and
+    * everything below it — never a sibling that merely shares a name
+    * prefix (`a/b` vs `a/bc`).
+    */
+  private[pipeline] def inScope(path: Column, d: String): Column =
+    path === d || path.startsWith(d + "/")
 
   /** The signed per-file change feed of a corpus transition — exactly
     * the merge's reconcile legs, derived with ONE explode-free

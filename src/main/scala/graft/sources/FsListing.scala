@@ -1,161 +1,35 @@
 package graft.sources
 
-import java.io.File
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.Globs
 
-/** Distributed filesystem listing source — the reference's scan front end
-  * re-expressed on Spark's scheduler (SURVEY.md S1-S4):
-  *
-  *  - S3 directory splitter: the driver lists the root's immediate
-  *    subdirectories and seeds one partition per top-level directory
-  *    (parallel_scanner.py:199-267's `find -maxdepth 1 -type d`).
-  *  - S1/S2 recursive scan: each partition walks its subtree with plain
-  *    `java.io.File` calls — Spark's task scheduler and retries replace
-  *    the reference's ThreadPoolExecutor + manual halved-worker retry
-  *    loop (parallel_scanner.py:823-894).
-  *  - P3/P4 pushdown: hidden-file and glob skip-pattern predicates are
-  *    evaluated DURING recursion, so excluded subtrees are never walked —
-  *    the same source-level pushdown the reference gets by compiling skip
-  *    patterns into `find -not -path` args (scanner.py:334-347).
-  *  - S4 structure analyzer: worker sizing is Spark's job; only the
-  *    "one partition per top-level dir" heuristic survives.
-  *
-  * Scale notes: at 100 TB the unit of parallelism is the top-level (or
-  * deeper, via `extraDepth`) directory; a skewed giant subtree is split
-  * further by seeding grandchildren. No driver-side materialization of
-  * file lists — entries stream out of the per-partition iterator.
+/** The listing front end the pipeline calls: a read of the
+  * [[FsListingSource]] walk (S1-S4, P3/P4 — see its doc) with the
+  * Indexer's two walk settings. The source is named by class, so the
+  * pipeline needs no `DataSourceRegister` service file on its classpath.
   */
 object FsListing {
 
-  /** One listed entry (the reference's 11-field contract, pre-id). */
-  final case class Listed(
-      filepath: String,
-      name: String,
-      size_bytes: Long,
-      modified_time: Timestamp,
-      entry_type: String,
-      depth: Int)
-
-  /** List `root` recursively into a DataFrame.
+  /** List `root` recursively into a DataFrame of
+    * (filepath, name, size_bytes, modified_time, entry_type, depth) —
+    * the reference's 11-field contract, pre-id.
     *
-    * @param skipPatterns fnmatch globs pruned during the walk (P4)
+    * @param skipPatterns fnmatch globs pruned during the walk (P4),
+    *                     matched against root-relative paths
     * @param includeHidden when false, dot-entries are pruned (P3)
-    * @param extraDepth   0 ⇒ partition per top-level dir; 1 ⇒ per
-    *                     grandchild (for skewed trees)
-    */
-  /** @param matchPrefix prepended to each entry's root-relative path
-    *   BEFORE skip-pattern matching (with a trailing '/'): a scoped
-    *   subtree walk (`Indexer.runScoped`) passes the subtree's own
-    *   root-relative prefix so path-anchored patterns (e.g. `b/g1*`)
-    *   match exactly as they would in a full-root walk. Emitted
-    *   filepaths are unaffected.
     */
   def list(
       spark: SparkSession,
       root: String,
       skipPatterns: Seq[String] = Nil,
-      includeHidden: Boolean = false,
-      extraDepth: Int = 0,
-      matchPrefix: String = ""): DataFrame = {
-    import spark.implicits._
-
-    val skipRe = if (skipPatterns.isEmpty) None
-      else Some(Globs.skipRegex(skipPatterns).r)
-
-    def rel(f: File): String =
-      f.getPath.stripPrefix(root).stripPrefix("/")
-
-    // P3/P4 pushdown predicate — evaluated before recursing, so a pruned
-    // directory's subtree is never listed (find `-not -path` parity).
-    def keep(f: File): Boolean = {
-      val hidden = f.getName.startsWith(".")
-      val skipped =
-        skipRe.exists(_.findFirstIn(matchPrefix + rel(f)).isDefined)
-      (includeHidden || !hidden) && !skipped
-    }
-
-    def toListed(f: File): Listed = {
-      val filepath = rel(f) match { case "" => "/"; case p => "/" + p }
-      val isLink = java.nio.file.Files.isSymbolicLink(f.toPath)
-      val isDir = !isLink && f.isDirectory
-      // symlinks report the LINK's own lstat values (find -ls / ls -l
-      // parity) — File.length/lastModified would follow to the target
-      // and return 0/epoch for broken links
-      val (size, mtimeMs) =
-        if (isLink) FsListing.lstat(f)
-        else (if (isDir) 0L else f.length(), f.lastModified())
-      Listed(
-        filepath,
-        f.getName,
-        size,
-        new Timestamp(mtimeMs),
-        if (isDir) "directory" else "file",
-        // depth is root-relative regardless of where the partition
-        // seed sat (extraDepth seeds start deeper than the root)
-        filepath.count(_ == '/'))
-    }
-
-    // S3: seed partitions from the top of the tree (driver-side, cheap).
-    // Directories traversed while seeding (the seeds' ancestors) are
-    // emitted from here — extraDepth must change only the parallelism,
-    // never the result set.
-    val ancestors = Seq.newBuilder[Listed]
-    def seeds(dir: File, d: Int): Seq[File] = {
-      val kids = Option(dir.listFiles).toSeq.flatten.filter(keep)
-      if (d <= 0) kids
-      else kids.flatMap { k =>
-        if (FsListing.isRealDir(k)) { ancestors += toListed(k); seeds(k, d - 1) }
-        else Seq(k)
-      }
-    }
-    val rootFile = new File(root)
-    val seedList = seeds(rootFile, extraDepth)
-    val nPart = math.max(1, math.min(seedList.size, 64))
-
-    def walk(f: File): Iterator[Listed] = {
-      if (!keep(f)) Iterator.empty
-      else {
-        val self = toListed(f)
-        // recurse only into REAL directories — a symlinked directory is
-        // emitted as a (file-typed) entry but never followed, matching
-        // `find`'s default -P / the reference's non-following walk
-        // (symlink perms start with 'l' → parsed type 'file',
-        // scanner.py:145-146); following would double-index sibling
-        // targets and loop forever on `ln -s ..` cycles
-        if (self.entry_type == "directory")
-          Iterator(self) ++ Option(f.listFiles).iterator.flatten
-            .flatMap(walk)
-        else Iterator(self)
-      }
-    }
-
-    spark.sparkContext
-      .parallelize(seedList.map(_.getPath), nPart)
-      .flatMap(p => walk(new File(p)))
-      .toDS()
-      .toDF()
-      .unionByName(spark.createDataset(ancestors.result()).toDF())
-  }
-
-  /** A directory the walk may recurse into: a real directory, NOT a
-    * symlink to one (`find`'s default -P; os.walk followlinks=False).
-    */
-  private[sources] def isRealDir(f: File): Boolean =
-    f.isDirectory &&
-      !java.nio.file.Files.isSymbolicLink(f.toPath)
-
-  /** The link's own (size, mtime-ms) via a NOFOLLOW stat — works for
-    * broken links too.
-    */
-  private[sources] def lstat(f: File): (Long, Long) = {
-    val a = java.nio.file.Files.readAttributes(f.toPath,
-      classOf[java.nio.file.attribute.BasicFileAttributes],
-      java.nio.file.LinkOption.NOFOLLOW_LINKS)
-    (a.size(), a.lastModifiedTime().toMillis)
+      includeHidden: Boolean = false): DataFrame = {
+    val reader = spark.read.format(classOf[FsListingSource].getName)
+      .option(FsListingSource.IncludeHidden, includeHidden)
+    (if (skipPatterns.isEmpty) reader
+     else reader.option(FsListingSource.SkipRegex,
+       Globs.skipRegex(skipPatterns)))
+      .load(root)
   }
 
   /** S6: single-directory batch source — one directory's RECURSIVE

@@ -623,11 +623,12 @@ class PlanAuditSpec extends SparkSpecBase {
     val p = finalPlan(
       SparkEntry.queries("docs_train_order_ranged")(spark, sf))
     assert(!p.contains("SinglePartition"), p)
-    // the ≤parts-row offset frame joins back as a broadcast
-    assert(p.contains("BroadcastHashJoin"), p)
+    // the ≤parts-row totals are applied in ONE streaming pass over the
+    // range-partitioned rows (the running-sum core), not a join back
+    assert(p.contains("MapPartitions"), p)
     val g = finalPlan(SparkEntry.queries("docs_train_order")(spark, sf))
     assert(!g.contains("SinglePartition"), g)
-    assert(g.contains("BroadcastHashJoin"), g)
+    assert(g.contains("MapPartitions"), g)
   }
 
 }

@@ -87,7 +87,7 @@ class TextOpsSpec extends SparkSpecBase {
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("nt"))
     val ranged = TextOps.rangedCumSumOn(spark, base, parts = 7,
-        keys = Seq("doc_id"), valCol = "nt", cumCol = "cum")
+        keys = Seq(col("doc_id")), value = col("nt"), cumCol = "cum")._1
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
     val w = Window.orderBy("doc_id")

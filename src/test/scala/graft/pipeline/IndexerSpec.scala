@@ -272,6 +272,140 @@ class IndexerSpec extends SparkSpecBase {
       s"orphan MOR logs survived the sweep: $morDirs")
   }
 
+  /** The resolved files store plus the dirSizes rollup beside it, as
+    * comparable sets — `last_seen` is scan time by contract, so left
+    * out.
+    */
+  private def storeState(idxRoot: String) = {
+    val files = new graft.sinks.ParquetIndex(idxRoot)
+      .readMor(spark, "relative_path", "modified_time").get
+      .select("relative_path", "id", "type", "size_bytes",
+        "modified_time", "name", "extension")
+      .collect().map(_.toSeq).toSet
+    val sizes = new graft.sinks.ParquetIndex(s"$idxRoot/dirsizes")
+      .read(spark).get.collect().map(_.toSeq).toSet
+    (files, sizes)
+  }
+
+  /** Full run, then `runScoped(scope)` with no tree change in between:
+    * the store must equal a from-scratch full run's.
+    */
+  private def assertScopedParity(root: Path, scope: String): Unit = {
+    val cfg = (idx: String) => IndexerConfig(root.toString, idx,
+      getDirectLinks = false)
+    val idxRoot = Files.createTempDirectory("idxsym").toString
+    val indexer = new Indexer(cfg(idxRoot), Some(TransportProbe.transport))
+    indexer.run(spark)
+    indexer.runScoped(spark, Seq(scope))
+    val refRoot = Files.createTempDirectory("idxsymref").toString
+    new Indexer(cfg(refRoot), Some(TransportProbe.transport)).run(spark)
+    assert(storeState(idxRoot) == storeState(refRoot),
+      s"runScoped($scope) diverged from a full rescan")
+  }
+
+  private def symlinkTree(): Path = {
+    val root = mkTree()
+    Files.createDirectories(root.resolve("proj/x"))
+    Files.writeString(root.resolve("proj/x/t.txt"), "ttt")
+    Files.createSymbolicLink(root.resolve("b"), root.resolve("proj"))
+    root
+  }
+
+  test("runScoped on a symlinked dir keeps the link's own file row, " +
+      "as a full run does") {
+    val root = symlinkTree()
+    assertScopedParity(root, "b")
+    val idxRoot = Files.createTempDirectory("idxsymrow").toString
+    val indexer = new Indexer(IndexerConfig(root.toString, idxRoot,
+      mode = "index-only"), None)
+    indexer.run(spark)
+    indexer.runScoped(spark, Seq("b"))
+    val rows = new graft.sinks.ParquetIndex(idxRoot)
+      .readMor(spark, "relative_path", "modified_time").get
+      .collect().map(r => r.getAs[String]("relative_path") ->
+        ((r.getAs[String]("type"), r.getAs[Long]("size_bytes"))))
+      .toMap
+    // lstat values: the link's own size (its target path's length)
+    assert(rows.get("b") == Some(("file",
+      Files.readAttributes(root.resolve("b"),
+        classOf[java.nio.file.attribute.BasicFileAttributes],
+        java.nio.file.LinkOption.NOFOLLOW_LINKS).size())))
+  }
+
+  test("runScoped under a symlinked dir never follows the link") {
+    val root = symlinkTree()
+    assertScopedParity(root, "b/x")
+    val idxRoot = Files.createTempDirectory("idxsymsub").toString
+    val indexer = new Indexer(IndexerConfig(root.toString, idxRoot,
+      mode = "index-only"), None)
+    indexer.run(spark)
+    assert(indexer.runScoped(spark, Seq("b/x")) == 0L)
+    val paths = new graft.sinks.ParquetIndex(idxRoot)
+      .readMor(spark, "relative_path", "modified_time").get
+      .collect().map(_.getAs[String]("relative_path")).toSet
+    assert(!paths.exists(_.startsWith("b/")), paths)
+  }
+
+  test("runScoped walks only its scope: a sibling sharing the name " +
+      "prefix keeps its stored rows") {
+    val root = mkTree()
+    Files.createDirectories(root.resolve("projx"))
+    Files.writeString(root.resolve("projx/k.txt"), "kk")
+    val idxRoot = Files.createTempDirectory("idxsib").toString
+    val indexer = new Indexer(IndexerConfig(root.toString, idxRoot,
+      mode = "index-only"), None)
+    indexer.run(spark)
+    // a change under the sibling that the proj event must not pick up
+    Files.writeString(root.resolve("projx/new.txt"), "nn")
+    // proj, proj/a.txt, proj/sub, proj/sub/b.log
+    assert(indexer.runScoped(spark, Seq("proj")) == 4L)
+    val paths = new graft.sinks.ParquetIndex(idxRoot)
+      .readMor(spark, "relative_path", "modified_time").get
+      .collect().map(_.getAs[String]("relative_path")).toSet
+    assert(paths.contains("projx/k.txt") && !paths.contains("projx/new.txt"))
+  }
+
+  test("a run walks the tree once: the deletion reconcile reads the " +
+      "committed snapshot, not the listing") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val root = mkTree()
+    val idxRoot = Files.createTempDirectory("idxonce").toString
+    val indexer = new Indexer(IndexerConfig(root.toString, idxRoot,
+      mode = "index-only"), None)
+    indexer.run(spark)
+    Files.delete(root.resolve("proj/sub/b.log"))
+    val drain = "walk-once spec: drain"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val rdds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.job.description"))
+          .foreach {
+            case "indexer: deletion reconcile" =>
+              js.stageInfos.flatMap(_.rddInfos).foreach(r => rdds.add(
+                s"${r.name} @ ${r.callSite} " +
+                  r.scope.map(_.name).getOrElse("")))
+            case `drain` => drained.countDown()
+            case _ =>
+          }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(indexer.run(spark).removed == 1)
+      // listener events arrive asynchronously and in order: once the
+      // marker job is seen, every reconcile job has been too
+      spark.sparkContext.setJobDescription(drain)
+      try spark.range(1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val seen = rdds.asScala.toSeq
+    assert(seen.nonEmpty, "no deletion reconcile job observed")
+    assert(!seen.exists(_.toLowerCase.contains("fslisting")),
+      seen.mkString("\n"))
+  }
+
   test("runScoped with an empty (or drained) scope list is a zero-entry " +
       "no-op, not a crash") {
     val root = mkTree()

@@ -45,21 +45,6 @@ class FsListingSpec extends SparkSpecBase {
     assert(got.contains("/.git/config"))
   }
 
-  test("extraDepth changes parallelism only: same rows, root-relative depth") {
-    val root = mkTree()
-    def rows(extra: Int) = FsListing.list(spark, root.toString,
-        skipPatterns = Seq(".git", "node_modules", "*.tmp"),
-        extraDepth = extra)
-      .collect()
-      .map(r => (r.getAs[String]("filepath"), r.getAs[Int]("depth")))
-      .toSet
-    val base = rows(0)
-    assert(rows(1) == base)
-    assert(rows(2) == base)
-    // ancestors of deep seeds are present with root-relative depths
-    assert(base.contains(("/b", 1)) && base.contains(("/b/c", 2)))
-  }
-
   test("decodeBatched drops null blobs instead of failing the task") {
     import spark.implicits._
     val df = Seq((1L, Some("abc".getBytes)), (2L, None))
@@ -95,12 +80,6 @@ class FsListingSpec extends SparkSpecBase {
     assert(rows("/a/up") == "file")
     assert(!rows.keySet.exists(_.startsWith("/b/")))
     assert(!rows.keySet.exists(_.startsWith("/a/up/")))
-    // DSv2 source: same rule
-    val dsv2 = spark.read.format("fslisting").load(root.toString)
-      .collect().map(r => r.getAs[String]("filepath") ->
-        r.getAs[String]("entry_type")).toMap
-    assert(dsv2("/b") == "file" && dsv2("/a/up") == "file")
-    assert(!dsv2.keySet.exists(_.startsWith("/b/")))
   }
 
   test("field contract: sizes, depth, names") {
