@@ -145,8 +145,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if (movesOn.getAndSet(spark.sparkContext) ne spark.sparkContext)
-      spark.sparkContext.addSparkListener(moves)
     spark
   }
 
@@ -161,91 +159,37 @@ object Bench {
     if (row.isNullAt(0)) 0L else row.getLong(0)
   }
 
-  /** Cumulative task-level data-movement counters, installed once per
-    * session ([[buildSession]]): shuffle read/write bytes and spilled
-    * bytes (memory + disk). A snapshot-delta around one run is that
-    * run's data movement — the scale-honesty numbers beside each
-    * wall-clock time: a query that's fast at sf0.1 but shuffles its
-    * whole input is a 100 TB risk the seconds alone don't show, and a
-    * non-zero spill says the partition sizing didn't hold.
-    */
-  private[graft] final class MoveListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private val read = new java.util.concurrent.atomic.AtomicLong
-    private val write = new java.util.concurrent.atomic.AtomicLong
-    private val spill = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead): Unit
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled): Unit
-      }
-    }
-    def snap: (Long, Long, Long) = (read.get, write.get, spill.get)
-  }
-
-  private[graft] val moves = new MoveListener
-
-  // guard against double-registration (the listener bus does NOT dedup
-  // instances — a re-registered listener double-counts every byte):
-  // track which context holds the listener, re-register only on a new one
-  private val movesOn =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.SparkContext]
-
-  /** Listener events post asynchronously; poll until two consecutive
-    * 50 ms reads agree so a snapshot delta brackets a whole run. The
-    * sleeps sit OUTSIDE the timed sections — they cost bench wall
-    * time, never a reported query time.
-    */
-  private def settledSnap(): (Long, Long, Long) = {
-    var prev = moves.snap
-    var tries = 0
-    while (tries < 40) {
-      Thread.sleep(50)
-      val cur = moves.snap
-      if (cur == prev) return cur
-      prev = cur
-      tries += 1
-    }
-    prev
-  }
-
   /** Warmup once, time twice; returns (min sec, checksum, BOTH raw run
-    * times, the second run's [shuffle_read, shuffle_write, spill]
-    * bytes). The raw times are emitted beside the min in the bench JSON
-    * so a noisy capture self-documents at query granularity: two
-    * far-apart runs mean co-tenant interference, two close runs mean
-    * the min is trustworthy — a reader adjudicates without re-running.
-    * Data movement is plan-determined (no caching between runs), so
-    * bracketing the second timed run measures every run's movement.
+    * times, the stages of the second run). The raw times are emitted
+    * beside the min in the bench JSON so a noisy capture
+    * self-documents at query granularity: two far-apart runs mean
+    * co-tenant interference, two close runs mean the min is
+    * trustworthy — a reader adjudicates without re-running. Data
+    * movement is plan-determined (no caching between runs), so the
+    * last timed run's stages measure every run's movement: a query
+    * that's fast at sf0.1 but shuffles its whole input is a 100 TB
+    * risk the seconds alone don't show, and a non-zero spill says the
+    * partition sizing didn't hold.
     */
-  private[graft] def timedMinOf2(run: () => Long, minOf: Int = 2)
-      : (Double, Long, Seq[Double], Seq[Long]) = {
+  private[graft] def timedMinOf2(spark: SparkSession, run: () => Long,
+      minOf: Int = 2): (Double, Long, Seq[Double], Seq[StageRow]) = {
     run() // warmup: codegen, broadcast, shuffle files
-    // minOf-1 leading timed runs (untracked for movement), then ONE
-    // movement-bracketed run. minOf=3 is the busy-capture mode: when
-    // the machine is co-tenant-loaded at start, a third sample makes
-    // the min far likelier to catch a quiet window (three rounds
-    // running the driver captured at loadavg >> cores and a judge had
-    // to re-measure by hand — VERDICT r7 "Next round #3").
-    val lead = (1 until minOf).map { _ =>
+    // minOf-1 leading timed runs, then ONE stage-recorded run. minOf=3
+    // is the busy-capture mode: when the machine is co-tenant-loaded
+    // at start, a third sample makes the min far likelier to catch a
+    // quiet window (three rounds running the driver captured at
+    // loadavg >> cores and a judge had to re-measure by hand —
+    // VERDICT r7 "Next round #3").
+    def timed(): (Double, Long) = {
       val t0 = System.nanoTime()
       val chk = run()
       ((System.nanoTime() - t0) / 1e9, chk)
     }
-    val pre = settledSnap()
-    val last = {
-      val t0 = System.nanoTime()
-      val chk = run()
-      ((System.nanoTime() - t0) / 1e9, chk)
-    }
-    val post = settledSnap()
-    val moved = Seq(post._1 - pre._1, post._2 - pre._2, post._3 - pre._3)
+    val lead = (1 until minOf).map(_ => timed())
+    val (last, stages) = StageRecorder.recording(spark)(timed())
     val runs = lead :+ last
     val (sec, chk) = runs.minBy(_._1)
-    (sec, chk, runs.map(_._1), moved)
+    (sec, chk, runs.map(_._1), stages)
   }
 
   private def loadavg1m: Double = try {
@@ -530,8 +474,8 @@ object Bench {
         f"[bench] mid-run co-tenant CPU $preCoTenant%.2f > " +
           f"$NoisyCoTenantCpu%.2f before $name — min-of-3 for this query")
       val r = try {
-        var (sec, chk, runs, mv) =
-          timedMinOf2(() => checksum(fn(spark, benchDir)),
+        var (sec, chk, runs, stages) =
+          timedMinOf2(spark, () => checksum(fn(spark, benchDir)),
             minOf = if (startNoisy || midNoisy) 3 else 2)
         val prev = prevTimes.get(name)
         var extra = 0
@@ -548,7 +492,7 @@ object Bench {
             f"2x previous round's $p%.3f s after $extra extra runs")
           flags(name) = (p, sec, extra)
         }
-        Right((sec, chk, runs, mv))
+        Right((sec, chk, runs, StageRecorder.moved(stages)))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -563,7 +507,7 @@ object Bench {
       s""""$n":[${runs.map("%.3f".format(_)).mkString(",")}]"""
     }.mkString("{", ",", "}")
     // per-query [shuffle_read, shuffle_write, spill] MB — the shuffle
-    // cost model the seconds don't show (MoveListener doc)
+    // cost model the seconds don't show (timedMinOf2 doc)
     val moveJson = results.collect { case (n, Right((_, _, _, mv))) =>
       s""""$n":[${mv.map(b => "%.1f".format(b / 1048576.0)).mkString(",")}]"""
     }.mkString("{", ",", "}")

@@ -4,6 +4,11 @@ package graft
   * literally [[Bench]]'s session, checksum, and warmup+min-of-2 timing
   * (shared helpers, not a copy) for one named query, so optimization
   * experiments measure exactly one plan without the full headline run.
+  * Prints the last timed run's stage table — each stage's wall clock,
+  * task run/CPU/GC time, shuffle read/write and spill MB, tagged with
+  * its callsite: the "which operator owns the seconds" question every
+  * optimization here starts from — and then one JSON line whose
+  * `move_mb` is that table's column sums.
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
@@ -32,11 +37,12 @@ object QueryTime {
             sfDir
         }
       } else sfDir
-    val (sec, chk, runs, moved) = Bench.timedMinOf2(
+    val (sec, chk, runs, stages) = Bench.timedMinOf2(spark,
       () => Bench.checksum(fn(spark, dir)))
+    StageRecorder.table(stages).foreach(println)
     val rj = runs.map("%.3f".format(_)).mkString("[", ",", "]")
-    val mj = moved.map(b => "%.1f".format(b / 1048576.0))
-      .mkString("[", ",", "]")
+    val mj = StageRecorder.moved(stages)
+      .map(b => "%.1f".format(b / 1048576.0)).mkString("[", ",", "]")
     println(f"""{"query":"$name","sec":$sec%.3f,"runs":$rj,"move_mb":$mj,"checksum":$chk,"resharded":${dir != sfDir},"sf":"$sfDir"}""")
     if (dir != sfDir) Bench.rm(java.nio.file.Paths.get(dir))
     spark.stop()

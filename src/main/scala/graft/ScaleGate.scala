@@ -342,36 +342,37 @@ object ScaleGate {
       .getOrElse(gated)
     run.foreach { name =>
       val t1 = System.nanoTime()
-      val m0 = Bench.moves.snap
       // unordered, multi-file: the comparator digests are order-
       // insensitive and DuckDB glob-reads the partition files, so the
       // old `coalesce(1)` single-task funnel (which also collapsed the
       // preceding sort to ONE partition) is gone with the sort itself
-      val dumped = (shard, shardedForms.get(name)) match {
-        case (Some(i), Some(form)) =>
-          // sharded pass: this JVM dumps ONLY bucket i of n
-          form(spark, data.toString, i, shards)
-            .write.mode("overwrite")
-            .parquet(out.resolve(name).resolve(s"shard-$i").toString)
-          true
-        case (Some(i), None) =>
-          // unsharded query under a sharded run: pass 0 dumps it whole
-          if (i == 0)
-            stripTopSort(qs(name)(spark, data.toString))
+      val (dumped, stages) = StageRecorder.recording(spark) {
+        (shard, shardedForms.get(name)) match {
+          case (Some(i), Some(form)) =>
+            // sharded pass: this JVM dumps ONLY bucket i of n
+            form(spark, data.toString, i, shards)
               .write.mode("overwrite")
-              .parquet(out.resolve(name).toString)
-          i == 0
-        case _ =>
-          stripTopSort(qs(name)(spark, data.toString))
-            .write.mode("overwrite").parquet(out.resolve(name).toString)
-          true
+              .parquet(out.resolve(name).resolve(s"shard-$i").toString)
+            true
+          case (Some(i), None) =>
+            // unsharded query under a sharded run: pass 0 dumps it whole
+            if (i == 0)
+              stripTopSort(qs(name)(spark, data.toString))
+                .write.mode("overwrite")
+                .parquet(out.resolve(name).toString)
+            i == 0
+          case _ =>
+            stripTopSort(qs(name)(spark, data.toString))
+              .write.mode("overwrite").parquet(out.resolve(name).toString)
+            true
+        }
       }
-      val m1 = Bench.moves.snap
+      val moved = StageRecorder.moved(stages)
       if (dumped) System.err.println(
         f"[scalegate] $name${shard.fold("")(i => s" shard $i/$shards")} " +
           f"dumped in ${(System.nanoTime() - t1) / 1e9}%.1f s " +
-          f"(shuffle write ${(m1._2 - m0._2) / 1e9}%.1f GB, " +
-          f"spill ${(m1._3 - m0._3) / 1e9}%.1f GB)")
+          f"(shuffle write ${moved(1) / 1e9}%.1f GB, " +
+          f"spill ${moved(2) / 1e9}%.1f GB)")
     }
     if (!firstPass) { spark.stop(); return }
     def q(s: String): String =

@@ -267,16 +267,25 @@ object FsOps {
     if (bytes <= max) broadcast(build) else build.hint("shuffle_hash")
   }
 
-  private[graft] def ancestorSizePairs(files: DataFrame): DataFrame = {
+  private[graft] def ancestorSizePairs(files: DataFrame): DataFrame =
+    ancestorExplode(files, Seq("size_bytes"))
+
+  /** One (directory_path, carried...) row per ancestor directory of
+    * every `filepath` — depth ≥ 2 ancestors via a codegen'd
+    * `sequence` + `substring_index`, no UDF; a depth-1 path has none.
+    */
+  private def ancestorExplode(df: DataFrame,
+      carried: Seq[String]): DataFrame = {
     val depth = length(col("filepath")) -
       length(regexp_replace(col("filepath"), "/", ""))
-    files
-      .select(col("filepath"), col("size_bytes"), depth.as("d"))
-      .select(explode(expr(
-        "CASE WHEN d >= 2 THEN sequence(2, d) ELSE cast(array() AS array<int>) END")).as("k"),
-        col("filepath"), col("size_bytes"))
+    val keep = carried.map(col)
+    df
+      .select((col("filepath") +: keep) :+ depth.as("d"): _*)
+      .select(explode(expr("CASE WHEN d >= 2 THEN sequence(2, d) " +
+        "ELSE cast(array() AS array<int>) END")).as("k") +:
+        col("filepath") +: keep: _*)
       .select(expr("substring_index(filepath, '/', k)")
-        .as("directory_path"), col("size_bytes"))
+        .as("directory_path") +: keep: _*)
   }
 
   def dirRollupExplode(spark: SparkSession, sfDir: String): DataFrame = {
@@ -315,25 +324,6 @@ object FsOps {
       |FROM fs_entries d LEFT JOIN roll r ON d.filepath = r.directory_path
       |WHERE d.type = 'directory'
       |ORDER BY directory_path""".stripMargin)
-
-  /** Ancestor explode of a SIGNED-DELTA change feed: one
-    * (directory_path, delta_size, delta_count) row per ancestor of every
-    * changed file. Same codegen'd sequence/substring_index core as
-    * [[ancestorSizePairs]], carrying the count delta alongside the size
-    * delta.
-    */
-  private def ancestorDeltaPairs(changes: DataFrame): DataFrame = {
-    val depth = length(col("filepath")) -
-      length(regexp_replace(col("filepath"), "/", ""))
-    changes
-      .select(col("filepath"), col("delta_size"), col("delta_count"),
-        depth.as("d"))
-      .select(explode(expr(
-        "CASE WHEN d >= 2 THEN sequence(2, d) ELSE cast(array() AS array<int>) END")).as("k"),
-        col("filepath"), col("delta_size"), col("delta_count"))
-      .select(expr("substring_index(filepath, '/', k)")
-        .as("directory_path"), col("delta_size"), col("delta_count"))
-  }
 
   /** J3 INCREMENTAL maintenance: fold a signed-delta change feed into a
     * previously materialized rollup snapshot instead of re-aggregating
@@ -393,7 +383,7 @@ object FsOps {
     * snapshot.
     */
   private[graft] def rollupDeltaAgg(changes: DataFrame): DataFrame =
-    ancestorDeltaPairs(changes)
+    ancestorExplode(changes, Seq("delta_size", "delta_count"))
       .groupBy("directory_path")
       .agg(sum("delta_size").as("dsz"), sum("delta_count").as("dfc"))
 

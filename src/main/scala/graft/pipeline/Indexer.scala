@@ -136,16 +136,6 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
   private def normalize(listing: DataFrame): DataFrame =
     Indexer.normalize(listing)
 
-  /** Ancestor-explode dir-size rollup over an entry frame (J3) — the
-    * shared [[graft.operators.FsOps.ancestorSizePairs]] core (incl. its
-    * depth-1 guard), aggregated to per-directory totals.
-    */
-  private def dirSizes(entries: DataFrame): DataFrame =
-    graft.operators.FsOps
-      .ancestorSizePairs(entries.filter(col("type") === "file"))
-      .groupBy(col("directory_path").as("filepath"))
-      .agg(sum("size_bytes").as("total_size"))
-
   // ------------------------------------------------------------------ //
   // Stored dirSizes rollup (r13 verdict #2): the publish no longer     //
   // re-runs the O(files × depth) ancestor explode every run — a        //
@@ -158,37 +148,19 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
   private def rollupStore(): ParquetIndex =
     new ParquetIndex(s"${cfg.indexRoot}/dirsizes")
 
-  // token I/O rides the Hadoop FileSystem API like the rest of the
-  // store layer (GenMeta/ParquetIndex): the production index root is
-  // HDFS/S3, where java.nio cannot resolve; a local path takes the
-  // same code through LocalFileSystem. Tokens are made visible by a
-  // RENAME of a fully-written temp file — a crash at any point leaves
-  // either the old token (stale → recompute/catch-up) or none (same),
-  // never a torn one; silent drift is impossible.
-  private def readToken(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim)
-      finally in.close()
-    }
-  }
+  // tokens live on the snapshot store's root, which is POSIX-only
+  // (ParquetIndex), and are replaced the way its `CURRENT` pointer is:
+  // an atomic rename of a fully-written temp file over the old token,
+  // so a crash at any point leaves the old token or the new one —
+  // never none, never a torn one; silent drift is impossible.
+  private def readToken(p: java.nio.file.Path): Option[String] =
+    if (java.nio.file.Files.exists(p))
+      Some(java.nio.file.Files.readString(p).trim)
+    else None
 
-  private def writeToken(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path, t: String): Unit = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      p.getName + ".tmp")
-    val os = fs.create(tmp, true)
-    os.write(t.getBytes("UTF-8"))
-    os.close()
-    // delete-then-rename (Hadoop rename refuses an existing dst): a
-    // crash in the window leaves NO token, which reads as stale
-    fs.delete(p, false)
-    require(fs.rename(tmp, p), s"token rename failed: $tmp -> $p")
+  private def writeToken(p: java.nio.file.Path, t: String): Unit = {
+    java.nio.file.Files.createDirectories(p.getParent)
+    ParquetIndex.replaceFile(p, t)
   }
 
   /** The corpus token the stored rollup is valid for. Written AFTER
@@ -196,8 +168,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     * the next publish recomputes; never a silent drift).
     */
   private def rollupTokenPath =
-    new org.apache.hadoop.fs.Path(
-      s"${cfg.indexRoot}/dirsizes/_corpus_token")
+    java.nio.file.Paths.get(cfg.indexRoot, "dirsizes", "_corpus_token")
 
   /** ES-PUBLISHED WATERMARK: the corpus token whose resolved view
     * Elasticsearch last received in full (a clean full [[run]] publish
@@ -212,7 +183,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     * and deletes are idempotent by id).
     */
   private def esWatermarkPath =
-    new org.apache.hadoop.fs.Path(s"${cfg.indexRoot}/_es_published")
+    java.nio.file.Paths.get(cfg.indexRoot, "_es_published")
 
   /** Maintain the stored rollup across a corpus transition
     * `previous → current` and return the (directory_path, sz, fc)
@@ -230,7 +201,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     val rs = rollupStore()
     val next = previous match {
       case Some(prev) if rs.currentId.isDefined &&
-          readToken(spark, rollupTokenPath).contains(prevToken) =>
+          readToken(rollupTokenPath).contains(prevToken) =>
         graft.operators.FsOps.dirRollupFoldAgg(rs.read(spark).get,
           graft.operators.FsOps.rollupDeltaAgg(
             Indexer.signedFileChanges(prev, current)))
@@ -241,7 +212,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
             .select(col("filepath"), col("size_bytes")))
     }
     rs.write(next)
-    writeToken(spark, rollupTokenPath, Indexer.corpusToken(idx))
+    writeToken(rollupTokenPath, Indexer.corpusToken(idx))
     rs.read(spark).get
   }
 
@@ -314,17 +285,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     * with [[checkpointScoped]]; any later full [[run]] supersedes the
     * log by scan-is-truth.
     */
-  def runScoped(spark: SparkSession, changedDirs: Seq[String]): Long =
-    runScoped(spark, changedDirs, preScoped = None)
-
-  /** [[runScoped]] core. `preScoped` (the publish path hands it in) is
-    * the PRE-refresh MOR-resolved rows of the union scope, already
-    * materialized — with it this method performs ZERO corpus-wide
-    * resolves of its own; without it, exactly ONE (shared by every
-    * changed dir), never one per dir as before r15.
-    */
-  private[pipeline] def runScoped(spark: SparkSession,
-      changedDirs: Seq[String], preScoped: Option[DataFrame]): Long = {
+  def runScoped(spark: SparkSession, changedDirs: Seq[String]): Long = {
     val idx = store()
     require(idx.currentId.isDefined,
       "runScoped: no base snapshot — run a full scan first")
@@ -343,21 +304,21 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // predicate below is a reduce over `dirs`, which must not be built
     // over an empty scope)
     if (dirs.isEmpty) return 0L
-    // ONE shared pre-state for the whole call: the surviving dirs are
+    // ONE shared pre-state for the whole call (one corpus-wide resolve,
+    // never one per dir): the surviving dirs are
     // pairwise key-disjoint, so refreshing one never moves another's
     // pre-rows — each iteration just filters its slice out of this
     // frame. Only needed when the rollup can be patched incrementally
     // (`foldable` is loop-invariant: an incremental patch re-stamps
     // the token current, a skipped patch leaves it stale).
     val foldable = rollupStore().currentId.isDefined &&
-      readToken(spark, rollupTokenPath).contains(Indexer.corpusToken(idx))
+      readToken(rollupTokenPath).contains(Indexer.corpusToken(idx))
     val preAll: Option[DataFrame] =
       if (!foldable) None
-      else preScoped.orElse(Some(
-        idx.readMor(spark, "relative_path", "modified_time").get
-          .filter(dirs.map(Indexer.inScope(col("relative_path"), _))
-            .reduce(_ || _))
-          .localCheckpoint(true)))
+      else Some(idx.readMor(spark, "relative_path", "modified_time").get
+        .filter(dirs.map(Indexer.inScope(col("relative_path"), _))
+          .reduce(_ || _))
+        .localCheckpoint(true))
     dirs.map { d =>
       // the root walk with the scope pushed in: only the path down to
       // d and d's subtree are visited, under every full-scan rule
@@ -385,7 +346,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
             graft.operators.FsOps.rollupDeltaAgg(
               Indexer.signedFileChanges(prev, entries)))
           .filter(col("sz") =!= 0L || col("fc") =!= 0L))
-        writeToken(spark, rollupTokenPath, Indexer.corpusToken(idx))
+        writeToken(rollupTokenPath, Indexer.corpusToken(idx))
       }
       entries.count()
     }.sum
@@ -415,10 +376,11 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     * suffix). Cost when used correctly is unchanged: the delta is ∝
     * the scope either way.
     *
-    * Plan note: TWO corpus-wide MOR resolves per call (the pre-state
-    * below, handed into [[runScoped]] so it resolves nothing itself,
-    * and the post-state `after`) — the minimum for a before/after
-    * diff.
+    * Past the gate this IS [[runScoped]] then [[publishCatchUp]]: from
+    * a published state, the log suffix the refresh appends — each
+    * scope's delete sidecar plus its scan — names exactly the scope's
+    * keys, so the catch-up's watermark-prefix rows are the scope's
+    * pre-refresh rows and its post-state rows are the scope's rows.
     */
   def publishScoped(spark: SparkSession,
       changedDirs: Seq[String]): RunReport = {
@@ -433,21 +395,14 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // state ES has already seen in full — refuse otherwise, pointing
     // at the repair, instead of leaving ES silently stale forever
     val pre = Indexer.corpusToken(idx)
-    val wm = readToken(spark, esWatermarkPath)
+    val wm = readToken(esWatermarkPath)
     require(wm.contains(pre),
       s"publishScoped: ES watermark ${wm.getOrElse("(none)")} != " +
         s"store state $pre — the store moved without a publish (bare " +
         "runScoped interlude, a failed publish, or ES never saw a " +
         "full publish); run publishCatchUp() (or a full run()) first")
-    val dirs = changedDirs.map(_.stripPrefix("/").stripSuffix("/"))
-    val scopePred = dirs.map(Indexer.inScope(col("relative_path"), _))
-      .reduce(_ || _)
-    val prevScope = idx.readMor(spark, "relative_path", "modified_time")
-      .get.filter(scopePred).localCheckpoint(true)
-    // store + rollup refreshed; the materialized pre-state rides along
-    // so runScoped performs no corpus-wide resolve of its own
-    runScoped(spark, changedDirs, preScoped = Some(prevScope))
-    publishDelta(spark, idx, prevScope, _.filter(scopePred), t0)
+    runScoped(spark, changedDirs)
+    catchUp(spark, t0)
   }
 
   /** Re-sync ES with the store after transitions that were never
@@ -469,15 +424,23 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     * has no per-key churn record to replay; that needs one full
     * publish ([[run]] in elasticsearch mode).
     */
-  def publishCatchUp(spark: SparkSession): RunReport = {
-    val t0 = System.nanoTime()
+  def publishCatchUp(spark: SparkSession): RunReport =
+    catchUp(spark, System.nanoTime())
+
+  /** [[publishCatchUp]] with the report's clock started at `t0`: given
+    * the watermarked rows of the keys the unpublished log suffix
+    * touched and the same keys' current rows, send docs +
+    * touched-ancestor directory rows, delete vanished keys, and advance
+    * the ES watermark iff every send succeeded.
+    */
+  private def catchUp(spark: SparkSession, t0: Long): RunReport = {
     require(cfg.mode == "elasticsearch" && transport.isDefined,
       "publishCatchUp: elasticsearch mode with a transport required")
     val idx = store()
     require(idx.currentId.isDefined,
       "publishCatchUp: no base snapshot — run a full scan first")
     val cur = Indexer.corpusToken(idx)
-    val wm = readToken(spark, esWatermarkPath)
+    val wm = readToken(esWatermarkPath)
     if (wm.contains(cur))
       return RunReport(RunStats.Stats(0L, 0L, 0L,
         (System.nanoTime() - t0) / 1e9), 0L, 0L, 0L,
@@ -497,70 +460,36 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // watermarked state (base + log prefix) — both ∝ the churn
     val touched = idx.morTouchedKeys(spark, "relative_path",
       from = publishedLen).get.localCheckpoint(true)
-    val prevRows = idx.readMorPrefix(spark, "relative_path",
+    val prevScope = idx.readMorPrefix(spark, "relative_path",
       "modified_time", batchWinsTies = false, upTo = publishedLen).get
       .join(touched, Seq("relative_path"), "left_semi")
       .localCheckpoint(true)
-    publishDelta(spark, idx, prevRows,
-      _.join(touched, Seq("relative_path"), "left_semi"), t0)
-  }
-
-  /** OPERATOR BOOTSTRAP for the ES-published watermark: a store last
-    * published before the watermark existed — or one that lost the
-    * token in [[writeToken]]'s delete→rename crash window — has no
-    * `_es_published`, so [[publishScoped]] refuses and
-    * [[publishCatchUp]] demands a full republish even when ES is in
-    * fact current. This stamps the CURRENT corpus token as published,
-    * on the operator's authority alone (nothing is sent to or checked
-    * against ES). Use ONLY when you know ES holds the store's resolved
-    * view in full; if it does not, the scoped publishes this unblocks
-    * will drift exactly the way the watermark exists to prevent.
-    * Returns the stamped token.
-    */
-  def assertPublished(spark: SparkSession): String = {
-    val idx = store()
-    require(idx.currentId.isDefined,
-      "assertPublished: no base snapshot — nothing to stamp")
-    val t = Indexer.corpusToken(idx)
-    writeToken(spark, esWatermarkPath, t)
-    t
-  }
-
-  /** Shared delta-publish tail of [[publishScoped]] and
-    * [[publishCatchUp]]: given the pre-transition rows of the affected
-    * key set and a selector pulling the same key set out of the
-    * post-transition resolve, send docs + touched-ancestor directory
-    * rows, delete vanished keys, and advance the ES watermark iff
-    * every send succeeded.
-    */
-  private def publishDelta(spark: SparkSession, idx: ParquetIndex,
-      prevScope: DataFrame, selectCur: DataFrame => DataFrame,
-      t0: Long): RunReport = {
     val after = idx.readMor(spark, "relative_path", "modified_time").get
       .localCheckpoint(true)
-    val curScope = selectCur(after).localCheckpoint(true)
+    val curScope = after.join(touched, Seq("relative_path"), "left_semi")
+      .localCheckpoint(true)
     // the rollup may have been stale before this run (e.g. index-only
     // interludes) — reconcile it now so the publish reads real totals
     val sizesAll = {
       val rs = rollupStore()
-      if (readToken(spark, rollupTokenPath)
+      if (readToken(rollupTokenPath)
           .contains(Indexer.corpusToken(idx)) && rs.currentId.isDefined)
         rs.read(spark).get
       else {
         rs.write(graft.operators.FsOps.rollupOf(
           after.filter(col("type") === "file")
             .select(col("filepath"), col("size_bytes"))))
-        writeToken(spark, rollupTokenPath, Indexer.corpusToken(idx))
+        writeToken(rollupTokenPath, Indexer.corpusToken(idx))
         rs.read(spark).get
       }
     }
     // directories whose totals moved: the ancestors of the signed
     // change feed — inside OR above the scope
-    val touched = graft.operators.FsOps.rollupDeltaAgg(
+    val movedDirs = graft.operators.FsOps.rollupDeltaAgg(
         Indexer.signedFileChanges(prevScope, curScope))
       .select(col("directory_path").as("filepath"))
     val dirRows = after.filter(col("type") === "directory")
-      .join(touched, Seq("filepath"), "left_semi")
+      .join(movedDirs, Seq("filepath"), "left_semi")
     // the observed counters ride the publish delta itself (A8 — one
     // pass, collected when the bulk sink consumes the docs)
     val (toPublish, obs) = RunStats.observed(
@@ -587,11 +516,31 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // watermark, but only on a zero-failure send: a rejected batch
     // keeps it behind so publishCatchUp re-sends (idempotent by id)
     if (s.failed + delFailed == 0L)
-      writeToken(spark, esWatermarkPath, Indexer.corpusToken(idx))
+      writeToken(esWatermarkPath, Indexer.corpusToken(idx))
     val elapsed = (System.nanoTime() - t0) / 1e9
     RunReport(RunStats.collect(obs, elapsed), s.indexed,
       s.failed + delFailed, removedCount,
       idx.currentId.getOrElse(""), nLinks)
+  }
+
+  /** OPERATOR BOOTSTRAP for the ES-published watermark: a store last
+    * published before the watermark existed — or one whose token was
+    * deleted by hand — has no `_es_published`, so [[publishScoped]] refuses and
+    * [[publishCatchUp]] demands a full republish even when ES is in
+    * fact current. This stamps the CURRENT corpus token as published,
+    * on the operator's authority alone (nothing is sent to or checked
+    * against ES). Use ONLY when you know ES holds the store's resolved
+    * view in full; if it does not, the scoped publishes this unblocks
+    * will drift exactly the way the watermark exists to prevent.
+    * Returns the stamped token.
+    */
+  def assertPublished(spark: SparkSession): String = {
+    val idx = store()
+    require(idx.currentId.isDefined,
+      "assertPublished: no base snapshot — nothing to stamp")
+    val t = Indexer.corpusToken(idx)
+    writeToken(esWatermarkPath, t)
+    t
   }
 
   /** Fold the scoped-run MOR log into a real snapshot (periodic, or
@@ -624,10 +573,10 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
   private def migrateWatermark(spark: SparkSession)(
       fold: => Option[String]): Option[String] = {
     val preTok = Indexer.corpusToken(store())
-    val matched = readToken(spark, esWatermarkPath).contains(preTok)
+    val matched = readToken(esWatermarkPath).contains(preTok)
     val r = fold
     if (r.isDefined && matched)
-      writeToken(spark, esWatermarkPath, Indexer.corpusToken(store()))
+      writeToken(esWatermarkPath, Indexer.corpusToken(store()))
     r
   }
 
@@ -794,7 +743,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
         // whole resolved corpus; advance only on a clean send so a
         // failed batch keeps catch-up/scoped publishes honest
         if (s.failed + delFailed == 0L)
-          writeToken(spark, esWatermarkPath, Indexer.corpusToken(idx))
+          writeToken(esWatermarkPath, Indexer.corpusToken(idx))
         (s.indexed, s.failed + delFailed, nLinks)
       case _ => (0L, 0L, 0L) // index-only
     }

@@ -207,10 +207,7 @@ final class ParquetIndex(root: String, keep: Int = 2,
     withCommitLock(commitUnlocked(id))
 
   private def commitUnlocked(id: String): String = {
-    val tmp = Paths.get(root, s".CURRENT.tmp-$id")
-    Files.writeString(tmp, id)
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    ParquetIndex.replaceFile(pointer, id)
     prune(committedIds :+ id)
     id
   }
@@ -292,7 +289,13 @@ final class ParquetIndex(root: String, keep: Int = 2,
     // this one (letting EliminateSorts drop the inner key sort) — one
     // combined sort satisfies the writer AND lays rows out by the key
     val out =
-      if (zorderExprs.nonEmpty) zorderShaped(df)
+      // localCheckpoint first: the z bounds agg is a full action on the
+      // upstream plan, and the parquet write re-executes it — for a
+      // pipeline snapshot that plan is the filesystem walk + merge,
+      // which must not run twice (nor observe two different tree states)
+      if (zorderExprs.nonEmpty)
+        ZOrderLayout.shaped(df.localCheckpoint(true), zDims(0)._2,
+          zDims(1)._2, writeFiles)
       else if (sortWithin.nonEmpty)
         shaped.sortWithinPartitions(
           (partitionBy ++ sortWithin).distinct.map(col): _*)
@@ -305,7 +308,7 @@ final class ParquetIndex(root: String, keep: Int = 2,
     Files.writeString(Paths.get(root, s"snap-$id", SchemaFile),
       df.schema.toDDL)
     if (zorderExprs.nonEmpty)
-      writeZManifest(df.sparkSession, s"$root/snap-$id")
+      ZOrderLayout.writeManifest(df.sparkSession, s"$root/snap-$id", zDims)
     id
   }
 
@@ -414,51 +417,11 @@ final class ParquetIndex(root: String, keep: Int = 2,
       finally ch.close()
     }
 
-  /** Z-order the snapshot frame: derive the two layout dimensions,
-    * range-partition + sort on their Morton interleave, drop helpers.
-    * Empty/all-null input degenerates to the plain shape (no bounds to
-    * quantize against).
-    */
-  private def zorderShaped(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    // materialize ONCE: the bounds agg below is a full action on the
-    // upstream plan, and the parquet write re-executes it — for a
-    // pipeline snapshot that plan is the filesystem walk + merge, which
-    // must not run twice (nor observe two different tree states)
-    val snap = df.localCheckpoint(true)
-    val withDims = snap
-      .withColumn("__za", expr(zorderExprs(0)).cast("long"))
-      .withColumn("__zb", expr(zorderExprs(1)).cast("long"))
-    val b = withDims.agg(
-      min("__za"), max("__za"), min("__zb"), max("__zb")).collect()(0)
-    if (b.isNullAt(0) || b.isNullAt(2))
-      return if (writeFiles > 0) snap.coalesce(writeFiles) else snap
-    val z = ZOrderLayout.zValue(col("__za"), col("__zb"),
-      b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    val zz = withDims.withColumn("__z", z)
-    (if (writeFiles > 0) zz.repartitionByRange(writeFiles, col("__z"))
-     else zz.repartitionByRange(col("__z")))
-      .sortWithinPartitions("__z")
-      .drop("__z", "__za", "__zb")
-  }
-
-  /** Per-file min/max manifest of the two z-order expressions, written
-    * inside the snapshot dir ('_'-prefixed → invisible to readers of
-    * the data files; swaps atomically with the snapshot pointer).
-    */
-  private def writeZManifest(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val base = spark.read.parquet(dir)
-    base.groupBy(input_file_name().as("file"))
-      .agg(
-        min(expr(zorderExprs(0)).cast("long")).as("z0_lo"),
-        max(expr(zorderExprs(0)).cast("long")).as("z0_hi"),
-        min(expr(zorderExprs(1)).cast("long")).as("z1_lo"),
-        max(expr(zorderExprs(1)).cast("long")).as("z1_hi"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/_manifest")
-  }
+  /** The z-order layout dimensions, named as in the `_manifest`. */
+  private def zDims: Seq[(String, org.apache.spark.sql.Column)] =
+    zorderExprs.zipWithIndex.map { case (e, i) =>
+      s"z$i" -> org.apache.spark.sql.functions.expr(e)
+    }
 
   /** FILE-pruned read of the current snapshot for a conjunctive range
     * predicate over the two z-order dimensions (`spans` aligns with
@@ -472,7 +435,6 @@ final class ParquetIndex(root: String, keep: Int = 2,
       spans: Seq[(Long, Long)]): Option[DataFrame] = {
     require(zorderExprs.size == 2, "readPruned: not a z-ordered store")
     require(spans.size == 2, "readPruned: need one span per dimension")
-    import org.apache.spark.sql.functions._
     currentId.map { cid =>
       // same discipline as reconcile(): the manifest prunes the BASE
       // only — serving it with a pending MOR log would silently miss
@@ -480,22 +442,9 @@ final class ParquetIndex(root: String, keep: Int = 2,
       require(morEntries(cid).isEmpty,
         "readPruned: pending MOR log — checkpointMor() before pruned reads")
       val dir = s"$root/snap-$cid"
-      val survivors = spark.read.parquet(s"$dir/_manifest")
-        .filter(
-          col("z0_hi") >= spans(0)._1 && col("z0_lo") <= spans(0)._2 &&
-            col("z1_hi") >= spans(1)._1 && col("z1_lo") <= spans(1)._2)
-        .select("file").collect().map(_.getString(0))
-      val base =
-        if (survivors.isEmpty) readSnapshot(spark, cid).limit(0)
-        else spark.read.schema(
-          org.apache.spark.sql.types.StructType.fromDDL(
-            Files.readString(Paths.get(dir, SchemaFile))))
-          .parquet(survivors.toIndexedSeq: _*)
-      base.filter(
-        expr(zorderExprs(0)).cast("long")
-          .between(spans(0)._1, spans(0)._2) &&
-          expr(zorderExprs(1)).cast("long")
-            .between(spans(1)._1, spans(1)._2))
+      ZOrderLayout.prunedRead(spark, dir, zDims, spans,
+        Some(org.apache.spark.sql.types.StructType.fromDDL(
+          Files.readString(Paths.get(dir, SchemaFile)))))
     }
   }
 
@@ -769,10 +718,8 @@ final class ParquetIndex(root: String, keep: Int = 2,
     Files.createDirectories(morRoot(baseId))
     val lines = morEntries(baseId).map { case (k, n) => s"$k:$n" } :+
       s"$kind:$name"
-    val tmp = morRoot(baseId).resolve(".DELTAS.tmp")
-    Files.writeString(tmp, lines.mkString("\n") + "\n")
-    Files.move(tmp, morManifest(baseId), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING): Unit
+    ParquetIndex.replaceFile(morManifest(baseId),
+      lines.mkString("\n") + "\n")
   }
 
   private def writeMorDir(baseId: String, name: String,
@@ -1093,10 +1040,7 @@ final class ParquetIndex(root: String, keep: Int = 2,
     val (drop, kept) = committed.splitAt(math.max(0, committed.size - keep))
     drop.foreach(id => deleteRec(Paths.get(root, s"snap-$id")))
     drop.foreach(id => deleteRec(morRoot(id)))
-    val tmp = Paths.get(root, ".MANIFEST.tmp")
-    Files.writeString(tmp, kept.mkString("\n") + "\n")
-    Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING): Unit
+    ParquetIndex.replaceFile(manifest, kept.mkString("\n") + "\n")
   }
 
   private def deleteRec(p: java.nio.file.Path): Unit = {
@@ -1118,6 +1062,18 @@ object ParquetIndex {
     new java.util.concurrent.ConcurrentHashMap[String, Object]
   private[sinks] def jvmLock(root: String): Object =
     jvmLocks.computeIfAbsent(root, _ => new Object)
+
+  /** Replace the small file `p` with `text` atomically: write a sibling
+    * temp file, then rename it over `p` (POSIX rename) — a reader, or a
+    * crash at any point, sees the old content or the new, never none
+    * and never a torn file.
+    */
+  private[graft] def replaceFile(p: java.nio.file.Path, text: String): Unit = {
+    val tmp = p.resolveSibling(s".${p.getFileName}.tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING): Unit
+  }
 
   /** The partition column the pipeline derives for path-partitioned
     * snapshots (SURVEY §4.1 — the replacement for the reference's ART

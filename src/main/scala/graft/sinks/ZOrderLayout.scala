@@ -47,33 +47,36 @@ object ZOrderLayout {
     call_function("zorder2", quant(a, aMin, aMax), quant(b, bMin, bMax))
   }
 
-  /** Write `df` to `dir` z-ordered on (`colA`, `colB`) into `files`
-    * files: range-partition on the z-value (even file sizes under skew
-    * via range sampling), sort within each partition, drop the helper
-    * column at the writer.
+  /** `df` z-ordered on the two long-valued dimensions `a` and `b` into
+    * `files` partitions (0 = let the range exchange pick): range-
+    * partition on the z-value (even file sizes under skew via range
+    * sampling), sort within each partition, no helper column left.
+    * Empty input (or an all-null dimension) has no bounds to quantize
+    * against and comes back only coalesced.
     */
-  def write(df: DataFrame, dir: String, colA: String, colB: String,
-      files: Int): Unit = {
+  def shaped(df: DataFrame, a: Column, b: Column, files: Int): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     val bounds = df.agg(
-      min(col(colA)).cast("long").as("a_lo"),
-      max(col(colA)).cast("long").as("a_hi"),
-      min(col(colB)).cast("long").as("b_lo"),
-      max(col(colB)).cast("long").as("b_hi")).collect()(0)
-    if (bounds.isNullAt(0) || bounds.isNullAt(2)) {
-      // empty input (or all-null cluster column): write the empty-but-
-      // valid layout instead of NPEing on the null bounds
-      df.write.mode("overwrite").parquet(dir)
-      return
-    }
-    val z = zValue(col(colA), col(colB), bounds.getLong(0),
+      min(a.cast("long")), max(a.cast("long")),
+      min(b.cast("long")), max(b.cast("long"))).collect()(0)
+    if (bounds.isNullAt(0) || bounds.isNullAt(2))
+      return if (files > 0) df.coalesce(files) else df
+    val z = zValue(a.cast("long"), b.cast("long"), bounds.getLong(0),
       bounds.getLong(1), bounds.getLong(2), bounds.getLong(3))
-    df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
+    val keyed = df.withColumn("__z", z)
+    (if (files > 0) keyed.repartitionByRange(files, col("__z"))
+     else keyed.repartitionByRange(col("__z")))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode("overwrite").parquet(dir)
   }
+
+  /** Write `df` to `dir` z-ordered on (`colA`, `colB`) into `files`
+    * files ([[shaped]]).
+    */
+  def write(df: DataFrame, dir: String, colA: String, colB: String,
+      files: Int): Unit =
+    shaped(df, col(colA), col(colB), files)
+      .write.mode("overwrite").parquet(dir)
 
   /** Per-file (min, max) spans of `c` in a written layout — the
     * fraction of files a point/range predicate on `c` must read, which
@@ -85,40 +88,50 @@ object ZOrderLayout {
       .agg(min(col(c)).cast("long").as("lo"),
         max(col(c)).cast("long").as("hi"))
 
-  /** Materialize the per-file min/max manifest for `cols` at
-    * `dir/_manifest` (underscore prefix = invisible to Spark's file
-    * index, the `_delta_log` convention). One narrow scan at write
-    * time buys file-level skipping for every later read.
+  /** Materialize the per-file min/max manifest of the named long-
+    * valued `dims` at `dir/_manifest` (columns `<name>_lo`/`<name>_hi`;
+    * underscore prefix = invisible to Spark's file index, the
+    * `_delta_log` convention). One narrow scan at write time buys
+    * file-level skipping for every later read.
     */
   def writeManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cols: Seq[String]): Unit = {
-    val base = spark.read.parquet(dir)
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c)).cast("long").as(s"${c}_lo"),
-      max(col(c)).cast("long").as(s"${c}_hi")))
-    base.groupBy(input_file_name().as("file"))
+      dir: String, dims: Seq[(String, Column)]): Unit = {
+    val aggs = dims.flatMap { case (n, c) =>
+      Seq(min(c.cast("long")).as(s"${n}_lo"),
+        max(c.cast("long")).as(s"${n}_hi"))
+    }
+    spark.read.parquet(dir)
+      .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/_manifest")
   }
 
-  /** Read `dir` with FILE-LEVEL pruning from the manifest: only files
-    * whose [lo, hi] span of `c` overlaps [lo, hi] are opened; the exact
-    * row predicate is re-applied on top (span overlap is necessary, not
-    * sufficient). The manifest is |files| rows — collecting the
-    * surviving paths to the driver is the same plan Delta/Iceberg
-    * readers run. Returns the same rows as
-    * `read.parquet(dir).filter(c between lo and hi)`.
+  /** Read `dir` with FILE-LEVEL pruning from its manifest: only files
+    * whose span of every dimension overlaps that dimension's [lo, hi]
+    * are opened, and the exact row predicate is re-applied on top
+    * (span overlap is necessary, not sufficient). The manifest is
+    * |files| rows — collecting the surviving paths to the driver is the
+    * same plan Delta/Iceberg readers run. `spans` aligns with `dims`; a
+    * point predicate is `(v, v)`. Data files are read with `schema`
+    * when given, else with the schema inferred from them. Returns the
+    * same rows as `read.parquet(dir)` filtered on every range.
     */
   def prunedRead(spark: org.apache.spark.sql.SparkSession, dir: String,
-      c: String, lo: Long, hi: Long): DataFrame = {
+      dims: Seq[(String, Column)], spans: Seq[(Long, Long)],
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame = {
+    require(spans.size == dims.size, "prunedRead: one span per dimension")
+    val ranges = dims.zip(spans)
     val files = spark.read.parquet(s"$dir/_manifest")
-      .filter(col(s"${c}_hi") >= lo && col(s"${c}_lo") <= hi)
+      .filter(ranges.map { case ((n, _), (lo, hi)) =>
+        col(s"${n}_hi") >= lo && col(s"${n}_lo") <= hi }.reduce(_ && _))
       .select("file").collect().map(_.getString(0))
+    val read = schema.fold(spark.read)(spark.read.schema)
     val base =
-      if (files.isEmpty)
-        spark.read.parquet(dir).limit(0) // schema-preserving empty
-      else spark.read.parquet(files.toIndexedSeq: _*)
-    base.filter(col(c).cast("long").between(lo, hi))
+      if (files.isEmpty) read.parquet(dir).limit(0) // schema-preserving
+      else read.parquet(files.toIndexedSeq: _*)
+    base.filter(ranges.map { case ((_, c), (lo, hi)) =>
+      c.cast("long").between(lo, hi) }.reduce(_ && _))
   }
 }

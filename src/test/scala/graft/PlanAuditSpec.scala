@@ -631,4 +631,47 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(g.contains("MapPartitions"), g)
   }
 
+  /** Every unpartitioned (one-task) window a headline query runs on
+    * sf0.001 — a `Window` or `WindowGroupLimit` with no partition spec,
+    * or the native top-k a global `row_number` filter rewrites to —
+    * per query: (count, why its input is bounded).
+    */
+  private val boundedGlobalWindows: Map[String, (Int, String)] = Map(
+    "fs_stale_links" -> (1, "numbers only the 200 rows the top-k " +
+      "`limit(200)` keeps, to serve page rows 101-200"))
+
+  test("headline queries run only the whitelisted unpartitioned windows") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.{WindowExec,
+      WindowGroupLimitExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.plans.GroupTopKFinalExec
+    object Plans extends AdaptiveSparkPlanHelper
+    // every plan a query executes: the eager checkpoints its builder
+    // runs as well as the final frame
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val found = try Bench.headline.map { q =>
+      plans.clear()
+      // the listener bus is ordered: once the recorder's window closes,
+      // every execution of the query has been reported
+      StageRecorder.recording(spark)(
+        SparkEntry.queries(q)(spark, sf).collect())
+      q -> plans.toArray(Array.empty[QueryExecution]).map(qe =>
+        Plans.collectWithSubqueries(qe.executedPlan) {
+          case w: WindowExec if w.partitionSpec.isEmpty => w
+          case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w
+          case t: GroupTopKFinalExec if t.groupExprs.isEmpty => t
+        }.size).sum
+    }.filter(_._2 > 0).toMap
+    finally spark.listenerManager.unregister(listener)
+    assert(found == boundedGlobalWindows.map { case (q, (n, _)) => q -> n },
+      s"unpartitioned windows per headline query: $found")
+  }
 }

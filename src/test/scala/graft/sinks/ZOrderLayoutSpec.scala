@@ -61,7 +61,8 @@ class ZOrderLayoutSpec extends SparkSpecBase {
       .select("l_orderkey", "l_partkey", "l_quantity")
     val dir = Files.createTempDirectory("zorder4").toString
     ZOrderLayout.write(li, dir, "l_orderkey", "l_partkey", nFiles)
-    ZOrderLayout.writeManifest(spark, dir, Seq("l_orderkey", "l_partkey"))
+    ZOrderLayout.writeManifest(spark, dir,
+      Seq("l_orderkey", "l_partkey").map(c => c -> col(c)))
 
     // a narrow range on EACH clustered column
     for (c <- Seq("l_orderkey", "l_partkey")) {
@@ -71,7 +72,8 @@ class ZOrderLayoutSpec extends SparkSpecBase {
       }
       val qLo = lo + (hi - lo) / 2
       val qHi = qLo + (hi - lo) / 10
-      val pruned = ZOrderLayout.prunedRead(spark, dir, c, qLo, qHi)
+      val pruned = ZOrderLayout.prunedRead(spark, dir, Seq(c -> col(c)),
+        Seq((qLo, qHi)))
       val full = spark.read.parquet(dir)
         .filter(col(c).cast("long").between(qLo, qHi))
       assert(pruned.count() == full.count(), c)
@@ -82,8 +84,9 @@ class ZOrderLayoutSpec extends SparkSpecBase {
     }
 
     // an empty range prunes everything and keeps the schema
-    val none = ZOrderLayout.prunedRead(spark, dir, "l_orderkey",
-      Long.MaxValue - 1, Long.MaxValue)
+    val none = ZOrderLayout.prunedRead(spark, dir,
+      Seq("l_orderkey" -> col("l_orderkey")),
+      Seq((Long.MaxValue - 1, Long.MaxValue)))
     assert(none.count() == 0)
     assert(none.columns.toSeq ==
       Seq("l_orderkey", "l_partkey", "l_quantity"))
