@@ -132,12 +132,15 @@ object Bench {
     }
   }
 
-  /** The bench session — shared with [[QueryTime]] so "same methodology"
-    * stays true by construction, not by copy.
+  /** The one session builder of every main — Bench, QueryTime,
+    * PlanDump, ScaleGate, Verify and the pipeline CLI — so "same
+    * methodology" stays true by construction, not by copy: `cpus`
+    * local cores (or `master`) and as many shuffle partitions.
     */
-  private[graft] def buildSession(cpus: String): SparkSession = {
+  private[graft] def buildSession(cpus: String,
+      master: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(master.getOrElse(s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -159,7 +162,22 @@ object Bench {
     if (row.isNullAt(0)) 0L else row.getLong(0)
   }
 
-  /** Warmup once, time twice; returns (min sec, checksum, BOTH raw run
+  /** Run `body` with its jobs labelled `label` (the thread-local
+    * `spark.job.description`, which adaptive execution carries to the
+    * threads it submits query stages from), restoring the caller's
+    * label after — so every stage [[StageRecorder]] records under it
+    * names its query.
+    */
+  private[graft] def labelled[A](spark: SparkSession, label: String)(
+      body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** Warmup once, time twice, every run's jobs labelled `label` (the
+    * query name); returns (min sec, checksum, BOTH raw run
     * times, the stages of the second run). The raw times are emitted
     * beside the min in the bench JSON so a noisy capture
     * self-documents at query granularity: two far-apart runs mean
@@ -171,8 +189,9 @@ object Bench {
     * risk the seconds alone don't show, and a non-zero spill says the
     * partition sizing didn't hold.
     */
-  private[graft] def timedMinOf2(spark: SparkSession, run: () => Long,
-      minOf: Int = 2): (Double, Long, Seq[Double], Seq[StageRow]) = {
+  private[graft] def timedMinOf2(spark: SparkSession, label: String,
+      run: () => Long, minOf: Int = 2)
+      : (Double, Long, Seq[Double], Seq[StageRow]) = labelled(spark, label) {
     run() // warmup: codegen, broadcast, shuffle files
     // minOf-1 leading timed runs, then ONE stage-recorded run. minOf=3
     // is the busy-capture mode: when the machine is co-tenant-loaded
@@ -475,13 +494,13 @@ object Bench {
           f"$NoisyCoTenantCpu%.2f before $name — min-of-3 for this query")
       val r = try {
         var (sec, chk, runs, stages) =
-          timedMinOf2(spark, () => checksum(fn(spark, benchDir)),
+          timedMinOf2(spark, name, () => checksum(fn(spark, benchDir)),
             minOf = if (startNoisy || midNoisy) 3 else 2)
         val prev = prevTimes.get(name)
         var extra = 0
         while (prev.exists(p => sec > 2 * p) && extra < 2) {
           val t0 = System.nanoTime()
-          checksum(fn(spark, benchDir))
+          labelled(spark, name)(checksum(fn(spark, benchDir)))
           val t = (System.nanoTime() - t0) / 1e9
           runs = runs :+ t
           sec = math.min(sec, t)

@@ -6,9 +6,10 @@ package graft
   * experiments measure exactly one plan without the full headline run.
   * Prints the last timed run's stage table — each stage's wall clock,
   * task run/CPU/GC time, shuffle read/write and spill MB, tagged with
-  * its callsite: the "which operator owns the seconds" question every
-  * optimization here starts from — and then one JSON line whose
-  * `move_mb` is that table's column sums.
+  * its callsite and with the query name as its job label: the "which
+  * operator owns the seconds" question every optimization here starts
+  * from — and then one JSON line whose `move_mb` is that table's
+  * column sums.
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
@@ -37,7 +38,7 @@ object QueryTime {
             sfDir
         }
       } else sfDir
-    val (sec, chk, runs, stages) = Bench.timedMinOf2(spark,
+    val (sec, chk, runs, stages) = Bench.timedMinOf2(spark, name,
       () => Bench.checksum(fn(spark, dir)))
     StageRecorder.table(stages).foreach(println)
     val rj = runs.map("%.3f".format(_)).mkString("[", ",", "]")

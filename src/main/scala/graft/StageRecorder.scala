@@ -13,12 +13,14 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** One completed stage: its callsite name, the job description it ran
-  * under (`spark.job.description`), wall clock (submission →
-  * completion), and the summed task metrics — executor run, CPU and GC
-  * time, shuffle read/write bytes, and spill (memory + disk) bytes.
+  * under (`spark.job.description`) and that job's id (-1 if unknown),
+  * wall clock (submission → completion), and the summed task metrics —
+  * executor run, CPU and GC time, shuffle read/write bytes, and spill
+  * (memory + disk) bytes.
   */
 final case class StageRow(
-    stageId: Int, name: String, job: String, wallMs: Long, tasks: Int,
+    stageId: Int, name: String, job: String, jobId: Int, wallMs: Long,
+    tasks: Int,
     runMs: Long, cpuMs: Long, gcMs: Long,
     readBytes: Long, writeBytes: Long, spillBytes: Long)
 
@@ -36,10 +38,10 @@ final case class StageRow(
 final class StageRecorder private extends SparkListener {
   import StageRecorder._
 
-  private final class Acc(job: String) {
+  private final class Acc(job: String, jobId: Int) {
     var tasks, runMs, cpuNs, gcMs, read, write, spill = 0L
     def row(i: StageInfo): StageRow = StageRow(i.stageId,
-      i.name.takeWhile(_ != '\n'), job,
+      i.name.takeWhile(_ != '\n'), job, jobId,
       (for (a <- i.completionTime; b <- i.submissionTime) yield a - b)
         .getOrElse(0L),
       tasks.toInt, runMs, cpuNs / 1000000L, gcMs, read, write, spill)
@@ -48,6 +50,10 @@ final class StageRecorder private extends SparkListener {
   // the listener bus calls these from one thread; `rows` and `markers`
   // are also touched by the caller's thread
   private val live = mutable.HashMap.empty[(Int, Int), Acc]
+  // stage id → the first running job that lists it (the one that runs
+  // it; later jobs skip it), kept while that job runs
+  private val stageJob = mutable.HashMap.empty[Int, Int]
+  private val jobStages = mutable.HashMap.empty[Int, Seq[Int]]
   private val rows = mutable.ArrayBuffer.empty[StageRow]
   private val markers = new ConcurrentHashMap[String, Promise[Int]]
   private val seq = new AtomicLong
@@ -55,7 +61,8 @@ final class StageRecorder private extends SparkListener {
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
     val job = description(e.properties)
     if (!job.startsWith(Marker))
-      live((e.stageInfo.stageId, e.stageInfo.attemptNumber())) = new Acc(job)
+      live((e.stageInfo.stageId, e.stageInfo.attemptNumber())) =
+        new Acc(job, stageJob.getOrElse(e.stageInfo.stageId, -1))
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -76,9 +83,16 @@ final class StageRecorder private extends SparkListener {
       rows.synchronized(rows += a.row(i)))
   }
 
-  override def onJobStart(e: SparkListenerJobStart): Unit =
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    e.stageIds.foreach(stageJob.getOrElseUpdate(_, e.jobId))
+    jobStages(e.jobId) = e.stageIds
     Option(markers.remove(description(e.properties)))
       .foreach(_.success(rows.synchronized(rows.length)))
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    jobStages.remove(e.jobId).foreach(_.foreach(s =>
+      if (stageJob.get(s).contains(e.jobId)) stageJob.remove(s)))
 
   /** Run a labelled marker job and wait until the listener has seen
     * it; returns the number of rows recorded by then.

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SizeFormat
@@ -137,12 +137,11 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     Indexer.normalize(listing)
 
   // ------------------------------------------------------------------ //
-  // Stored dirSizes rollup (r13 verdict #2): the publish no longer     //
-  // re-runs the O(files × depth) ancestor explode every run — a        //
-  // snapshot of (directory_path, sz, fc) lives beside the index and    //
-  // is PATCHED with the signed change feed the merge already knows     //
-  // (FsOps.dirRollupFoldAgg), recomputed from scratch only when its    //
-  // corpus token says it no longer matches the files store.            //
+  // Stored dirSizes rollup: a snapshot of (directory_path, sz, fc)     //
+  // lives beside the index, stamped with the corpus token it matches.  //
+  // A full run recomputes it; a scoped refresh PATCHES it with the     //
+  // scope's signed change feed (FsOps.dirRollupFoldAgg), and the       //
+  // catch-up publish reads it as-is while its token is current.        //
   // ------------------------------------------------------------------ //
 
   private def rollupStore(): ParquetIndex =
@@ -185,33 +184,22 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
   private def esWatermarkPath =
     java.nio.file.Paths.get(cfg.indexRoot, "_es_published")
 
-  /** Maintain the stored rollup across a corpus transition
-    * `previous → current` and return the (directory_path, sz, fc)
-    * frame for `current`. Incremental when the stored rollup's token
-    * matches the pre-transition corpus: ONE explode-free full-outer
-    * diff (the merge's reconcile legs — added/removed/resized file
-    * rows) + the O(|Δ| × depth) delta fold; from-scratch otherwise
-    * (first run, index-only interludes, or any crash that left the
-    * token stale). Zero rows (a directory whose files all vanished)
-    * are pruned — absence ≡ zero on every read path.
+  /** Rebuild the stored rollup from `current` (the corpus `idx`
+    * holds now), stamp its token, and return the (directory_path, sz,
+    * fc) frame. A full run always takes this path rather than folding
+    * the run's signed change feed: in a full run that feed is itself a
+    * full-outer diff of the previous and current corpus — a two-sided
+    * corpus-sized shuffle — while the recompute's partial aggregate
+    * ships only one row per directory per task (2 jobs, the same as a
+    * fresh index). The fold pays off only where the diff is as small
+    * as its scope ([[runScoped]]).
     */
-  private def dirSizesMaintained(spark: SparkSession, idx: ParquetIndex,
-      previous: Option[DataFrame], current: DataFrame,
-      prevToken: String): DataFrame = {
+  private def rollupRecomputed(spark: SparkSession, idx: ParquetIndex,
+      current: DataFrame): DataFrame = {
     val rs = rollupStore()
-    val next = previous match {
-      case Some(prev) if rs.currentId.isDefined &&
-          readToken(rollupTokenPath).contains(prevToken) =>
-        graft.operators.FsOps.dirRollupFoldAgg(rs.read(spark).get,
-          graft.operators.FsOps.rollupDeltaAgg(
-            Indexer.signedFileChanges(prev, current)))
-          .filter(col("sz") =!= 0L || col("fc") =!= 0L)
-      case _ =>
-        graft.operators.FsOps.rollupOf(
-          current.filter(col("type") === "file")
-            .select(col("filepath"), col("size_bytes")))
-    }
-    rs.write(next)
+    rs.write(graft.operators.FsOps.rollupOf(
+      current.filter(col("type") === "file")
+        .select(col("filepath"), col("size_bytes"))))
     writeToken(rollupTokenPath, Indexer.corpusToken(idx))
     rs.read(spark).get
   }
@@ -475,13 +463,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
       if (readToken(rollupTokenPath)
           .contains(Indexer.corpusToken(idx)) && rs.currentId.isDefined)
         rs.read(spark).get
-      else {
-        rs.write(graft.operators.FsOps.rollupOf(
-          after.filter(col("type") === "file")
-            .select(col("filepath"), col("size_bytes"))))
-        writeToken(rollupTokenPath, Indexer.corpusToken(idx))
-        rs.read(spark).get
-      }
+      else rollupRecomputed(spark, idx, after)
     }
     // directories whose totals moved: the ancestors of the signed
     // change feed — inside OR above the scope
@@ -499,7 +481,11 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
 
     admin.foreach(a => EsAdmin.ensureIndex(a, cfg.esIndex))
     val sink = new EsSink(transport.get, cfg.esBatchSize)
-    val (nLinks, links) = refreshedLinks(spark, toPublish)
+    // reconcile = false: toPublish is the delta, not the corpus — an
+    // orphan reconcile against it would tombstone every link outside
+    // the delta (the next full run reconciles against the corpus)
+    val (nLinks, links) = refreshedLinks(spark, toPublish,
+      reconcile = false)
     val sizes = sizesAll.select(col("directory_path").as("dp"),
       col("sz").as("total_size"))
     val s = sink.bulkIndex(buildDocs(toPublish, sizes, links),
@@ -582,46 +568,45 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
 
   /** Direct-link refresh of `entries`' files (when enabled and a fetch
     * client is wired — the reference's DirectLinkManager step,
-    * main.py:190-192), then the links store's aligned columns keyed
-    * file_id (`dl`/`fse`/`act`/`amt`), read AFTER the refresh's append
-    * so they include this batch. The links store lives beside the files
-    * snapshots, like the reference's sibling direct_links DB
+    * main.py:190-192), then the links' aligned columns keyed file_id
+    * (`dl`/`fse`/`act`/`amt`) as of after the refresh: the frame
+    * [[LinkRefresh.refreshIndexMor]] returns, so the publish reads the
+    * links from the refresh's own checkpointed pass instead of
+    * resolving the store a second time. The links store lives beside
+    * the files snapshots, like the reference's sibling direct_links DB
     * (main.py:124). MERGE-ON-READ: a refresh appends only its fetched
     * batch (+ orphan delete keys) to the store's log instead of
     * rewriting the snapshot — write cost ∝ stale set, not store size.
+    * `reconcile` drops links of files missing from `entries`, so only a
+    * caller passing the whole corpus may set it.
     * Returns (links fetched, aligned frame).
     */
-  private def refreshedLinks(spark: SparkSession,
-      entries: DataFrame): (Long, DataFrame) = {
+  private def refreshedLinks(spark: SparkSession, entries: DataFrame,
+      reconcile: Boolean): (Long, DataFrame) = {
     val linksIdx = new ParquetIndex(s"${cfg.indexRoot}/links",
       writeFiles = cfg.snapshotFiles)
-    val n = (cfg.getDirectLinks, linkFetch) match {
+    val (n, links) = (cfg.getDirectLinks, linkFetch) match {
       case (true, Some(fetch)) => step(spark, "link refresh") {
         LinkRefresh.refreshIndexMor(spark,
           entries.filter(col("type") === "file"), linksIdx, fetch,
-          skipPatterns = cfg.skipPatterns)
+          skipPatterns = cfg.skipPatterns, reconcile = reconcile)
       }
-      case _ => 0L
+      case _ => (0L, LinkRefresh.align(
+        LinkRefresh.readLinksMor(spark, linksIdx).getOrElse(
+          LinkRefresh.emptyLinks(spark))))
     }
-    (n, LinkRefresh.align(
-      LinkRefresh.readLinksMor(spark, linksIdx).getOrElse(
-        LinkRefresh.emptyLinks(spark)))
-      .select(col("file_id"), col("direct_link").as("dl"),
-        col("fsentry_id").as("fse"),
-        col("api_creation_time").as("act"),
-        col("api_modified_time").as("amt")))
+    (n, links.select(col("file_id"), col("direct_link").as("dl"),
+      col("fsentry_id").as("fse"),
+      col("api_creation_time").as("act"),
+      col("api_modified_time").as("amt")))
   }
 
   /** Label the jobs of one pipeline step (optimization guide §1.5 —
     * job descriptions are thread-local, so concurrent steps label
     * correctly); always restored so callers' own labels survive.
     */
-  private def step[T](spark: SparkSession, name: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"indexer: $name")
-    try body finally sc.setJobDescription(prev)
-  }
+  private def step[T](spark: SparkSession, name: String)(body: => T): T =
+    graft.Bench.labelled(spark, s"indexer: $name")(body)
 
   def run(spark: SparkSession): RunReport = {
     val t0 = System.nanoTime()
@@ -638,10 +623,6 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // full-index write instead of merge-write → read-back → semi-join
     // write (at 100 TB that write is the dominant cost; this halves it).
     val idx = store()
-    // rollup validity anchor: the corpus identity BEFORE this run's
-    // write — the stored dirSizes snapshot is incremental-foldable
-    // only if it was computed against exactly this state
-    val prevCorpusToken = Indexer.corpusToken(idx)
     // Upgrade path: a snapshot written before path-partitioning lacks
     // the p0 column — derive it so the merge schemas line up and the
     // NEXT write migrates the store to the partitioned layout.
@@ -660,9 +641,9 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // keeps its stored row, including last_seen).
     // writeKeepingLog, not write: `previous` (a readMor over the old
     // base + its pending event-driven log) is ALSO the input of the
-    // deletion anti-join and the rollup maintainer's diff below —
-    // both lazy — so the consumed log's files must outlive them; the
-    // sweep runs at the end of this method.
+    // deletion anti-join below, which runs after the write, so the
+    // consumed log's files must outlive it; the sweep runs at the end
+    // of this method.
     val snapId = step(spark, "scan + merge + snapshot write") {
       idx.writeKeepingLog(previous match {
         case None => entries
@@ -685,14 +666,20 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // their straggler tails instead of running serially before them.
     // Awaited before anything consumes it (bulk delete / the report),
     // and before sweepConsumedLogs — the error contract is unchanged.
+    // The removed-id count rides the checkpoint job as an observation:
+    // no separate count action, inside or outside the step.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val removedIdsF: Future[Option[DataFrame]] = Future {
+    val removedF: Future[Option[(DataFrame, Long)]] = Future {
       previous.map(prev =>
         step(spark, "deletion reconcile") {
-          prev.join(current.select("relative_path"), Seq("relative_path"),
-            "left_anti").select("id").localCheckpoint(true)
+          val n = Observation()
+          val ids = prev.join(current.select("relative_path"),
+              Seq("relative_path"), "left_anti").select("id")
+            .observe(n, count(lit(1)).as("n"))
+            .localCheckpoint(true)
+          (ids, n.get("n").asInstanceOf[Long])
         })
     }
 
@@ -714,14 +701,14 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
         // correct — `step` sets the THREAD-local description inside
         // each future. Await rethrows the first failure, preserving
         // the sequential error contract.
-        val linksF = Future { refreshedLinks(spark, current) }
-        // sizes from the MAINTAINED rollup snapshot: incremental fold
-        // of the merge's own change feed when valid, recompute
-        // otherwise — never the per-run ancestor explode by default
+        val linksF = Future {
+          refreshedLinks(spark, current, reconcile = true)
+        }
+        // sizes from the stored rollup, recomputed over the committed
+        // corpus (rollupRecomputed says why a full run never folds)
         val sizesF = Future {
           step(spark, "dirSizes rollup maintenance") {
-            dirSizesMaintained(spark, idx, previous, current,
-              prevCorpusToken)
+            rollupRecomputed(spark, idx, current)
           }.select(col("directory_path").as("dp"),
             col("sz").as("total_size"))
         }
@@ -734,11 +721,12 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
         // delete failures count toward esFailed — a rejected deletion
         // leaves a stale searchable document the next run's anti-join
         // will NOT retry, so it must be visible in the run report
-        val delFailed = Await.result(removedIdsF, Duration.Inf)
-          .filter(_.count() > 0)
-          .map(ids => step(spark, "publish: bulk delete") {
-            sink.bulkDelete(ids, cfg.esIndex, "id").failed
-          }).getOrElse(0L)
+        val delFailed = Await.result(removedF, Duration.Inf)
+          .collect { case (ids, n) if n > 0 =>
+            step(spark, "publish: bulk delete") {
+              sink.bulkDelete(ids, cfg.esIndex, "id").failed
+            }
+          }.getOrElse(0L)
         // the full publish IS the watermark's definition — ES saw the
         // whole resolved corpus; advance only on a clean send so a
         // failed batch keeps catch-up/scoped publishes honest
@@ -750,12 +738,12 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
 
     // the await pins the deletion anti-join's execution BEFORE the log
     // sweep below (futures memoize, so the ES branch's earlier await
-    // and this one see the same checkpointed frame)
-    val removedCount = Await.result(removedIdsF, Duration.Inf)
-      .map(_.count()).getOrElse(0L)
-    // every frame derived from the pre-write resolve (deletion
-    // anti-join, rollup diff, publish) has executed — the superseded
-    // MOR log is now safe to drop (see writeKeepingLog above)
+    // and this one see the same checkpointed frame and count)
+    val removedCount = Await.result(removedF, Duration.Inf)
+      .map(_._2).getOrElse(0L)
+    // every frame derived from the pre-write resolve (the deletion
+    // anti-join) has executed — the superseded MOR log is now safe to
+    // drop (see writeKeepingLog above)
     idx.sweepConsumedLogs()
     val elapsed = (System.nanoTime() - t0) / 1e9
     RunReport(RunStats.collect(obs, elapsed), indexed, esFailed,
@@ -882,14 +870,11 @@ object IndexerCli {
           else args.toSeq
         IndexerConfig.load(lines)
       }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // this machine's cores (or the master SPARK_MASTER names), and as
+    // many shuffle partitions
+    val spark = graft.Bench.buildSession(
+      Runtime.getRuntime.availableProcessors.toString,
+      sys.env.get("SPARK_MASTER"))
     // ST4: graceful shutdown — stop cleanly on SIGTERM/SIGINT.
     sys.addShutdownHook { spark.stop() }
     val esUrl = sys.env.get("GRAFT_ES_URL")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Globs
@@ -17,8 +17,10 @@ import graft.sinks.ParquetIndex
   * semantics of direct_links.py:117-122).
   *
   * Scale notes: the fetch is `mapPartitions` — one client per partition,
-  * no driver round-trip; the queue is a single left-join + filter; the
-  * merge is [[Merge]]'s one key shuffle. Nothing here collects.
+  * no driver round-trip; the copy-on-write queue is a single left-join +
+  * filter and its merge is [[Merge]]'s one key shuffle; the
+  * merge-on-read refresh the pipeline runs is one full-outer join whose
+  * checkpoint job also fetches. Nothing here collects.
   */
 object LinkRefresh {
 
@@ -85,16 +87,9 @@ object LinkRefresh {
   trait Fetch extends ((String, Option[String])
     => Option[FetchedLink]) with Serializable
 
-  private[pipeline] final case class Fetched(
-      file_id: String, direct_link: String, link_type: String,
-      fsentry_id: Option[String],
-      api_creation_time: Option[java.sql.Timestamp],
-      api_modified_time: Option[java.sql.Timestamp])
-
   /** `merged` = the full LWW-merged links frame (the copy-on-write
     * write-back); `batch` = just the freshly fetched rows in store
-    * schema (what the merge-on-read path appends); `refreshed` = the
-    * batch's row count.
+    * schema; `refreshed` = the batch's row count.
     */
   final case class Result(merged: DataFrame, refreshed: Long,
       batch: DataFrame)
@@ -134,27 +129,19 @@ object LinkRefresh {
       now: java.sql.Timestamp = java.sql.Timestamp.from(
         java.time.Instant.now())): Result = {
     import spark.implicits._
-    val queue = staleQueue(files, links, skipPatterns)
-    val linkType = s"v$version"
-    val fetched = queue
-      .select(col("id"), col("filepath"), col("fsentry_id"))
-      .as[(String, String, Option[String])]
-      .mapPartitions { it => // one client per partition
-        it.flatMap { case (id, fp, cachedFse) =>
-          fetch(fp, cachedFse).map { f =>
-            Fetched(id, f.directLink, linkType, f.fsentryId,
-              f.apiCreationTime, f.apiModifiedTime)
-          }
-        }
-      }
-      .toDF()
-      .withColumn("fsentry_id", col("fsentry_id").cast("string"))
-      .withColumn("last_updated", lit(now))
+    // each queued key marked stale, with no stored row to keep (the
+    // merge below keeps those) and its cached fsentry_id
+    val queued = staleQueue(files, links, skipPatterns).select(
+      Seq(col("id"), col("filepath")) ++ schema.fields.map(f =>
+        if (f.name == "fsentry_id") col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)) :+
+        lit(Kind.Stale).as("state"): _*)
+    val batch = fetchStale(queued.as[Marked], fetch, version, now)
+      .select(links.columns.map(col).toIndexedSeq: _*)
       // eager localCheckpoint: the HTTP fetch runs exactly ONCE, here —
       // neither the refreshed-count action nor the merge's shuffle can
       // re-trigger it (same fetch-once discipline as RestWalker)
       .localCheckpoint(true)
-    val batch = fetched.select(links.columns.map(col).toIndexedSeq: _*)
     // J2 LWW on file_id: a fetched row always replaces the stored one
     // (its last_updated is `now`, but batchWinsTies guards equal stamps)
     val merged = Merge.merge(links, batch, "file_id", "last_updated",
@@ -233,6 +220,25 @@ object LinkRefresh {
     * (read amplification stays bounded; ParquetIndex measures the
     * amortization in MorIndexSpec/PERF.md).
     *
+    * ONE PASS over the store: the MOR view is resolved once and
+    * full-outer-joined with `files` on the file id; each key is marked
+    * stale (no link, or one older than its file — never a skip-matched
+    * file), orphan (its file vanished; only with `reconcile` over a
+    * stored view) or kept, the stale keys alone are fetched, and the
+    * result is checkpointed in ONE job — the fetch-once discipline of
+    * [[refresh]] (no later action can re-run a fetch), with the
+    * fetched and orphan counts riding that job as an observation. A
+    * failed fetch keeps the key's old row.
+    *
+    * Returns (links fetched, the post-refresh links frame): the kept
+    * rows plus each stale key's fetched-or-old row, in [[schema]]. It
+    * equals [[readLinksMor]] read after the refresh, row for row
+    * (LinkRefreshSpec), but is built from the checkpointed pass, so a
+    * consumer (the publish's link join) pays no second resolve.
+    * `reconcile = false` leaves links of files outside `files` alive
+    * and in the returned frame — for a caller whose `files` is a
+    * delta, not the corpus.
+    *
     * A store with a pre-API-timestamp schema takes the copy-on-write
     * path once (appendDelta requires base-schema parity; the CoW write
     * IS the migration), then appends thereafter.
@@ -247,37 +253,131 @@ object LinkRefresh {
       now: java.sql.Timestamp = java.sql.Timestamp.from(
         java.time.Instant.now()),
       reconcile: Boolean = true,
-      checkpointEvery: Int = 16): Long = {
+      checkpointEvery: Int = 16): (Long, DataFrame) = {
+    import spark.implicits._
     val stored = readLinksMor(spark, linksIndex)
-    if (stored.exists(_.columns.toSeq != schema.fieldNames.toSeq))
-      return refreshIndex(spark, files, linksIndex, fetch, version,
+    if (stored.exists(_.columns.toSeq != schema.fieldNames.toSeq)) {
+      val n = refreshIndex(spark, files, linksIndex, fetch, version,
         skipPatterns, now, reconcile)
+      return (n, align(readLinksMor(spark, linksIndex)
+        .getOrElse(emptyLinks(spark))))
+    }
     val links = align(stored.getOrElse(emptyLinks(spark)))
-    val r = refresh(spark, files, links, fetch, version, skipPatterns, now)
+    val skipped =
+      if (skipPatterns.isEmpty) lit(false)
+      else col("filepath").substr(lit(2), lit(Int.MaxValue))
+        .rlike(Globs.skipRegex(skipPatterns))
+    // staleQueue's predicate; a skip-matched file with no link has
+    // nothing to keep or fetch and drops out before the marking
+    val state =
+      when(col("id").isNull, lit(
+        if (reconcile && stored.nonEmpty) Kind.Orphan else Kind.Keep))
+        .when(!skipped && (col("file_id").isNull ||
+          col("last_updated") < col("modified_time")), lit(Kind.Stale))
+        .otherwise(lit(Kind.Keep))
+    val counts = Observation()
+    val out = files.select("id", "filepath", "modified_time")
+      .join(links, col("id") === col("file_id"), "full_outer")
+      .filter(col("file_id").isNotNull || !skipped)
+      .select((Seq("id", "filepath") ++ schema.fieldNames).map(col) :+
+        state.as("state"): _*)
+      .as[Marked]
+      .transform(fetchStale(_, fetch, version, now))
+      .observe(counts,
+        count_if(col("kind").isin(Kind.Fetched, Kind.Superseded))
+          .as("fetched"),
+        count_if(col("kind") === Kind.Orphan).as("orphans"))
+      // eager localCheckpoint: the HTTP fetch runs exactly ONCE, here
+      // — neither the appends nor the returned frame's consumers can
+      // re-trigger it (same fetch-once discipline as RestWalker)
+      .localCheckpoint(true)
+    def observed(name: String): Long = counts.get(name).asInstanceOf[Long]
+    val cols = schema.fieldNames.toIndexedSeq.map(col)
+    val refreshed = observed("fetched")
     // write ∝ batch: the fetched rows append as one log delta (the
     // first-ever batch just becomes the base snapshot inside
-    // appendDelta); r.batch is already eagerly materialized by
-    // refresh(), so it cannot observe the log it is appended to
-    if (r.refreshed > 0)
+    // appendDelta); `out` is checkpointed, so it cannot observe the
+    // log it is appended to
+    if (refreshed > 0)
       linksIndex.appendDelta(spark,
-        r.batch.select(schema.fieldNames.map(col).toIndexedSeq: _*)): Unit
-    if (reconcile && stored.nonEmpty) {
-      // links whose file vanished from the scan → key-only delete
-      // sidecar (readMor snapshots the log manifest eagerly, so this
-      // plan reads the pre-append log state; orphans and the delta's
-      // file_ids are disjoint by construction — fetched ⊆ files)
-      val keep = files.select(col("id")).distinct()
-      val orphans = links
-        .join(keep, links("file_id") === keep("id"), "left_anti")
-        .select("file_id")
-        .localCheckpoint(true)
-      if (orphans.count() > 0)
-        linksIndex.appendDelete(spark, orphans, "file_id"): Unit
-    }
+        out.filter(col("kind").isin(Kind.Fetched, Kind.Superseded))
+          .select(cols: _*)): Unit
+    // links whose file vanished from the scan → key-only delete
+    // sidecar (orphans and the delta's file_ids are disjoint by
+    // construction — fetched ⊆ files); the orphan set is a handful of
+    // keys, so one partition writes it with no distinct shuffle
+    if (observed("orphans") > 0)
+      linksIndex.appendDelete(spark,
+        out.filter(col("kind") === Kind.Orphan).select("file_id")
+          .coalesce(1), "file_id"): Unit
     if (linksIndex.currentId.exists(cid =>
         linksIndex.morEntries(cid).size >= checkpointEvery))
       linksIndex.checkpointMor(spark, "file_id", "last_updated",
         batchWinsTies = true): Unit
-    r.refreshed
+    (refreshed, out.filter(col("kind").isin(Kind.Keep, Kind.Fetched))
+      .select(cols: _*))
+  }
+
+  // what the marking says of a key, then what the refresh did with it:
+  // kept (stored row stays), orphan (stored row deleted), fetched
+  // (delta row, the key's new winner), superseded (delta row that
+  // loses the store's LWW to a stored row stamped after `now`, which
+  // stays kept)
+  private object Kind {
+    val Stale = "stale"
+    val Keep = "keep"
+    val Orphan = "orphan"
+    val Fetched = "fetched"
+    val Superseded = "superseded"
+  }
+
+  /** Fetch `marked`'s stale keys, one client per partition, into the
+    * rows [[LinkRow.of]] leaves.
+    */
+  private def fetchStale(marked: Dataset[Marked], fetch: Fetch,
+      version: Int, now: java.sql.Timestamp): Dataset[LinkRow] = {
+    import marked.sparkSession.implicits._
+    val linkType = s"v$version"
+    marked.mapPartitions(_.flatMap(LinkRow.of(_, fetch, linkType, now)))
+  }
+
+  /** One key of the refresh's full-outer join: the file (null for an
+    * orphan) and its stored link row (null for a file with no link),
+    * with its marking.
+    */
+  private[pipeline] final case class Marked(
+      id: String, filepath: String, file_id: String, direct_link: String,
+      link_type: String, fsentry_id: String,
+      api_creation_time: java.sql.Timestamp,
+      api_modified_time: java.sql.Timestamp,
+      last_updated: java.sql.Timestamp, state: String)
+
+  /** A links row in [[schema]] order, with what the refresh did to it. */
+  private[pipeline] final case class LinkRow(
+      file_id: String, direct_link: String, link_type: String,
+      fsentry_id: String, api_creation_time: java.sql.Timestamp,
+      api_modified_time: java.sql.Timestamp,
+      last_updated: java.sql.Timestamp, kind: String)
+
+  private[pipeline] object LinkRow {
+    /** The rows one marked key leaves; only a stale key is fetched. */
+    def of(m: Marked, fetch: Fetch, linkType: String,
+        now: java.sql.Timestamp): Seq[LinkRow] = {
+      def old(kind: String) = Seq(LinkRow(m.file_id, m.direct_link,
+        m.link_type, m.fsentry_id, m.api_creation_time,
+        m.api_modified_time, m.last_updated, kind))
+      if (m.state != Kind.Stale) old(m.state)
+      else fetch(m.filepath, Option(m.fsentry_id)) match {
+        case None => if (m.file_id == null) Nil else old(Kind.Keep)
+        case Some(f) =>
+          // the store's LWW rule: last_updated, then the later log
+          // generation — so a stored row loses unless stamped after now
+          val oldWins = m.last_updated != null && m.last_updated.after(now)
+          LinkRow(m.id, f.directLink, linkType, f.fsentryId.orNull,
+            f.apiCreationTime.orNull, f.apiModifiedTime.orNull, now,
+            if (oldWins) Kind.Superseded else Kind.Fetched) +:
+            (if (oldWins) old(Kind.Keep) else Nil)
+      }
+    }
   }
 }

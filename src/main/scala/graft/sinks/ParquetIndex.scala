@@ -232,9 +232,9 @@ final class ParquetIndex(root: String, keep: Int = 2,
 
   /** [[write]] MINUS the consumed-log sweep — for a caller (the full
     * pipeline run) that still holds OTHER lazy frames over the
-    * pre-write `readMor` resolve: the deletion anti-join and the
-    * rollup maintainer's prev-vs-current diff execute after the
-    * commit, and a sweep here would delete the old base's log files
+    * pre-write `readMor` resolve: the deletion anti-join executes
+    * after the commit, and a sweep here would delete the old base's
+    * log files
     * out from under them (FAILED_READ_FILE mid-run after a scoped
     * publish — IndexerSpec pins the sequence). The caller must
     * [[sweepConsumedLogs]] once those frames have executed; a crash

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** The stage recorder behind Bench, QueryTime and ScaleGate: after the
   * window settles, an exchange's shuffle write is read back in full, a
@@ -37,5 +37,21 @@ class StageRecorderSpec extends SparkSpecBase {
     assert(write > 0 && read == write && spill == 0, ex.mkString("\n"))
     assert(StageRecorder.moved(mo) == Seq(0L, 0L, 0L), mo.mkString("\n"))
     assert(rows.forall(_.tasks > 0), rows)
+  }
+
+  test("a timed query run labels every stage it runs with the query " +
+      "name, and restores the caller's label") {
+    val q = "recorder spec: query"
+    // an exchange and a broadcast join: adaptive execution submits
+    // their stages from its own threads
+    def query = spark.range(0, 20000, 1, 4).groupBy(col("id") % 100)
+      .count().toDF("k", "n")
+      .join(broadcast(spark.range(0, 50).toDF("k")), "k")
+    val (_, _, _, stages) = Bench.timedMinOf2(spark, q,
+      () => Bench.checksum(query))
+    assert(stages.nonEmpty && stages.forall(_.job == q),
+      StageRecorder.table(stages).mkString("\n"))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description")
+      == null)
   }
 }

@@ -2,8 +2,18 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path}
 
-import graft.SparkSpecBase
+import graft.{SparkSpecBase, StageRecorder}
 import graft.sinks.TransportProbe
+
+/** A link fetch that counts its calls (tasks run in this JVM). */
+private object CountingLinkFetch extends LinkRefresh.Fetch {
+  val calls = new java.util.concurrent.atomic.AtomicLong
+  def apply(fp: String, cached: Option[String]) = {
+    calls.incrementAndGet()
+    Some(LinkRefresh.FetchedLink(s"https://fs.example$fp",
+      cached.orElse(Some("fse"))))
+  }
+}
 
 /** End-to-end pipeline lifecycle (main.py:245-365 parity): scan → merge
   * → reconcile → publish, in both modes, with re-run update/delete
@@ -141,8 +151,8 @@ class IndexerSpec extends SparkSpecBase {
     assert(projDoc.isDefined, "ancestor outside the scope not republished")
   }
 
-  test("rollup fold across full runs: second run's dir sizes come from " +
-      "the PATCHED snapshot and match a from-scratch pipeline") {
+  test("rollup across full runs: the second run recomputes the stored " +
+      "dir sizes and matches a from-scratch pipeline") {
     import scala.jdk.CollectionConverters._
     val root = mkTree()
     val idxRoot = Files.createTempDirectory("idxfold").toString
@@ -151,8 +161,8 @@ class IndexerSpec extends SparkSpecBase {
     val indexer = new Indexer(cfg, Some(TransportProbe.transport))
     TransportProbe.reset()
     indexer.run(spark)
-    // mutate, full re-run: the maintainer folds prev→current instead
-    // of re-exploding (same token discipline the scoped path uses)
+    // mutate, full re-run: the stored rollup is rebuilt over the new
+    // corpus and re-stamped (same token discipline as the scoped path)
     Files.delete(root.resolve("proj/sub/b.log"))
     Files.writeString(root.resolve("proj/a.txt"), "aaaaaaaaaaaa")
     TransportProbe.reset()
@@ -525,6 +535,81 @@ class IndexerSpec extends SparkSpecBase {
     val r3 = new Indexer(cfg, Some(TransportProbe.transport),
       linkFetch = Some(fetch)).run(spark)
     assert(r3.linksRefreshed == 1)
+  }
+
+  /** 15 files, 5 in each of the top-level dirs a, b and c. */
+  private def mkLinkTree(): Path = {
+    val root = Files.createTempDirectory("idxlinks")
+    for (d <- Seq("a", "b", "c"); i <- 0 until 5) {
+      Files.createDirectories(root.resolve(d))
+      Files.writeString(root.resolve(s"$d/f$i.txt"), s"$d$i")
+    }
+    root
+  }
+
+  test("a catch-up publish keeps the links of files outside its delta, " +
+      "so the next unchanged full run fetches nothing") {
+    val root = mkLinkTree()
+    val idxRoot = Files.createTempDirectory("idxlinksstore").toString
+    val indexer = new Indexer(IndexerConfig(root.toString, idxRoot),
+      Some(TransportProbe.transport), linkFetch = Some(CountingLinkFetch))
+    def live = LinkRefresh.readLinksMor(spark,
+      new graft.sinks.ParquetIndex(s"$idxRoot/links")).get.count()
+    def fetched(body: => Any): Long = {
+      CountingLinkFetch.calls.set(0)
+      body
+      CountingLinkFetch.calls.get
+    }
+    TransportProbe.reset()
+    assert(fetched(indexer.run(spark)) == 15 && live == 15)
+    Thread.sleep(1100) // fs mtime granularity can be 1 s
+    Files.writeString(root.resolve("a/f1.txt"), "changed")
+    assert(fetched(indexer.publishScoped(spark, Seq("a"))) == 1)
+    assert(live == 15, "the catch-up tombstoned links outside its delta")
+    assert(fetched(indexer.run(spark)) == 0)
+    assert(live == 15)
+  }
+
+  /** Jobs per step of a warm elasticsearch-mode rescan of
+    * [[mkLinkTree]] after one delete, one rewrite and one add — each
+    * with why it costs that many. Adaptive execution runs every
+    * exchange and broadcast as a job of its own.
+    */
+  private val RescanJobs: Map[String, (Int, String)] = Map(
+    "scan + merge + snapshot write" -> (4, "the merge join's two key " +
+      "exchanges, the write's partition exchange, and the write"),
+    "deletion reconcile" -> (2, "the anti-join's build side and its " +
+      "checkpoint; the removed-id count rides it as an observation"),
+    "link refresh" -> (5, "the links-vs-files full-outer join's two " +
+      "exchanges, the one checkpoint that marks every key and fetches " +
+      "the stale ones, the delta write and the orphan sidecar write"),
+    "dirSizes rollup maintenance" -> (2, "the recompute's partial-" +
+      "aggregate exchange and the rollup write — no prev-vs-current diff"),
+    "publish: bulk index" -> (3, "the rollup and link broadcasts and " +
+      "the bulk sink; the links come from the refresh's checkpoint"),
+    "publish: bulk delete" -> (1, "the bulk sink over the checkpointed " +
+      "removed ids"))
+
+  test("a warm rescan runs the pinned jobs per step, none of them " +
+      "unlabelled") {
+    val root = mkLinkTree()
+    val idxRoot = Files.createTempDirectory("idxjobs").toString
+    val indexer = new Indexer(IndexerConfig(root.toString, idxRoot),
+      Some(TransportProbe.transport), linkFetch = Some(CountingLinkFetch))
+    TransportProbe.reset()
+    indexer.run(spark)
+    Thread.sleep(1100) // fs mtime granularity can be 1 s
+    Files.delete(root.resolve("b/f0.txt"))
+    Files.writeString(root.resolve("a/f1.txt"), "changed")
+    Files.writeString(root.resolve("c/new.txt"), "new")
+    val (r, stages) = StageRecorder.recording(spark)(indexer.run(spark))
+    assert(r.removed == 1 && r.linksRefreshed == 2)
+    val jobs = stages.groupBy(_.job).map { case (label, ss) =>
+      label -> ss.map(_.jobId).distinct.size }
+    val table = StageRecorder.table(stages).mkString("\n")
+    assert(!jobs.contains(""), s"unlabelled jobs:\n$table")
+    assert(jobs == RescanJobs.map { case (k, (n, _)) => s"indexer: $k" -> n },
+      s"${jobs.toSeq.sorted.mkString("\n")}\n$table")
   }
 
   test("change-feed consumer maintains an aggregate across pipeline runs") {

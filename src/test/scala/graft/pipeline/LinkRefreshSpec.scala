@@ -163,8 +163,8 @@ class LinkRefreshSpec extends SparkSpecBase {
 
     val nC = LinkRefresh.refreshIndex(spark, filesDf, idxC, FakeFetch,
       version = 2, skipPatterns = Seq("tmp-*"), now = now)
-    val nM = LinkRefresh.refreshIndexMor(spark, filesDf, idxM, FakeFetch,
-      version = 2, skipPatterns = Seq("tmp-*"), now = now)
+    val (nM, _) = LinkRefresh.refreshIndexMor(spark, filesDf, idxM,
+      FakeFetch, version = 2, skipPatterns = Seq("tmp-*"), now = now)
     assert(nC == nM)
     // the MOR run appended to the log — the base snapshot was NOT
     // rewritten (write ∝ batch, the entire point)
@@ -179,8 +179,8 @@ class LinkRefreshSpec extends SparkSpecBase {
     assert(view(LinkRefresh.readLinksMor(spark, idxM).get) ==
       view(idxC.read(spark).get))
     // steady state: re-run fetches nothing and appends nothing
-    val n2 = LinkRefresh.refreshIndexMor(spark, filesDf, idxM, FakeFetch,
-      version = 2, skipPatterns = Seq("tmp-*"), now = now)
+    val (n2, _) = LinkRefresh.refreshIndexMor(spark, filesDf, idxM,
+      FakeFetch, version = 2, skipPatterns = Seq("tmp-*"), now = now)
     assert(n2 == 0)
     assert(idxM.morEntries(baseId.get).size == entries.size)
     // folding the log reproduces the CoW snapshot exactly
@@ -188,6 +188,59 @@ class LinkRefreshSpec extends SparkSpecBase {
       batchWinsTies = true): Unit
     assert(idxM.morEntries(idxM.currentId.get).isEmpty)
     assert(view(idxM.read(spark).get) == view(idxC.read(spark).get))
+  }
+
+  test("refreshIndexMor returns the store's post-refresh view, row for " +
+      "row: fresh store, stale, failed, skipped and orphan rows, " +
+      "reconcile off, and a checkpointEvery fold") {
+    // f6: stale (its file moved after its link's stamp) but the stored
+    // stamp is later than `now`, so the store's LWW keeps the old row
+    val files = filesDf.union(spark.createDataFrame(Seq(
+      ("f6", "/b/six.txt", ts("2026-09-01 00:00:00"))))
+      .toDF(filesDf.columns.toIndexedSeq: _*))
+    val links = linksDf.union(spark.createDataFrame(Seq(
+      ("f6", "https://fs.example/future6", "v2", Some("fse-6"),
+        None: Option[Timestamp], None: Option[Timestamp],
+        ts("2026-08-15 00:00:00")),
+      ("f9", "https://fs.example/dead", "v2", None: Option[String],
+        None: Option[Timestamp], None: Option[Timestamp],
+        ts("2026-07-01 00:00:00"))))
+      .toDF(linksDf.columns.toIndexedSeq: _*))
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    def check(name: String, seed: Option[DataFrame], fetched: Long,
+        reconcile: Boolean = true,
+        every: Int = 16): (Seq[String], ParquetIndex) = {
+      val idx = new ParquetIndex(
+        Files.createTempDirectory("links-view").toString)
+      seed.foreach(idx.write)
+      val (n, after) = LinkRefresh.refreshIndexMor(spark, files, idx,
+        FakeFetch, version = 2, skipPatterns = Seq("tmp-*"), now = now,
+        reconcile = reconcile, checkpointEvery = every)
+      assert(n == fetched, name)
+      val got = rows(after)
+      assert(got == rows(LinkRefresh.readLinksMor(spark, idx)
+        .getOrElse(LinkRefresh.emptyLinks(spark))), name)
+      (got, idx)
+    }
+    def ids(rs: Seq[String]) = rs.map(_.takeWhile(_ != '|')).toSet
+    // fresh store: every file but the skipped f5 is queued; f4 fails
+    // and has no old row, so it has no link at all
+    assert(ids(check("fresh store", None, 4)._1) ==
+      Set("f1", "f2", "f3", "f6"))
+    // f1, f3 and f6 fetched; f4 failed (old row kept), f5 skipped, f2
+    // fresh, f9 orphaned
+    val (full, _) = check("stored", Some(links), 3)
+    assert(ids(full) == Set("f1", "f2", "f3", "f4", "f5", "f6"))
+    assert(full.exists(_.startsWith("f4|https://fs.example/old4")))
+    assert(full.exists(_.startsWith("f6|https://fs.example/future6")))
+    assert(ids(check("reconcile off", Some(links), 3,
+      reconcile = false)._1) == ids(full) + "f9")
+    // the fetched delta and the orphan sidecar reach 2 log entries:
+    // the log folds into a new base, and the frame still equals it
+    val (folded, idx) = check("fold", Some(links), 3, every = 2)
+    assert(idx.morEntries(idx.currentId.get).isEmpty)
+    assert(folded == full)
   }
 
   test("links for files gone from the scan are reconciled away") {
