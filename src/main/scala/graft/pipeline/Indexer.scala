@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,7 +131,9 @@ final case class RunReport(
   * single key-shuffles ([[ParquetIndex]]), the rollup is the
   * ancestor-explode aggregation, and the ES publish is a
   * `foreachPartition` bulk sink. Nothing materializes on the driver but
-  * the run counters (collected via `observe`, A8).
+  * the run counters (collected via `observe`, A8). There is ONE publish
+  * path (`publish`): the full [[run]] sends the corpus through it, the
+  * catch-up ([[publishScoped]]/[[publishCatchUp]]) the delta.
   */
 final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     admin: Option[EsAdmin.Transport] = None,
@@ -139,9 +145,9 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
   // ------------------------------------------------------------------ //
   // Stored dirSizes rollup: a snapshot of (directory_path, sz, fc)     //
   // lives beside the index, stamped with the corpus token it matches.  //
-  // A full run recomputes it; a scoped refresh PATCHES it with the     //
-  // scope's signed change feed (FsOps.dirRollupFoldAgg), and the       //
-  // catch-up publish reads it as-is while its token is current.        //
+  // A scoped refresh PATCHES it with the scope's signed change feed    //
+  // (FsOps.dirRollupFoldAgg); the publish reads it as-is while its     //
+  // token is current and recomputes it otherwise (`publish`).          //
   // ------------------------------------------------------------------ //
 
   private def rollupStore(): ParquetIndex =
@@ -184,30 +190,17 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
   private def esWatermarkPath =
     java.nio.file.Paths.get(cfg.indexRoot, "_es_published")
 
-  /** Rebuild the stored rollup from `current` (the corpus `idx`
-    * holds now), stamp its token, and return the (directory_path, sz,
-    * fc) frame. A full run always takes this path rather than folding
-    * the run's signed change feed: in a full run that feed is itself a
-    * full-outer diff of the previous and current corpus — a two-sided
-    * corpus-sized shuffle — while the recompute's partial aggregate
-    * ships only one row per directory per task (2 jobs, the same as a
-    * fresh index). The fold pays off only where the diff is as small
-    * as its scope ([[runScoped]]).
+  /** Whether the stored rollup holds the totals of the corpus `idx`
+    * resolves to now (its token matches the store's).
     */
-  private def rollupRecomputed(spark: SparkSession, idx: ParquetIndex,
-      current: DataFrame): DataFrame = {
-    val rs = rollupStore()
-    rs.write(graft.operators.FsOps.rollupOf(
-      current.filter(col("type") === "file")
-        .select(col("filepath"), col("size_bytes"))))
-    writeToken(rollupTokenPath, Indexer.corpusToken(idx))
-    rs.read(spark).get
-  }
+  private def rollupCurrent(idx: ParquetIndex): Boolean =
+    rollupStore().currentId.isDefined &&
+      readToken(rollupTokenPath).contains(Indexer.corpusToken(idx))
 
   /** The full document field surface of the reference's bulk payload
-    * (elasticsearch_integration.py:98-112 + the mapping's fields) —
-    * shared by the full publish and [[publishScoped]] so the two can
-    * never drift. `sizes` is (dp, total_size); `links` the aligned
+    * (elasticsearch_integration.py:98-112 + the mapping's fields),
+    * built in the one `publish` that the full run and the catch-up
+    * share. `sizes` is (dp, total_size); `links` the aligned
     * link columns keyed file_id.
     */
   private def buildDocs(current: DataFrame, sizes: DataFrame,
@@ -299,8 +292,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // frame. Only needed when the rollup can be patched incrementally
     // (`foldable` is loop-invariant: an incremental patch re-stamps
     // the token current, a skipped patch leaves it stale).
-    val foldable = rollupStore().currentId.isDefined &&
-      readToken(rollupTokenPath).contains(Indexer.corpusToken(idx))
+    val foldable = rollupCurrent(idx)
     val preAll: Option[DataFrame] =
       if (!foldable) None
       else Some(idx.readMor(spark, "relative_path", "modified_time").get
@@ -369,6 +361,7 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     * scope's delete sidecar plus its scan — names exactly the scope's
     * keys, so the catch-up's watermark-prefix rows are the scope's
     * pre-refresh rows and its post-state rows are the scope's rows.
+    * The delta goes out through the full run's own `publish`.
     */
   def publishScoped(spark: SparkSession,
       changedDirs: Seq[String]): RunReport = {
@@ -402,7 +395,8 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     * unpublished churn (docs for keys that changed, deletes for keys
     * that vanished, re-publishes for ancestors whose totals moved) —
     * never the corpus. No-op (zero ES traffic) when the watermark is
-    * already current.
+    * already current. The delta goes out through the full run's own
+    * `publish` (links, dir sizes, bulk sends, watermark).
     *
     * Requires the watermarked state to live in the CURRENT base's log
     * prefix (token = baseId + log length). A fold between publishes is
@@ -444,68 +438,41 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
           s"store $cur) — no per-key churn record to replay; run a " +
           "full elasticsearch-mode run() to re-sync")
     }
-    // keys the unpublished log suffix touched, and their rows at the
-    // watermarked state (base + log prefix) — both ∝ the churn
-    val touched = idx.morTouchedKeys(spark, "relative_path",
-      from = publishedLen).get.localCheckpoint(true)
-    val prevScope = idx.readMorPrefix(spark, "relative_path",
-      "modified_time", batchWinsTies = false, upTo = publishedLen).get
-      .join(touched, Seq("relative_path"), "left_semi")
-      .localCheckpoint(true)
-    val after = idx.readMor(spark, "relative_path", "modified_time").get
-      .localCheckpoint(true)
-    val curScope = after.join(touched, Seq("relative_path"), "left_semi")
-      .localCheckpoint(true)
-    // the rollup may have been stale before this run (e.g. index-only
-    // interludes) — reconcile it now so the publish reads real totals
-    val sizesAll = {
-      val rs = rollupStore()
-      if (readToken(rollupTokenPath)
-          .contains(Indexer.corpusToken(idx)) && rs.currentId.isDefined)
-        rs.read(spark).get
-      else rollupRecomputed(spark, idx, after)
+    val (toPublish, obs, after, removed) = step(spark, "catch-up delta") {
+      // keys the unpublished log suffix touched, and their rows at the
+      // watermarked state (base + log prefix) — both ∝ the churn
+      val touched = idx.morTouchedKeys(spark, "relative_path",
+        from = publishedLen).get.localCheckpoint(true)
+      val prevScope = idx.readMorPrefix(spark, "relative_path",
+        "modified_time", batchWinsTies = false, upTo = publishedLen).get
+        .join(touched, Seq("relative_path"), "left_semi")
+        .localCheckpoint(true)
+      val after = idx.readMor(spark, "relative_path", "modified_time").get
+        .localCheckpoint(true)
+      val curScope = after.join(touched, Seq("relative_path"), "left_semi")
+        .localCheckpoint(true)
+      // directories whose totals moved: the ancestors of the signed
+      // change feed — inside OR above the scope
+      val movedDirs = graft.operators.FsOps.rollupDeltaAgg(
+          Indexer.signedFileChanges(prevScope, curScope))
+        .select(col("directory_path").as("filepath"))
+      val dirRows = after.filter(col("type") === "directory")
+        .join(movedDirs, Seq("filepath"), "left_semi")
+      // the observed counters ride the publish delta itself (A8 — one
+      // pass, collected when the publish consumes the docs)
+      val (toPublish, obs) = RunStats.observed(
+        curScope.unionByName(dirRows)
+          .dropDuplicates("relative_path").localCheckpoint(true),
+        typeCol = "type")
+      (toPublish, obs, after, Indexer.removedIds(prevScope, curScope))
     }
-    // directories whose totals moved: the ancestors of the signed
-    // change feed — inside OR above the scope
-    val movedDirs = graft.operators.FsOps.rollupDeltaAgg(
-        Indexer.signedFileChanges(prevScope, curScope))
-      .select(col("directory_path").as("filepath"))
-    val dirRows = after.filter(col("type") === "directory")
-      .join(movedDirs, Seq("filepath"), "left_semi")
-    // the observed counters ride the publish delta itself (A8 — one
-    // pass, collected when the bulk sink consumes the docs)
-    val (toPublish, obs) = RunStats.observed(
-      curScope.unionByName(dirRows)
-        .dropDuplicates("relative_path").localCheckpoint(true),
-      typeCol = "type")
-
-    admin.foreach(a => EsAdmin.ensureIndex(a, cfg.esIndex))
-    val sink = new EsSink(transport.get, cfg.esBatchSize)
     // reconcile = false: toPublish is the delta, not the corpus — an
     // orphan reconcile against it would tombstone every link outside
     // the delta (the next full run reconciles against the corpus)
-    val (nLinks, links) = refreshedLinks(spark, toPublish,
-      reconcile = false)
-    val sizes = sizesAll.select(col("directory_path").as("dp"),
-      col("sz").as("total_size"))
-    val s = sink.bulkIndex(buildDocs(toPublish, sizes, links),
-      cfg.esIndex, "id")
-    val removedIds = prevScope
-      .join(curScope, Seq("relative_path"), "left_anti").select("id")
-      .localCheckpoint(true)
-    val removedCount = removedIds.count()
-    val delFailed =
-      if (removedCount > 0)
-        sink.bulkDelete(removedIds, cfg.esIndex, "id").failed
-      else 0L
-    // ES now reflects the post-transition resolved state — advance the
-    // watermark, but only on a zero-failure send: a rejected batch
-    // keeps it behind so publishCatchUp re-sends (idempotent by id)
-    if (s.failed + delFailed == 0L)
-      writeToken(esWatermarkPath, Indexer.corpusToken(idx))
+    val (indexed, failed, nLinks) = publish(spark, idx, transport.get,
+      toPublish, after, Some(removed), reconcile = false)
     val elapsed = (System.nanoTime() - t0) / 1e9
-    RunReport(RunStats.collect(obs, elapsed), s.indexed,
-      s.failed + delFailed, removedCount,
+    RunReport(RunStats.collect(obs, elapsed), indexed, failed, removed._2,
       idx.currentId.getOrElse(""), nLinks)
   }
 
@@ -601,6 +568,69 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
       col("api_modified_time").as("amt")))
   }
 
+  /** The one ES publish, shared by the full [[run]] (`docs` = `corpus`
+    * = the committed corpus) and the catch-up (`docs` = the delta,
+    * `corpus` = the resolved store): ensure the index, refresh the
+    * links of `docs`' files and settle the dir sizes, bulk-index `docs`
+    * enriched with both, bulk-delete `removed` (ids, count), and
+    * advance the ES watermark iff every send succeeded. `removed` is
+    * by-name, so a reconcile still running in the caller overlaps the
+    * link refresh, the rollup and the bulk index. `reconcile` drops
+    * links of files missing from `docs` ([[refreshedLinks]]). Returns
+    * (indexed, failed, links fetched).
+    */
+  private def publish(spark: SparkSession, idx: ParquetIndex,
+      t: EsSink.Transport, docs: DataFrame, corpus: DataFrame,
+      removed: => Option[(DataFrame, Long)],
+      reconcile: Boolean): (Long, Long, Long) = {
+    // create-before-bulk (elasticsearch_integration.py:27,30-41): a
+    // fresh cluster gets the explicit mapping, incl. the
+    // path_hierarchy analyzer — NOT dynamic mappings
+    admin.foreach(a => EsAdmin.ensureIndex(a, cfg.esIndex))
+    val sink = new EsSink(t, cfg.esBatchSize)
+    // Link refresh and dir sizes touch disjoint stores, so their jobs
+    // run concurrently from two driver threads (guide §2.6): each step's
+    // straggler tail back-fills with the other's tasks; `step` labels
+    // the thread-local description, Await rethrows the first failure.
+    val linksF = Future { refreshedLinks(spark, docs, reconcile) }
+    // the stored rollup while its token is current, else a recompute
+    // over `corpus` — always in a full run, which commits a new base:
+    // the explode's partial aggregate ships one row per directory per
+    // task (2 jobs), where folding a full run's change feed would
+    // shuffle a corpus-sized prev-vs-current diff ([[runScoped]] folds)
+    val sizesF = Future {
+      step(spark, "dirSizes rollup maintenance") {
+        val rs = rollupStore()
+        if (!rollupCurrent(idx)) {
+          rs.write(graft.operators.FsOps.rollupOf(
+            corpus.filter(col("type") === "file")
+              .select(col("filepath"), col("size_bytes"))))
+          writeToken(rollupTokenPath, Indexer.corpusToken(idx))
+        }
+        rs.read(spark).get.select(col("directory_path").as("dp"),
+          col("sz").as("total_size"))
+      }
+    }
+    val (nLinks, links) = Await.result(linksF, Duration.Inf)
+    val sizes = Await.result(sizesF, Duration.Inf)
+    val s = step(spark, "publish: bulk index") {
+      sink.bulkIndex(buildDocs(docs, sizes, links), cfg.esIndex, "id")
+    }
+    // delete failures count toward the failed total — a rejected
+    // deletion leaves a stale searchable document the next run's
+    // anti-join will NOT retry, so it must be visible in the report
+    val delFailed = removed.collect { case (ids, n) if n > 0 =>
+      step(spark, "publish: bulk delete") {
+        sink.bulkDelete(ids, cfg.esIndex, "id").failed
+      }
+    }.getOrElse(0L)
+    // advance the watermark only on a zero-failure send: a rejected
+    // batch keeps it behind so publishCatchUp re-sends (idempotent by id)
+    if (s.failed + delFailed == 0L)
+      writeToken(esWatermarkPath, Indexer.corpusToken(idx))
+    (s.indexed, s.failed + delFailed, nLinks)
+  }
+
   /** Label the jobs of one pipeline step (optimization guide §1.5 —
     * job descriptions are thread-local, so concurrent steps label
     * correctly); always restored so callers' own labels survive.
@@ -666,73 +696,19 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
     // their straggler tails instead of running serially before them.
     // Awaited before anything consumes it (bulk delete / the report),
     // and before sweepConsumedLogs — the error contract is unchanged.
-    // The removed-id count rides the checkpoint job as an observation:
-    // no separate count action, inside or outside the step.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val removedF: Future[Option[(DataFrame, Long)]] = Future {
       previous.map(prev =>
         step(spark, "deletion reconcile") {
-          val n = Observation()
-          val ids = prev.join(current.select("relative_path"),
-              Seq("relative_path"), "left_anti").select("id")
-            .observe(n, count(lit(1)).as("n"))
-            .localCheckpoint(true)
-          (ids, n.get("n").asInstanceOf[Long])
+          Indexer.removedIds(prev, current)
         })
     }
 
-    // ES publish (elasticsearch mode): direct-link refresh then the
-    // enrichment join + formatting (J4/J8/F3/F11) and bulk index;
-    // deletions → bulk delete (S11).
+    // ES publish (elasticsearch mode): the whole committed corpus, its
+    // deletions awaited only after the bulk index
     val (indexed, esFailed, linksRefreshed) = (cfg.mode, transport) match {
       case ("elasticsearch", Some(t)) =>
-        // create-before-bulk (elasticsearch_integration.py:27,30-41): a
-        // fresh cluster gets the explicit mapping, incl. the
-        // path_hierarchy analyzer — NOT dynamic mappings
-        admin.foreach(a => EsAdmin.ensureIndex(a, cfg.esIndex))
-        val sink = new EsSink(t, cfg.esBatchSize)
-        // Link refresh and rollup maintenance are INDEPENDENT (disjoint
-        // stores; both only read `current`), so their jobs run
-        // concurrently from two driver threads (guide §2.6 "overlap
-        // independent jobs"): the scheduler back-fills one step's
-        // straggler tail with the other's tasks. Job labels stay
-        // correct — `step` sets the THREAD-local description inside
-        // each future. Await rethrows the first failure, preserving
-        // the sequential error contract.
-        val linksF = Future {
-          refreshedLinks(spark, current, reconcile = true)
-        }
-        // sizes from the stored rollup, recomputed over the committed
-        // corpus (rollupRecomputed says why a full run never folds)
-        val sizesF = Future {
-          step(spark, "dirSizes rollup maintenance") {
-            rollupRecomputed(spark, idx, current)
-          }.select(col("directory_path").as("dp"),
-            col("sz").as("total_size"))
-        }
-        val (nLinks, links) = Await.result(linksF, Duration.Inf)
-        val sizes = Await.result(sizesF, Duration.Inf)
-        val docs = buildDocs(current, sizes, links)
-        val s = step(spark, "publish: bulk index") {
-          sink.bulkIndex(docs, cfg.esIndex, "id")
-        }
-        // delete failures count toward esFailed — a rejected deletion
-        // leaves a stale searchable document the next run's anti-join
-        // will NOT retry, so it must be visible in the run report
-        val delFailed = Await.result(removedF, Duration.Inf)
-          .collect { case (ids, n) if n > 0 =>
-            step(spark, "publish: bulk delete") {
-              sink.bulkDelete(ids, cfg.esIndex, "id").failed
-            }
-          }.getOrElse(0L)
-        // the full publish IS the watermark's definition — ES saw the
-        // whole resolved corpus; advance only on a clean send so a
-        // failed batch keeps catch-up/scoped publishes honest
-        if (s.failed + delFailed == 0L)
-          writeToken(esWatermarkPath, Indexer.corpusToken(idx))
-        (s.indexed, s.failed + delFailed, nLinks)
+        publish(spark, idx, t, current, current,
+          Await.result(removedF, Duration.Inf), reconcile = true)
       case _ => (0L, 0L, 0L) // index-only
     }
 
@@ -764,6 +740,22 @@ object Indexer {
     idx.currentId
       .map(id => s"$id+${idx.morEntries(id).length}")
       .getOrElse("empty")
+
+  /** Ids of the keys in `prev` that `cur` no longer holds (the
+    * anti-join on `relative_path`), checkpointed — the deletions a
+    * publish sends. Their count rides the checkpoint job as an
+    * observation, so no separate count action runs. Returns (ids,
+    * count).
+    */
+  private[pipeline] def removedIds(prev: DataFrame,
+      cur: DataFrame): (DataFrame, Long) = {
+    val n = Observation()
+    val ids = prev.join(cur.select("relative_path"), Seq("relative_path"),
+        "left_anti").select("id")
+      .observe(n, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    (ids, n.get("n").asInstanceOf[Long])
+  }
 
   /** The rows a scoped event for `d` refreshes: d's OWN row (its mtime
     * moves with child churn; it may also be a file or a symlink) and

@@ -821,10 +821,9 @@ final class ParquetIndex(root: String, keep: Int = 2,
     }
 
   /** Read the MOR view: base + log resolved to one row per live key.
-    * Plan shape: map-only unions, ONE key-shuffled aggregate for the
-    * winner, one co-partitioned left join against the (tiny, distinct)
-    * delete keys — independent of log length; log dirs are narrow
-    * appended parquet.
+    * Plan shape: map-only unions, one left-anti join against the
+    * (tiny) delete keys, ONE key-shuffled aggregate for the winner —
+    * independent of log length; log dirs are narrow appended parquet.
     */
   def readMor(spark: SparkSession, keyCol: String, tsCol: String,
       batchWinsTies: Boolean = false): Option[DataFrame] =
@@ -871,14 +870,15 @@ final class ParquetIndex(root: String, keep: Int = 2,
         }.reduce(_ unionByName _)
         val dels = gens.collect { case (("d", name), i) =>
           readMorDir(spark, cid, name)
-            .select(col(keyCol), lit((i + 1).toLong).as("__dgen"))
+            .select(col(keyCol).as("__dk"), lit((i + 1).toLong).as("__dgen"))
         }
-        val lastDel = dels.reduceOption(_ unionByName _)
-          .map(_.groupBy(keyCol).agg(max("__dgen").as("__dgen")))
-        val alive = lastDel match {
+        // an upsert is alive iff no delete of its key comes later in
+        // the log
+        val alive = dels.reduceOption(_ unionByName _) match {
           case None => ups
-          case Some(d) => ups.join(d, Seq(keyCol), "left")
-            .filter(col("__dgen").isNull || col("__gen") > col("__dgen"))
+          case Some(d) => ups.join(d,
+            col(keyCol) === col("__dk") && col("__dgen") > col("__gen"),
+            "left_anti")
         }
         val tieOrd = if (batchWinsTies) col("__gen") else -col("__gen")
         alive.groupBy(col(keyCol).as("__k"))

@@ -76,14 +76,15 @@ class IndexerSpec extends SparkSpecBase {
     assert(sent.contains("\"size\":"))
   }
 
-  /** Replay captured bulk NDJSON into the ES state it produces:
-    * id → doc JSON (index overwrites, delete removes) — the reference
-    * cluster's end state without a cluster. `last_seen` is scan-time
-    * by CONTRACT (the reference restamps it on every reconciliation),
-    * so it is stripped before comparison.
+  /** Replay captured bulk NDJSON into the ES state it produces, starting
+    * from `from`: id → doc JSON (index overwrites, delete removes) — the
+    * reference cluster's end state without a cluster. `last_seen` is
+    * scan-time by CONTRACT (the reference restamps it on every
+    * reconciliation), so it is stripped before comparison.
     */
-  private def esState(calls: Seq[Seq[String]]): Map[String, String] = {
-    var st = Map.empty[String, String]
+  private def esState(calls: Seq[Seq[String]],
+      from: Map[String, String] = Map.empty): Map[String, String] = {
+    var st = from
     calls.flatten.foldLeft(Option.empty[String]) {
       (pendingId, line) =>
         if (line.startsWith("{\"index\":")) {
@@ -610,6 +611,166 @@ class IndexerSpec extends SparkSpecBase {
     assert(!jobs.contains(""), s"unlabelled jobs:\n$table")
     assert(jobs == RescanJobs.map { case (k, (n, _)) => s"indexer: $k" -> n },
       s"${jobs.toSeq.sorted.mkString("\n")}\n$table")
+  }
+
+  /** The jobs `body` ran per job label ("" = unlabelled), and their
+    * stage table for a failure message.
+    */
+  private def jobsPerLabel[T](body: => T): (T, Map[String, Int], String) = {
+    val (r, stages) = StageRecorder.recording(spark)(body)
+    (r, stages.groupBy(_.job).map { case (label, ss) =>
+      label -> ss.map(_.jobId).distinct.size },
+      StageRecorder.table(stages).mkString("\n"))
+  }
+
+  /** [[RescanJobs]] for a SECOND warm rescan, whose links store still
+    * holds the first rescan's orphan delete sidecar: the links resolve
+    * drops the sidecar's keys with one anti-join, so the pending delete
+    * costs it one broadcast job and no key aggregate.
+    */
+  private val SecondRescanJobs: Map[String, (Int, String)] = RescanJobs +
+    ("link refresh" -> (6, "the first rescan's 5, plus the broadcast of " +
+      "the pending delete sidecar the links resolve anti-joins against"))
+
+  test("a second warm rescan, over the first rescan's link delete " +
+      "sidecar, runs the pinned jobs per step") {
+    val root = mkLinkTree()
+    val idxRoot = Files.createTempDirectory("idxjobs2").toString
+    val indexer = new Indexer(IndexerConfig(root.toString, idxRoot),
+      Some(TransportProbe.transport), linkFetch = Some(CountingLinkFetch))
+    TransportProbe.reset()
+    indexer.run(spark)
+    Thread.sleep(1100) // fs mtime granularity can be 1 s
+    Files.delete(root.resolve("b/f0.txt"))
+    Files.writeString(root.resolve("a/f1.txt"), "changed")
+    Files.writeString(root.resolve("c/new.txt"), "new")
+    indexer.run(spark) // appends b/f0's link to a delete sidecar
+    Thread.sleep(1100)
+    Files.delete(root.resolve("b/f1.txt"))
+    Files.writeString(root.resolve("a/f2.txt"), "changed")
+    Files.writeString(root.resolve("c/new2.txt"), "new")
+    val (r, jobs, table) = jobsPerLabel(indexer.run(spark))
+    assert(r.removed == 1 && r.linksRefreshed == 2)
+    assert(jobs == SecondRescanJobs.map { case (k, (n, _)) =>
+      s"indexer: $k" -> n }, s"${jobs.toSeq.sorted.mkString("\n")}\n$table")
+  }
+
+  /** Jobs per step of a [[Indexer.publishCatchUp]] after a bare
+    * [[Indexer.runScoped]] of `a` in [[mkLinkTree]] (one delete, one
+    * rewrite, one add) — each with why it costs that many. The
+    * runScoped patched the stored rollup and stamped its token, so the
+    * publish reads it as-is: no `dirSizes rollup maintenance` job.
+    */
+  private val CatchUpJobs: Map[String, (Int, String)] = Map(
+    "catch-up delta" -> (17, "touched keys: the distinct's exchange and " +
+      "its checkpoint (2); the watermarked rows: the touched-keys " +
+      "broadcast and the checkpoint (2); the current resolve: the delete " +
+      "sidecar's broadcast, the winner aggregate's exchange and the " +
+      "checkpoint (3); the current rows: broadcast and checkpoint (2); " +
+      "the delta: the change feed's full-outer join (2 exchanges), the " +
+      "ancestor aggregate's exchange, the moved-dirs broadcast, the " +
+      "dedup exchange and the checkpoint (6); removed ids: the anti-" +
+      "join's broadcast and the checkpoint, which carries the count (2)"),
+    "link refresh" -> (4, "the links-vs-delta full-outer join's two " +
+      "exchanges, the mark-and-fetch checkpoint and the delta write; no " +
+      "orphan sidecar, since a delta must not reconcile"),
+    "publish: bulk index" -> (3, "the rollup and link broadcasts and " +
+      "the bulk sink"),
+    "publish: bulk delete" -> (1, "the bulk sink over the checkpointed " +
+      "removed ids"))
+
+  test("a catch-up after a bare runScoped runs the pinned jobs per " +
+      "step, none of them unlabelled") {
+    val root = mkLinkTree()
+    val idxRoot = Files.createTempDirectory("idxjobscu").toString
+    val indexer = new Indexer(IndexerConfig(root.toString, idxRoot),
+      Some(TransportProbe.transport), linkFetch = Some(CountingLinkFetch))
+    TransportProbe.reset()
+    indexer.run(spark)
+    Thread.sleep(1100) // fs mtime granularity can be 1 s
+    Files.delete(root.resolve("a/f0.txt"))
+    Files.writeString(root.resolve("a/f1.txt"), "changed")
+    Files.writeString(root.resolve("a/new.txt"), "new")
+    indexer.runScoped(spark, Seq("a"))
+    val (r, jobs, table) = jobsPerLabel(indexer.publishCatchUp(spark))
+    assert(r.removed == 1 && r.linksRefreshed == 2 && r.esFailed == 0)
+    assert(!jobs.contains(""), s"unlabelled jobs:\n$table")
+    assert(jobs == CatchUpJobs.map { case (k, (n, _)) =>
+      s"indexer: $k" -> n }, s"${jobs.toSeq.sorted.mkString("\n")}\n$table")
+  }
+
+  private def docId(filepath: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(filepath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
+  test("a rejected batch keeps the watermark behind: the next scoped " +
+      "publish refuses, and the catch-up re-sends to full parity") {
+    import scala.jdk.CollectionConverters._
+    val root = mkTree()
+    val idxRoot = Files.createTempDirectory("idxreject").toString
+    val cfg = IndexerConfig(root.toString, idxRoot,
+      getDirectLinks = false)
+    val indexer = new Indexer(cfg, Some(TransportProbe.transport))
+    TransportProbe.reset()
+    indexer.run(spark)
+    val base = esState(TransportProbe.calls.asScala.toSeq)
+    Files.delete(root.resolve("proj/sub/b.log"))
+    Files.writeString(root.resolve("proj/sub/n.txt"), "nn")
+    // the cluster rejects the new file's doc; everything else lands
+    val rejected = docId("/proj/sub/n.txt")
+    TransportProbe.reset()
+    TransportProbe.failIds = Set(rejected)
+    val rep = indexer.publishScoped(spark, Seq("proj/sub"))
+    assert(rep.esFailed > 0)
+    val partial =
+      esState(TransportProbe.calls.asScala.toSeq, from = base) - rejected
+    TransportProbe.reset()
+    val ex = intercept[IllegalArgumentException] {
+      indexer.publishScoped(spark, Seq("proj/sub"))
+    }
+    assert(ex.getMessage.contains("publishCatchUp"))
+    val cu = indexer.publishCatchUp(spark)
+    assert(cu.esFailed == 0)
+    val healed = esState(TransportProbe.calls.asScala.toSeq, from = partial)
+    assert(healed.contains(rejected))
+    TransportProbe.reset()
+    val refRoot = Files.createTempDirectory("idxrejectref").toString
+    new Indexer(IndexerConfig(root.toString, refRoot,
+      getDirectLinks = false), Some(TransportProbe.transport)).run(spark)
+    assert(healed == esState(TransportProbe.calls.asScala.toSeq),
+      "the catch-up after a rejected batch diverged from a full republish")
+  }
+
+  test("a catch-up over a stale rollup token recomputes the dir sizes: " +
+      "ES and the stored rollup match a from-scratch pipeline") {
+    import scala.jdk.CollectionConverters._
+    val root = mkTree()
+    val idxRoot = Files.createTempDirectory("idxstale").toString
+    val cfg = IndexerConfig(root.toString, idxRoot,
+      getDirectLinks = false)
+    val indexer = new Indexer(cfg, Some(TransportProbe.transport))
+    TransportProbe.reset()
+    indexer.run(spark)
+    val base = esState(TransportProbe.calls.asScala.toSeq)
+    // the token no longer names the store: runScoped leaves the rollup
+    // unpatched, and the catch-up must not read its old totals
+    Files.delete(java.nio.file.Paths.get(idxRoot, "dirsizes",
+      "_corpus_token"))
+    Files.delete(root.resolve("proj/sub/b.log"))
+    Files.writeString(root.resolve("proj/sub/n.txt"), "nnnnnnnnn")
+    indexer.runScoped(spark, Seq("proj/sub"))
+    TransportProbe.reset()
+    assert(indexer.publishCatchUp(spark).esFailed == 0)
+    val state = esState(TransportProbe.calls.asScala.toSeq, from = base)
+    TransportProbe.reset()
+    val refRoot = Files.createTempDirectory("idxstaleref").toString
+    new Indexer(IndexerConfig(root.toString, refRoot,
+      getDirectLinks = false), Some(TransportProbe.transport)).run(spark)
+    assert(state == esState(TransportProbe.calls.asScala.toSeq),
+      "the catch-up over a stale rollup diverged from a full republish")
+    assert(storeState(idxRoot)._2 == storeState(refRoot)._2,
+      "the stored rollup differs from a recompute")
   }
 
   test("change-feed consumer maintains an aggregate across pipeline runs") {
