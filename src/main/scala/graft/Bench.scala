@@ -178,7 +178,8 @@ object Bench {
 
   /** Warmup once, time twice, every run's jobs labelled `label` (the
     * query name); returns (min sec, checksum, BOTH raw run
-    * times, the stages of the second run). The raw times are emitted
+    * times, the stages of the second run, the classes code generation
+    * compiled during it). The raw times are emitted
     * beside the min in the bench JSON so a noisy capture
     * self-documents at query granularity: two far-apart runs mean
     * co-tenant interference, two close runs mean the min is
@@ -187,11 +188,12 @@ object Bench {
     * last timed run's stages measure every run's movement: a query
     * that's fast at sf0.1 but shuffles its whole input is a 100 TB
     * risk the seconds alone don't show, and a non-zero spill says the
-    * partition sizing didn't hold.
+    * partition sizing didn't hold. A warm run that still compiles
+    * says the codegen cache did not keep the query's classes.
     */
   private[graft] def timedMinOf2(spark: SparkSession, label: String,
       run: () => Long, minOf: Int = 2)
-      : (Double, Long, Seq[Double], Seq[StageRow]) = labelled(spark, label) {
+      : (Double, Long, Seq[Double], Seq[StageRow], Long) = labelled(spark, label) {
     run() // warmup: codegen, broadcast, shuffle files
     // minOf-1 leading timed runs, then ONE stage-recorded run. minOf=3
     // is the busy-capture mode: when the machine is co-tenant-loaded
@@ -205,11 +207,17 @@ object Bench {
       ((System.nanoTime() - t0) / 1e9, chk)
     }
     val lead = (1 until minOf).map(_ => timed())
+    val c0 = compiles
     val (last, stages) = StageRecorder.recording(spark)(timed())
     val runs = lead :+ last
     val (sec, chk) = runs.minBy(_._1)
-    (sec, chk, runs.map(_._1), stages)
+    (sec, chk, runs.map(_._1), stages, compiles - c0)
   }
+
+  /** Classes code generation has compiled in this JVM so far. */
+  private[graft] def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
 
   private def loadavg1m: Double = try {
     Files.readString(Paths.get("/proc/loadavg")).split("\\s+")(0).toDouble
@@ -493,7 +501,7 @@ object Bench {
         f"[bench] mid-run co-tenant CPU $preCoTenant%.2f > " +
           f"$NoisyCoTenantCpu%.2f before $name — min-of-3 for this query")
       val r = try {
-        var (sec, chk, runs, stages) =
+        var (sec, chk, runs, stages, compiled) =
           timedMinOf2(spark, name, () => checksum(fn(spark, benchDir)),
             minOf = if (startNoisy || midNoisy) 3 else 2)
         val prev = prevTimes.get(name)
@@ -511,7 +519,7 @@ object Bench {
             f"2x previous round's $p%.3f s after $extra extra runs")
           flags(name) = (p, sec, extra)
         }
-        Right((sec, chk, runs, StageRecorder.moved(stages)))
+        Right((sec, chk, runs, StageRecorder.moved(stages), compiled))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -519,16 +527,20 @@ object Bench {
       }
       name -> r
     }
-    val ok = results.collect { case (n, Right((s, _, _, _))) => n -> s }
+    val ok = results.collect { case (n, Right((s, _, _, _, _))) => n -> s }
     val qJson = ok.map { case (k, v) => s""""$k":${"%.3f".format(v)}""" }
       .mkString("{", ",", "}")
-    val runsJson = results.collect { case (n, Right((_, _, runs, _))) =>
+    val runsJson = results.collect { case (n, Right((_, _, runs, _, _))) =>
       s""""$n":[${runs.map("%.3f".format(_)).mkString(",")}]"""
     }.mkString("{", ",", "}")
     // per-query [shuffle_read, shuffle_write, spill] MB — the shuffle
     // cost model the seconds don't show (timedMinOf2 doc)
-    val moveJson = results.collect { case (n, Right((_, _, _, mv))) =>
+    val moveJson = results.collect { case (n, Right((_, _, _, mv, _))) =>
       s""""$n":[${mv.map(b => "%.1f".format(b / 1048576.0)).mkString(",")}]"""
+    }.mkString("{", ",", "}")
+    // classes compiled by each query's recorded (warm) run
+    val compilesJson = results.collect { case (n, Right((_, _, _, _, c))) =>
+      s""""$n":$c"""
     }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     val failed = results.collect { case (n, Left(_)) => s""""$n"""" }
@@ -563,7 +575,7 @@ object Bench {
     // budget. The same complete line is also written to
     // target/bench.json, which never truncates.
     val json =
-      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","query_runs":$runsJson,"query_move_mb":$moveJson,"query_flags":$flagJson,"failed":$failed,"resharded":${benchDir != sfDir},"stage_sec":${"%.3f".format(stageSec)},"scan_files":$scanned,"scan_files_per_sec":${"%.0f".format(fps)},"pipeline_files_per_sec":${"%.0f".format(pipeFps)},"pipeline_es_files_per_sec":${"%.0f".format(esFps)},"loadavg_1m":$loadavg,"loadavg_start":$startLoad,"loadavg_peak":${"%.2f".format(peakLoad)},"cotenant_cpu_start":${"%.2f".format(startCoTenant)},"cotenant_cpu_peak":${"%.2f".format(peakCoTenant)},"noisy":$noisy,"cpus":${Runtime.getRuntime.availableProcessors},"queries":$qJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","query_runs":$runsJson,"query_move_mb":$moveJson,"query_compiles":$compilesJson,"query_flags":$flagJson,"failed":$failed,"resharded":${benchDir != sfDir},"stage_sec":${"%.3f".format(stageSec)},"scan_files":$scanned,"scan_files_per_sec":${"%.0f".format(fps)},"pipeline_files_per_sec":${"%.0f".format(pipeFps)},"pipeline_es_files_per_sec":${"%.0f".format(esFps)},"loadavg_1m":$loadavg,"loadavg_start":$startLoad,"loadavg_peak":${"%.2f".format(peakLoad)},"cotenant_cpu_start":${"%.2f".format(startCoTenant)},"cotenant_cpu_peak":${"%.2f".format(peakCoTenant)},"noisy":$noisy,"cpus":${Runtime.getRuntime.availableProcessors},"queries":$qJson,"sf":"$sfDir"}"""
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"), json + "\n")
     println(json)

@@ -9,7 +9,8 @@ package graft
   * its callsite and with the query name as its job label: the "which
   * operator owns the seconds" question every optimization here starts
   * from — and then one JSON line whose `move_mb` is that table's
-  * column sums.
+  * column sums and whose `compiles` counts the classes code generation
+  * compiled during that run.
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
@@ -38,13 +39,13 @@ object QueryTime {
             sfDir
         }
       } else sfDir
-    val (sec, chk, runs, stages) = Bench.timedMinOf2(spark, name,
+    val (sec, chk, runs, stages, compiled) = Bench.timedMinOf2(spark, name,
       () => Bench.checksum(fn(spark, dir)))
     StageRecorder.table(stages).foreach(println)
     val rj = runs.map("%.3f".format(_)).mkString("[", ",", "]")
     val mj = StageRecorder.moved(stages)
       .map(b => "%.1f".format(b / 1048576.0)).mkString("[", ",", "]")
-    println(f"""{"query":"$name","sec":$sec%.3f,"runs":$rj,"move_mb":$mj,"checksum":$chk,"resharded":${dir != sfDir},"sf":"$sfDir"}""")
+    println(f"""{"query":"$name","sec":$sec%.3f,"runs":$rj,"move_mb":$mj,"compiles":$compiled,"checksum":$chk,"resharded":${dir != sfDir},"sf":"$sfDir"}""")
     if (dir != sfDir) Bench.rm(java.nio.file.Paths.get(dir))
     spark.stop()
   }

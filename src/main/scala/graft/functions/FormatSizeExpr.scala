@@ -122,11 +122,43 @@ class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(
       ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    // runs before the session's shared state is built, so the session
+    // conf merges these from the context's
+    org.apache.spark.sql.graft.PlanBridge.activeContextConf
+      .foreach(GraftExtensions.codegenDefaults)
     GraftFunctions.all.foreach(ext.injectFunction)
     // Whole-operator tier: the native per-group top-k planner strategy
     // plus the optimizer rule that rewrites the declarative
     // row_number-filter idiom onto it (graft.plans.GroupTopK*).
     ext.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
     ext.injectOptimizerRule(_ => graft.plans.GroupTopKRewrite)
+  }
+}
+
+object GraftExtensions {
+
+  /** Entries of Spark's JVM-wide cache of compiled generated classes,
+    * against Spark's 100. One pass over every `SparkEntry.queries`
+    * query at sf0.001 compiles 2,725 distinct classes with a large
+    * cache (the 19 headline queries 259, at sf0.01), so at 100 a session
+    * that cycles through its queries evicts each class before it is
+    * asked for again and recompiles it. A second pass compiles 125
+    * more, for sources that inline per-run literals; the LRU cache
+    * evicts those first, as nothing asks for them again. The cache is
+    * built once per JVM, at the first code generation, from the conf
+    * then in effect.
+    */
+  val CodegenCacheEntries = 4000
+
+  /** graft's codegen defaults on `conf`, each kept where the user set
+    * the key already: the cache sized above, and no stage id in
+    * generated class names — the same pipeline at another stage
+    * position, or planned from another thread, then generates the same
+    * source and hits the cache (the `*(n)` ids of explain output stay).
+    */
+  def codegenDefaults(conf: org.apache.spark.SparkConf): Unit = {
+    conf.setIfMissing("spark.sql.codegen.cache.maxEntries",
+      CodegenCacheEntries.toString)
+    conf.setIfMissing("spark.sql.codegen.useIdInClassName", "false")
   }
 }

@@ -274,7 +274,7 @@ object FsOps {
     * every `filepath` — depth ≥ 2 ancestors via a codegen'd
     * `sequence` + `substring_index`, no UDF; a depth-1 path has none.
     */
-  private def ancestorExplode(df: DataFrame,
+  private[graft] def ancestorExplode(df: DataFrame,
       carried: Seq[String]): DataFrame = {
     val depth = length(col("filepath")) -
       length(regexp_replace(col("filepath"), "/", ""))

@@ -439,30 +439,44 @@ final class Indexer(cfg: IndexerConfig, transport: Option[EsSink.Transport],
           "full elasticsearch-mode run() to re-sync")
     }
     val (toPublish, obs, after, removed) = step(spark, "catch-up delta") {
-      // keys the unpublished log suffix touched, and their rows at the
-      // watermarked state (base + log prefix) — both ∝ the churn
+      // keys the unpublished log suffix touched, and with them their
+      // ancestor directories, whose totals the churn may have moved —
+      // every key the delta can publish, ∝ the churn
       val touched = idx.morTouchedKeys(spark, "relative_path",
         from = publishedLen).get.localCheckpoint(true)
+      val scopeKeys = touched.unionByName(
+        graft.operators.FsOps.ancestorExplode(touched.select(
+            concat(lit("/"), col("relative_path")).as("filepath")), Nil)
+          .select(Indexer.relativePath(col("directory_path"))))
+      // their rows at the watermarked state (base + log prefix) and now,
+      // each resolve shuffling only those keys' rows. An untouched key
+      // has the same row in both, so it adds no change and is never a
+      // removal
       val prevScope = idx.readMorPrefix(spark, "relative_path",
-        "modified_time", batchWinsTies = false, upTo = publishedLen).get
-        .join(touched, Seq("relative_path"), "left_semi")
-        .localCheckpoint(true)
+        "modified_time", batchWinsTies = false, upTo = publishedLen,
+        only = Some(scopeKeys)).get.localCheckpoint(true)
+      val curScope = idx.readMor(spark, "relative_path", "modified_time",
+        only = Some(scopeKeys)).get.localCheckpoint(true)
+      // the whole resolved store, lazily: only a stale-rollup recompute
+      // reads it
       val after = idx.readMor(spark, "relative_path", "modified_time").get
-        .localCheckpoint(true)
-      val curScope = after.join(touched, Seq("relative_path"), "left_semi")
-        .localCheckpoint(true)
       // directories whose totals moved: the ancestors of the signed
       // change feed — inside OR above the scope
       val movedDirs = graft.operators.FsOps.rollupDeltaAgg(
           Indexer.signedFileChanges(prevScope, curScope))
-        .select(col("directory_path").as("filepath"))
-      val dirRows = after.filter(col("type") === "directory")
-        .join(movedDirs, Seq("filepath"), "left_semi")
-      // the observed counters ride the publish delta itself (A8 — one
-      // pass, collected when the publish consumes the docs)
+        .select(Indexer.relativePath(col("directory_path")),
+          lit(false).as("__touched"))
+      // the delta: the touched keys' rows and the moved directories'.
+      // The observed counters ride it (A8 — one pass, collected when
+      // the publish consumes the docs)
+      val sent = touched.select(col("relative_path"),
+          lit(true).as("__touched"))
+        .unionByName(movedDirs)
       val (toPublish, obs) = RunStats.observed(
-        curScope.unionByName(dirRows)
-          .dropDuplicates("relative_path").localCheckpoint(true),
+        curScope.join(sent, curScope("relative_path") ===
+            sent("relative_path") &&
+            (sent("__touched") || curScope("type") === "directory"),
+          "left_semi").localCheckpoint(true),
         typeCol = "type")
       (toPublish, obs, after, Indexer.removedIds(prevScope, curScope))
     }
@@ -764,6 +778,12 @@ object Indexer {
     */
   private[pipeline] def inScope(path: Column, d: String): Column =
     path === d || path.startsWith(d + "/")
+
+  /** The store key (`relative_path`) of a '/'-prefixed path
+    * ([[normalize]]).
+    */
+  private def relativePath(filepath: Column): Column =
+    substring(filepath, 2, Int.MaxValue).as("relative_path")
 
   /** The signed per-file change feed of a corpus transition — exactly
     * the merge's reconcile legs, derived with ONE explode-free

@@ -826,8 +826,9 @@ final class ParquetIndex(root: String, keep: Int = 2,
     * independent of log length; log dirs are narrow appended parquet.
     */
   def readMor(spark: SparkSession, keyCol: String, tsCol: String,
-      batchWinsTies: Boolean = false): Option[DataFrame] =
-    readMorPrefix(spark, keyCol, tsCol, batchWinsTies, Int.MaxValue)
+      batchWinsTies: Boolean = false,
+      only: Option[DataFrame] = None): Option[DataFrame] =
+    readMorPrefix(spark, keyCol, tsCol, batchWinsTies, Int.MaxValue, only)
 
   /** Resolve the base + only the FIRST `upTo` log entries — the store's
     * resolved state as of an earlier corpus token over the SAME base
@@ -835,19 +836,29 @@ final class ParquetIndex(root: String, keep: Int = 2,
     * state). The ES catch-up publish diffs this against the full
     * resolve to recover exactly the churn a skipped publish never
     * sent. Same plan shape as [[readMor]] (one winner aggregate).
+    *
+    * `only` (a frame with `keyCol`) resolves just those keys: it is
+    * semi-joined into the base and log scans, below the winner
+    * aggregate, so the resolve shuffles only their rows. (The optimizer
+    * does not push a semi-join on the result that far: the projection
+    * out of the winner struct stops it.)
     */
   def readMorPrefix(spark: SparkSession, keyCol: String, tsCol: String,
-      batchWinsTies: Boolean, upTo: Int): Option[DataFrame] =
+      batchWinsTies: Boolean, upTo: Int,
+      only: Option[DataFrame] = None): Option[DataFrame] =
     currentId.map { cid =>
       import org.apache.spark.sql.functions._
-      val base = readSnapshot(spark, cid)
+      def scoped(df: DataFrame): DataFrame =
+        only.fold(df)(k =>
+          df.join(k.select(keyCol), Seq(keyCol), "left_semi"))
+      val base = scoped(readSnapshot(spark, cid))
       val entries = morEntries(cid).take(upTo)
       if (entries.isEmpty) base
       else {
         val gens = entries.zipWithIndex
         val upFrames = (base, 0L) +: gens.collect {
           case (("u", name), i) =>
-            (readMorDir(spark, cid, name), (i + 1).toLong)
+            (scoped(readMorDir(spark, cid, name)), (i + 1).toLong)
         }
         // resolve over the UNION schema: base columns in order, then
         // each delta's additions in first-seen order (additive

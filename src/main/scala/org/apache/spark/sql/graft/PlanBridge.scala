@@ -7,14 +7,23 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset,
 
 /** The one sanctioned crossing into Spark's `private[sql]` surface:
   * wrapping a hand-built [[LogicalPlan]] back into a user-facing
-  * [[DataFrame]]. Custom logical operators (graft.plans.*) need exactly
+  * [[DataFrame]] (and reaching the running context's live conf).
+  * Custom logical operators (graft.plans.*) need exactly
   * this and nothing else from the internal API, so the bridge is kept to
-  * a single method in a single file under the `org.apache.spark.sql`
+  * a single file under the `org.apache.spark.sql`
   * package (the standard technique for libraries shipping their own plan
   * nodes — the same access path Spark's own `Dataset` transformations
   * use).
   */
 object PlanBridge {
+  /** The live conf of the running [[org.apache.spark.SparkContext]],
+    * which `GraftExtensions` sets its codegen defaults on (Spark's
+    * `getActive` and `conf` are `private[spark]`; the public `getConf`
+    * is a copy).
+    */
+  def activeContextConf: Option[org.apache.spark.SparkConf] =
+    org.apache.spark.SparkContext.getActive.map(_.conf)
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
 

@@ -47,7 +47,7 @@ class StageRecorderSpec extends SparkSpecBase {
     def query = spark.range(0, 20000, 1, 4).groupBy(col("id") % 100)
       .count().toDF("k", "n")
       .join(broadcast(spark.range(0, 50).toDF("k")), "k")
-    val (_, _, _, stages) = Bench.timedMinOf2(spark, q,
+    val (_, _, _, stages, _) = Bench.timedMinOf2(spark, q,
       () => Bench.checksum(query))
     assert(stages.nonEmpty && stages.forall(_.job == q),
       StageRecorder.table(stages).mkString("\n"))
