@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StoreUtil.{exists, readLeg}
+
 /** Durable INCREMENTAL IVF vector index — the ANN twin of
   * [[NearDupIndex]]: centroids and cell postings persist as parquet, new
   * embedding batches assign themselves against the broadcast centroid
@@ -23,8 +25,51 @@ import org.apache.spark.sql.functions._
   * runs one TakeOrderedAndProject. Store compaction of many small
   * appended files is [[graft.sinks.DirCompaction]] (per cell
   * directory, partition layout preserved).
+  *
+  * Lifecycle ([[Tombstones.Lifecycle]]): every serving tier (exact,
+  * ADC, Hamming, matryoshka — single-query and batch) reads
+  * [[servingPostings]], so a deleted or dedup-dropped vector leaves
+  * every top-k at once (`ann_hamming_indexed_deleted` gates it against
+  * a from-scratch oracle on the post-delete corpus). `compact` folds
+  * the postings (cell layout preserved — every surviving row keeps its
+  * cell) and rebuilds the manifest in between the fold and the clear.
+  * The manifest needs no delete-side upkeep: its blooms only
+  * over-approximate membership, and after a fold the "maybe
+  * duplicate" anti-join finds no postings row, so the id re-indexes.
   */
-object AnnIndex {
+object AnnIndex extends Tombstones.Lifecycle {
+
+  protected val idCol = "vec_id"
+  protected val legs = Seq("postings" -> Seq("c_id"))
+
+  /** Manifest id count (a few-row sum) or, pre-manifest, a
+    * footer-stats postings count. The manifest only grows between
+    * compacts — every upsert re-appends its member ids, deletes never
+    * shrink it — which the debt subtraction offsets; [[afterFold]]
+    * resets the drift to zero.
+    */
+  protected def rawRows(spark: SparkSession, dir: String): Long =
+    if (exists(spark, manifestPath(dir)))
+      spark.read.parquet(manifestPath(dir)).agg(sum("n")).head().getLong(0)
+    else spark.read.parquet(s"$dir/postings").count()
+
+  /** TRIM the manifest to the folded postings: between compacts it
+    * over-approximates (upsert re-appends member ids; deletes never
+    * shrink it) — the fold is the natural reset point. Crash-safe: a
+    * crash after the delete leaves NO manifest, and the next update()
+    * bootstraps one from the postings (the tested pre-manifest path);
+    * membership over-approximation in the surviving states costs a
+    * verify scan, never correctness.
+    */
+  override protected def afterFold(spark: SparkSession,
+      dir: String): Unit =
+    if (exists(spark, manifestPath(dir))) {
+      val mp = new org.apache.hadoop.fs.Path(manifestPath(dir))
+      mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(mp, true)
+      appendManifest(spark, dir,
+        spark.read.parquet(s"$dir/postings").select("vec_id"))
+    }
 
   private def vecFns(spark: SparkSession): Unit =
     graft.functions.GraftFunctions.register(spark)
@@ -86,7 +131,7 @@ object AnnIndex {
     // the OLD assignment — searches would probe new cells against
     // stale layout and silently return wrong neighbors. Rebuild =
     // build into a fresh dir (or delete this store first).
-    require(!StoreUtil.exists(spark, s"$dir/postings"),
+    require(!exists(spark, s"$dir/postings"),
       s"build: $dir already has postings — a re-build cannot re-cell " +
         "them (updates skip indexed ids); build into a fresh dir")
     var cents = emb.filter(col("vec_id").between(1, 8))
@@ -122,7 +167,7 @@ object AnnIndex {
   def rebuild(spark: SparkSession, oldDir: String, newDir: String,
       lloydRounds: Int = 3): Unit = {
     vecFns(spark)
-    require(!StoreUtil.exists(spark, s"$newDir/postings"),
+    require(!exists(spark, s"$newDir/postings"),
       s"rebuild: $newDir already has postings — rebuild targets a " +
         "fresh dir (the old store keeps serving until the swap)")
     // tombstoned rows do NOT carry over: rebuild trains on and
@@ -130,7 +175,7 @@ object AnnIndex {
     // metadata eras DO carry over (drop only the derived serving
     // columns — update() re-derives them under the new assignment)
     val emb = Tombstones.minus(spark, oldDir,
-      readPostings(spark, s"$oldDir/postings"), "vec_id",
+      readLeg(spark, s"$oldDir/postings"), "vec_id",
       genCol = Some("gen"))
       .drop(DerivedCols.toSeq: _*)
     var cents = spark.read.parquet(s"$oldDir/centroids")
@@ -165,17 +210,6 @@ object AnnIndex {
     */
   private val DerivedCols =
     Set("pq0", "pq1", "pq2", "pq3", "b_lo", "b_hi", "m16", "gen", "c_id")
-
-  /** Read a postings dir with SCHEMA MERGING: after a metadata-era
-    * evolution the dir holds files of different (additive) widths, and
-    * a plain read would sample one footer — silently dropping a newer
-    * era's columns (or presenting them era-dependently). Merging reads
-    * every footer once per scan; a store that wants the cost back
-    * compacts ([[compact]]/[[graft.sinks.DirCompaction]] rewrite mixed
-    * dirs to the union schema, single era per file).
-    */
-  private def readPostings(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
 
   /** Matryoshka prefix width: the leading dims stored as their own
     * narrow column (`m16`) so stage-one prefix-cosine serving reads
@@ -322,7 +356,7 @@ object AnnIndex {
     */
   private def manifestAntiJoin(spark: SparkSession, dir: String,
       batch: DataFrame, p: DataFrame): DataFrame = {
-    if (!StoreUtil.exists(spark, manifestPath(dir)))
+    if (!exists(spark, manifestPath(dir)))
       appendManifest(spark, dir, p.select("vec_id"))
     val r = batch.agg(min("vec_id"), max("vec_id")).head()
     if (r.isNullAt(0)) return batch // empty batch: nothing to drop
@@ -367,22 +401,17 @@ object AnnIndex {
     * elasticsearch_integration.py:403-409): present ids re-index with
     * the new embedding (re-quantized — the row may move cells), absent
     * or previously-DELETED ids insert, all without a store rewrite and
-    * without a compact between delete and re-add. Mechanism: reserve
-    * the next write generation ([[GenMeta]]), tombstone the batch ids
-    * at `gen - 1` (hides every older row of those ids wherever its
-    * cell is — which is why the vector store upserts via tombstones
-    * rather than a read-side winner fold: cell-partition pruning
-    * would hide a stale sibling cell from any per-probe fold), then
-    * run the normal derive+append pipeline at `gen` with the
-    * membership check skipped (overwrite intent), and COMMIT `gen` to
-    * the watermark last. Write order is the reader-atomicity AND
-    * crash argument, as in [[TermIndex.upsert]]: generation reserves
-    * first (a re-run lands strictly higher), data and tombstone land
-    * next — both INVISIBLE while the watermark sits below `gen`, so a
-    * concurrent reader serves the OLD vector from its old cell, never
-    * a gap and never both generations — and [[GenMeta.commit]]'s
-    * one-file append flips them visible together; a torn upsert's
-    * rows stay invisible until the re-run's commit hides them.
+    * without a compact between delete and re-add. Order, as in every
+    * store ([[Tombstones.Lifecycle]]'s UPSERT ORDER): the derive+append
+    * pipeline ([[ingest]], membership check skipped — overwrite
+    * intent) writes the new rows at a fresh generation FIRST, then the
+    * batch ids are tombstoned at `gen - 1`, then the generation
+    * commits. The tombstone hides every older row of those ids
+    * wherever its cell is — which is why the vector store upserts via
+    * tombstones rather than a read-side winner fold: cell-partition
+    * pruning would hide a stale sibling cell from any per-probe fold.
+    * A concurrent reader serves the OLD vector from its old cell until
+    * the commit, never a gap and never both generations.
     * `ann_hamming_reindexed` gates serving bit-identical to a
     * from-scratch build on the post-upsert corpus. The manifest needs
     * no special handling: upserted ids are members
@@ -390,45 +419,10 @@ object AnnIndex {
     * their manifest row as always.
     */
   def upsert(spark: SparkSession, dir: String, emb: DataFrame,
-      autoFoldAt: Double = AutoFoldAt): Unit = {
-    GenMeta.initCommitted(spark, dir)
-    val g = GenMeta.reserve(spark, dir)
-    ingest(spark, dir, emb, useManifest = true, gen = g,
-      overwrite = true)
-    Tombstones.append(spark, dir, emb.select("vec_id"), "vec_id",
-      gen = g - 1, wgen = g)
-    GenMeta.commit(spark, dir, g)
-    maybeAutoFold(spark, dir, autoFoldAt)
-  }
-
-  /** Tombstone-debt ratio past which [[delete]]/[[upsert]] trigger an
-    * automatic [[compact]] — the [[TermIndex.AutoFoldAt]] twin. Debt
-    * reads cheap: tombstone rows (tiny) over manifest id counts (a
-    * few-row sum) or, pre-manifest, a footer-stats postings count.
-    */
-  val AutoFoldAt = 0.5
-
-  private def maybeAutoFold(spark: SparkSession, dir: String,
-      threshold: Double): Unit = {
-    if (threshold.isInfinite) return
-    val debt = Tombstones.pendingRows(spark, dir)
-    if (debt == 0L) return
-    // LIVE-row proxy: the manifest only ever grows between compacts —
-    // every upsert re-appends rows for already-member ids and deletes
-    // never shrink it — so a raw sum("n") denominator systematically
-    // under-triggers on upsert-heavy stores. Each upsert adds ~1
-    // manifest id AND ~1 tombstone row, so (sum - debt) tracks the
-    // live count (conservative — over-triggering — for re-deletes);
-    // [[compact]] additionally rebuilds the manifest from the folded
-    // postings, resetting the drift to zero.
-    val total =
-      (if (StoreUtil.exists(spark, manifestPath(dir)))
-         spark.read.parquet(manifestPath(dir)).agg(sum("n")).head()
-           .getLong(0)
-       else spark.read.parquet(s"$dir/postings").count()) - debt
-    if (debt.toDouble >= threshold * math.max(total, 1L).toDouble)
-      compact(spark, dir)
-  }
+      autoFoldAt: Double = AutoFoldAt): Unit =
+    upserting(spark, dir, emb, autoFoldAt)(g =>
+      ingest(spark, dir, emb, useManifest = true, gen = g,
+        overwrite = true))
 
   private[operators] def ingest(spark: SparkSession, dir: String, emb: DataFrame,
       useManifest: Boolean, gen: Long, overwrite: Boolean): Unit = {
@@ -439,8 +433,8 @@ object AnnIndex {
     // anti-join — two separate reads would pay partition discovery
     // and footer inference twice per incremental batch
     val postings =
-      if (StoreUtil.exists(spark, postingsPath))
-        Some(readPostings(spark, postingsPath))
+      if (exists(spark, postingsPath))
+        Some(readLeg(spark, postingsPath))
       else None
     postings.foreach { p =>
       // fail fast on a store written before postings carried PQ codes:
@@ -489,8 +483,8 @@ object AnnIndex {
     // four PQ subspace passes — without the checkpoint the anti-join
     // plan (and its postings scan) would re-execute five times.
     // overwrite (upsert) SKIPS the membership check: re-sending a
-    // present id is the intent, and the caller already tombstoned its
-    // older generations
+    // present id is the intent, and the upsert tombstones its older
+    // generations after this write
     val incoming =
       (if (overwrite) emb
        else postings.map(p =>
@@ -508,7 +502,7 @@ object AnnIndex {
     // those ids "definitely new" and append them AGAIN (duplicate
     // vec_ids in top-k). The flag chooses how membership is CHECKED;
     // manifest maintenance follows the store's state.
-    if (useManifest || StoreUtil.exists(spark, manifestPath(dir)))
+    if (useManifest || exists(spark, manifestPath(dir)))
       appendManifest(spark, dir, incoming.select("vec_id"))
     val cents = spark.read.parquet(s"$dir/centroids")
     val byDist = Window.partitionBy("vec_id")
@@ -552,64 +546,6 @@ object AnnIndex {
       .write.mode("append").partitionBy("c_id").parquet(postingsPath)
   }
 
-  /** DELETE vectors from the serving index — the [[TermIndex.delete]]
-    * twin for the ANN store: tombstone ids append under
-    * `dir/tombstones` and every serving tier (exact, ADC, Hamming,
-    * matryoshka — single-query and batch) subtracts them immediately
-    * via [[servingPostings]], so a deleted or dedup-dropped vector
-    * stops appearing in ANY tier's top-k without a store rewrite
-    * (`ann_hamming_indexed_deleted` gates the subtracted read path
-    * against a from-scratch oracle on the post-delete corpus). Rows
-    * physically fold out at the next [[compact]].
-    *
-    * A tombstoned id cannot RE-index through [[update]] ([[update]]'s
-    * membership check — postings anti-join / manifest — still sees
-    * the physical row), but [[upsert]] re-adds it at a fresh write
-    * generation with no compact in between: the tombstone pins the
-    * CURRENT [[GenMeta]] generation, hiding everything written so far
-    * and nothing written after (for a never-upserted store that is
-    * generation 0 = every row, the legacy hide-all semantics). The
-    * manifest needs no delete-side maintenance — its blooms merely
-    * OVER-approximate membership, and after a fold the "maybe
-    * duplicate" verification anti-join finds no postings row, so the
-    * id re-indexes cleanly.
-    */
-  def delete(spark: SparkSession, dir: String, ids: DataFrame,
-      autoFoldAt: Double = AutoFoldAt): Unit = {
-    Tombstones.append(spark, dir, ids, "vec_id",
-      gen = GenMeta.current(spark, dir))
-    maybeAutoFold(spark, dir, autoFoldAt)
-  }
-
-  /** Fold tombstones out of the postings (cell partition layout
-    * preserved — centroids and cell assignment are untouched, so every
-    * surviving row keeps its cell) and clear the tombstone set.
-    * Serving is bit-identical before and after; after the fold, a
-    * previously-deleted id may re-index. Single-writer, like
-    * [[update]].
-    */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    Tombstones.fold(spark, dir, "postings", "vec_id", Seq("c_id"),
-      genCol = Some("gen"))
-    // TRIM the manifest to the folded postings: between compacts it
-    // over-approximates (upsert re-appends member ids; deletes never
-    // shrink it) — the fold is the natural reset point. Crash-safe:
-    // a crash after the delete leaves NO manifest, and the next
-    // update() bootstraps one from the postings (the tested
-    // pre-manifest path); membership over-approximation in the
-    // surviving states costs a verify scan, never correctness.
-    if (StoreUtil.exists(spark, manifestPath(dir))) {
-      val mp = new org.apache.hadoop.fs.Path(manifestPath(dir))
-      mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(mp, true): Unit
-      appendManifest(spark, dir,
-        spark.read.parquet(s"$dir/postings").select("vec_id"))
-    }
-    Tombstones.clear(spark, dir)
-    // fold the per-upsert reservation rows too — PRESERVING the max
-    GenMeta.consolidate(spark, dir)
-  }
-
   /** The postings as every SERVING tier must read them: tombstoned
     * rows subtracted (a tiny broadcast anti-join; absent tombstones →
     * the exact raw scan, so tombstone-free stores keep their pinned
@@ -620,7 +556,7 @@ object AnnIndex {
   private[operators] def servingPostings(spark: SparkSession,
       dir: String): DataFrame =
     Tombstones.minus(spark, dir,
-      readPostings(spark, s"$dir/postings"), "vec_id",
+      readLeg(spark, s"$dir/postings"), "vec_id",
       genCol = Some("gen"))
 
   /** DESCRIBE the store — the [[graft.sinks.ParquetIndex.describe]]
@@ -633,19 +569,16 @@ object AnnIndex {
     */
   def describe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val posts = readPostings(spark, s"$dir/postings")
+    val posts = readLeg(spark, s"$dir/postings")
     val pr = posts.agg(count(lit(1)), countDistinct(col("c_id"))).head()
     val narrowPosts = // pre-gen store layouts lack the column
       if (posts.columns.contains("gen")) posts.select("vec_id", "gen")
       else posts.select("vec_id")
     val live = Tombstones.minus(spark, dir, narrowPosts, "vec_id",
       genCol = Some("gen")).count()
-    val tombs =
-      if (Tombstones.exists(spark, dir))
-        spark.read.parquet(Tombstones.path(dir)).count()
-      else 0L
+    val tombs = Tombstones.pendingRows(spark, dir)
     val (manRows, manIds) =
-      if (StoreUtil.exists(spark, manifestPath(dir))) {
+      if (exists(spark, manifestPath(dir))) {
         val m = spark.read.parquet(manifestPath(dir))
           .agg(count(lit(1)), sum("n")).head()
         (m.getLong(0), m.getLong(1))

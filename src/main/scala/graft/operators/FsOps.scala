@@ -124,17 +124,17 @@ object FsOps {
        |ORDER BY size_bytes DESC, relative_path LIMIT 20""".stripMargin)
 
   // -------------------------------------------------------------------- //
-  // P7: point lookup (scanner.py:492-497). The global-min window is the  //
-  // parity shape; a real deployment filters on a literal key, which       //
-  // prunes to one partition via parquet min/max stats.                    //
+  // P7: point lookup (scanner.py:492-497). The key is a scalar min       //
+  // subquery, as in the SQL form: map-side partial mins, never the whole //
+  // corpus in one task as an unpartitioned window would put it. A real   //
+  // deployment filters on a literal key, which prunes to one partition   //
+  // via parquet min/max stats.                                            //
   // -------------------------------------------------------------------- //
 
   def pointLookup(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy()
-    SyntheticFs.entries(spark, sfDir)
-      .withColumn("mn", min("relative_path").over(w))
-      .filter(col("relative_path") === col("mn"))
-      .drop("mn")
+    val entries = SyntheticFs.entries(spark, sfDir)
+    entries.filter(col("relative_path") ===
+      entries.select(min("relative_path")).scalar())
   }
 
   val pointLookupSql: String = SyntheticFs.withCtes(
@@ -152,9 +152,8 @@ object FsOps {
         when(col("l_orderkey") % 13 === 0,
           expr(s"${SyntheticFs.lastSeen} - INTERVAL 7 DAYS"))
           .otherwise(expr(SyntheticFs.lastSeen)))
-    varied
-      .withColumn("mx", max("ls2").over(Window.partitionBy()))
-      .filter(col("ls2") < col("mx"))
+    // a scalar max subquery, not an unpartitioned window over the files
+    varied.filter(col("ls2") < varied.select(max("ls2")).scalar())
       .select("relative_path")
       .orderBy("relative_path")
   }

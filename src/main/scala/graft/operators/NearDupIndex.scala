@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StoreUtil.{exists, readLeg}
+
 /** Durable INCREMENTAL near-duplicate index — the production shape of
   * continuous dedup at corpus scale: a parquet-backed band store where a
   * new batch of documents hashes ONLY itself and probes the existing
@@ -36,37 +38,21 @@ import org.apache.spark.sql.functions._
   * (many small appended files) is [[graft.sinks.DirCompaction]] — the
   * pointer-less sibling of ParquetIndex compaction, spec-proven to
   * leave update results unchanged.
+  *
+  * Lifecycle ([[Tombstones.Lifecycle]]): a deleted id stops surfacing
+  * in [[probe]]/[[update]] pair results at once — both the band
+  * postings and the verify shingles subtract the tombstones (a
+  * scrubbed document must not veto the admission of a fresh
+  * candidate) — and `compact` folds both legs.
   */
-object NearDupIndex {
+object NearDupIndex extends Tombstones.Lifecycle {
 
-  private def hExists(spark: SparkSession, path: String): Boolean =
-    StoreUtil.exists(spark, path)
+  protected val idCol = "doc_id"
+  protected val legs = Seq("bands" -> Nil, "shingles" -> Nil)
 
-  /** Read a store leg with SCHEMA MERGING — see [[TermIndex]]'s
-    * readLeg: a dir mixing pre-gen-era and gen-stamped files must not
-    * lose the `gen` column to footer sampling, or [[Tombstones.minus]]
-    * silently degrades to hide-all and live upserted rows vanish.
-    */
-  private def readLeg(spark: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** DELETE documents from the near-dup store — [[TermIndex.delete]]'s
-    * twin for the third store: tombstoned ids stop surfacing in
-    * [[probe]]/[[update]] pair results immediately (both the band
-    * postings and the verify shingles subtract them — a scrubbed
-    * document must not veto the admission of a fresh candidate), and
-    * the rows physically fold out at the next [[compact]]. A
-    * tombstoned id cannot re-index until the fold (the shingles
-    * membership list still carries it) — the hide-then-remove
-    * lifecycle shared with [[TermIndex]]/[[AnnIndex]].
-    */
-  def delete(spark: SparkSession, dir: String, ids: DataFrame,
-      autoFoldAt: Double = AutoFoldAt): Unit = {
-    Tombstones.append(spark, dir, ids, "doc_id",
-      gen = GenMeta.current(spark, dir))
-    maybeAutoFold(spark, dir, autoFoldAt)
-  }
+  /** shingles rows — a footer-stats count, no data pages. */
+  protected def rawRows(spark: SparkSession, dir: String): Long =
+    spark.read.parquet(s"$dir/shingles").count()
 
   /** UPSERT a batch of (doc_id, text) — last-writer-wins by id, the
     * [[TermIndex.upsert]]/[[AnnIndex.upsert]] twin completing the
@@ -74,68 +60,24 @@ object NearDupIndex {
     * text (their band keys and shingles CHANGE — the new generation
     * pairs by its new content), absent or previously-DELETED ids
     * insert, all with no compact between. Mechanism identical to the
-    * siblings ([[TermIndex.upsert]]'s reader-atomic order): reserve
-    * the next write generation ([[GenMeta]]), run the probe+append at
-    * `gen` with the membership check skipped and the batch ids
-    * excluded from the store legs (a doc's old text must never pair
-    * against its replacement), tombstone the batch ids at `gen - 1`
-    * tagged writer `gen`, and COMMIT `gen` to the watermark — the
-    * one-file append that makes the tombstone and the new band/
-    * shingle rows visible together. A concurrent [[probe]] anywhere
-    * in the window pairs against the OLD versions, never a gap and
-    * never both generations; a torn upsert's rows stay invisible
-    * until a re-run's commit hides them. Returns the pairs the new
-    * generations surface against the LIVE store — note the one
-    * contract delta vs [[update]]'s every-pair-exactly-once: a
-    * re-indexed document is a new document VERSION, so a pair may
-    * legitimately re-surface with its new content.
+    * siblings: the probe+append runs at a fresh generation inside
+    * [[Tombstones.Lifecycle]]'s reader-atomic UPSERT ORDER, with the
+    * membership check skipped and the batch ids excluded from the
+    * store legs (a doc's old text must never pair against its
+    * replacement). A concurrent [[probe]] anywhere in the window pairs
+    * against the OLD versions, never a gap and never both generations.
+    * Returns the pairs the new generations surface against the LIVE
+    * store — note the one contract delta vs [[update]]'s
+    * every-pair-exactly-once: a re-indexed document is a new document
+    * VERSION, so a pair may legitimately re-surface with its new
+    * content.
     */
   def upsert(spark: SparkSession, dir: String, docs: DataFrame,
       threshold: Double = 0.3,
-      autoFoldAt: Double = AutoFoldAt): DataFrame = {
-    GenMeta.initCommitted(spark, dir)
-    val g = GenMeta.reserve(spark, dir)
-    val pairs = run(spark, dir, docs, threshold, append = true,
-      gen = g, overwrite = true)
-    Tombstones.append(spark, dir, docs.select("doc_id"), "doc_id",
-      gen = g - 1, wgen = g)
-    GenMeta.commit(spark, dir, g)
-    maybeAutoFold(spark, dir, autoFoldAt)
-    pairs
-  }
-
-  /** Tombstone-debt ratio past which [[delete]]/[[upsert]] trigger an
-    * automatic [[compact]] — the shared hygiene bound (see
-    * [[TermIndex.AutoFoldAt]]); debt reads the tiny tombstone set over
-    * a footer-stats shingles count.
-    */
-  val AutoFoldAt = 0.5
-
-  private def maybeAutoFold(spark: SparkSession, dir: String,
-      threshold: Double): Unit = {
-    if (threshold.isInfinite) return
-    val debt = Tombstones.pendingRows(spark, dir)
-    if (debt == 0L) return
-    // live-row proxy: raw shingles count superseded generations too —
-    // subtract the debt so upsert-heavy stores don't under-trigger
-    // (the [[TermIndex]] denominator discipline)
-    val total = readLeg(spark, s"$dir/shingles").count() - debt
-    if (debt.toDouble >= threshold * math.max(total, 1L).toDouble)
-      compact(spark, dir)
-  }
-
-  /** Fold tombstones out of both store legs (bands, shingles), then
-    * clear the set; probe/update behavior is identical before and
-    * after, and a previously-deleted id may re-index.
-    */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    Tombstones.fold(spark, dir, "bands", "doc_id", Nil,
-      genCol = Some("gen"))
-    Tombstones.fold(spark, dir, "shingles", "doc_id", Nil,
-      genCol = Some("gen"))
-    Tombstones.clear(spark, dir)
-    GenMeta.consolidate(spark, dir)
-  }
+      autoFoldAt: Double = AutoFoldAt): DataFrame =
+    upserting(spark, dir, docs, autoFoldAt)(g =>
+      run(spark, dir, docs, threshold, append = true, gen = g,
+        overwrite = true))
 
   /** DESCRIBE the store — the observability row for the third store:
     * band-posting volume and key spread, indexed vs LIVE docs (the gap
@@ -153,11 +95,8 @@ object NearDupIndex {
     val indexed = docs.count()
     val live = Tombstones.minus(spark, dir, docs, "doc_id",
       genCol = Some("gen")).count()
-    val tombs =
-      if (Tombstones.exists(spark, dir))
-        spark.read.parquet(Tombstones.path(dir)).count()
-      else 0L
-    Seq((br.getLong(0), br.getLong(1), indexed, live, tombs))
+    Seq((br.getLong(0), br.getLong(1), indexed, live,
+      Tombstones.pendingRows(spark, dir)))
       .toDF("band_rows", "distinct_band_keys", "indexed_docs",
         "live_docs", "tombstones")
   }
@@ -203,7 +142,7 @@ object NearDupIndex {
     // probe legs explicitly below (the tombstone that will hide them
     // from later readers lands AFTER this call — commit-last order)
     val incoming =
-      if (append && !overwrite && hExists(spark, shinglesPath))
+      if (append && !overwrite && exists(spark, shinglesPath))
         docs.join(readLeg(spark, shinglesPath).select("doc_id"),
           Seq("doc_id"), "left_anti")
       else docs
@@ -220,7 +159,7 @@ object NearDupIndex {
 
     // store detection through Spark's Hadoop FS layer, not java.nio —
     // an hdfs:// or s3a:// store must not silently read as absent
-    val hasStore = hExists(spark, bandsPath)
+    val hasStore = exists(spark, bandsPath)
     // tombstone subtraction on the SERVING side of both legs (band
     // postings here, store shingles below): a deleted document must
     // stop pairing immediately; the membership anti-join above stays

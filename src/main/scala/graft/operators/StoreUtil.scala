@@ -9,11 +9,24 @@ import org.apache.spark.sql.functions._
   * hdfs:// or s3a:// store must not silently read as absent, and the
   * check must not live as three slightly different inline blocks.
   */
-private[operators] object StoreUtil {
+private[graft] object StoreUtil {
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** Read a store leg with SCHEMA MERGING — the one read for every
+    * path that feeds [[Tombstones.minus]] with a `genCol`, rewrites a
+    * leg, or serves metadata eras. A leg can mix files of different
+    * (additive) widths: pre-gen-era files beside `gen`-stamped ones, or
+    * an older metadata era beside a newer one. A plain read samples
+    * ONE footer: if it picks a pre-gen file the `gen` column vanishes,
+    * `minus` falls back to its hide-all branch and live upserted rows
+    * disappear nondeterministically; a rewrite would silently DROP a
+    * newer era's columns. Merging reads every footer once per scan.
+    */
+  def readLeg(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(path)
 
   /** JVM-lifetime temp-store cache — ONE definition of the
     * build-once-serve-many discipline every index-serving registry

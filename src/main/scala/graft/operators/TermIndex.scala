@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StoreUtil.{exists, readLeg}
+
 /** Durable INCREMENTAL inverted text index — the third of the store
   * trio ([[NearDupIndex]] = LSH bands, [[AnnIndex]] = IVF cells, this =
   * term postings): the Spark-native counterpart of the Elasticsearch
@@ -37,8 +39,27 @@ import org.apache.spark.sql.functions._
   * term order (not row order), so index-served results equal the
   * from-scratch batch query bit-for-bit — `docs_bm25_indexed` shares
   * `docs_bm25_topk`'s DuckDB oracle.
+  *
+  * Lifecycle ([[Tombstones.Lifecycle]]): `delete` is the in-engine
+  * mirror of the reference's ES delete path
+  * (elasticsearch_integration.py:453-566, without its 10k scan cap).
+  * Every serving read — [[searchAll]]/[[search]] scoring AND the
+  * corpus statistics n/avgdl/df, [[phraseSearch]] — subtracts the
+  * tombstones, so a deleted document's results and its influence on
+  * every OTHER document's score vanish as if the store had been
+  * rebuilt on the post-delete corpus (`docs_bm25_indexed_deleted`
+  * gates exactly that, bit-for-bit). `compact` folds postings (bucket
+  * layout preserved) and doclen; `docs_bm25_compacted` shares the
+  * deleted oracle.
   */
-object TermIndex {
+object TermIndex extends Tombstones.Lifecycle {
+
+  protected val idCol = "doc_id"
+  protected val legs = Seq("postings" -> Seq("t_b"), "doclen" -> Nil)
+
+  /** doclen rows — a footer-stats count, no data pages. */
+  protected def rawRows(spark: SparkSession, dir: String): Long =
+    spark.read.parquet(s"$dir/doclen").count()
 
   /** Postings partition count. crc32 matches Spark's `crc32` function
     * (java.util.zip.CRC32), so the driver can compute a literal bucket
@@ -51,21 +72,6 @@ object TermIndex {
     c.update(term.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     (c.getValue % NBuckets).toInt
   }
-
-  private def exists(spark: SparkSession, path: String): Boolean =
-    StoreUtil.exists(spark, path)
-
-  /** Read a store leg with SCHEMA MERGING — every path that feeds
-    * [[Tombstones.minus]] with a `genCol` must see the `gen` column
-    * even when the dir mixes pre-gen-era files (written before upserts
-    * existed) with stamped ones: a plain read samples ONE footer, and
-    * if it picks a pre-gen file the column vanishes, `minus` falls
-    * back to the hide-all branch, and live upserted rows disappear
-    * from serving nondeterministically. Same discipline as
-    * [[AnnIndex]]'s readPostings and [[Tombstones.fold]].
-    */
-  private def readLeg(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
 
   /** Index a batch of (doc_id, text). Already-indexed doc_ids are
     * skipped (anti-join on the doclen membership list), so re-running a
@@ -89,41 +95,17 @@ object TermIndex {
     * `INSERT OR REPLACE` (direct_links.py:169-172): present ids are
     * re-indexed with the new text, absent (even previously-DELETED)
     * ids insert — all WITHOUT a store rewrite and without a compact
-    * between delete and re-add. Mechanism: reserve the next write
-    * generation ([[GenMeta]]), append postings + doclen stamped `gen`,
-    * tombstone the batch ids at threshold `gen - 1` tagged writer
-    * `gen` (hiding every older row of those ids — a broadcast
-    * anti-join at serve, same as delete), then COMMIT `gen` to the
-    * [[GenMeta]] watermark — the one-file append that is the upsert's
-    * atomic visibility flip. READER-ATOMIC: serving reads snapshot the
-    * watermark at plan time and gate both the data rows (`gen <=
-    * watermark`) and the tombstone rows (`ts_wgen <= watermark`), so a
-    * reader anywhere in the window serves the OLD version of every
-    * upserted doc — never absent, never both generations, with df/n/
-    * avgdl all computed on the same snapshot (TombstoneHygieneSpec
-    * interleaves a reader between every pair of writes and pins it).
-    * Crash argument: the generation reserves FIRST (a re-run lands at
-    * a strictly higher gen), the watermark commits LAST — a torn
-    * upsert's data and tombstone stay invisible forever, and the
-    * re-run's own tombstone hides the torn rows the moment its commit
-    * raises the watermark past them. Recovery goes through [[upsert]]
-    * (re-send the batch), not [[update]]: the torn rows still occupy
-    * the raw membership list. Single-writer per store, now enforced by
-    * [[GenMeta.reserve]]'s atomic marker. `docs_bm25_reindexed` gates
-    * serving bit-identical to a from-scratch build on the post-upsert
-    * corpus; the rows physically fold at [[compact]] exactly as
-    * deletes do.
+    * between delete and re-add. The write is [[writeRows]] at a fresh
+    * generation, run inside [[Tombstones.Lifecycle]]'s reader-atomic
+    * UPSERT ORDER (TombstoneHygieneSpec interleaves a reader between
+    * every pair of writes and pins it: df/n/avgdl all come from the
+    * same snapshot). `docs_bm25_reindexed` gates serving bit-identical
+    * to a from-scratch build on the post-upsert corpus; the rows
+    * physically fold at [[compact]] exactly as deletes do.
     */
   def upsert(spark: SparkSession, dir: String, docs: DataFrame,
-      autoFoldAt: Double = AutoFoldAt): Unit = {
-    GenMeta.initCommitted(spark, dir)
-    val g = GenMeta.reserve(spark, dir)
-    writeRows(spark, dir, docs, gen = g)
-    Tombstones.append(spark, dir, docs.select("doc_id"), "doc_id",
-      gen = g - 1, wgen = g)
-    GenMeta.commit(spark, dir, g)
-    maybeAutoFold(spark, dir, autoFoldAt)
-  }
+      autoFoldAt: Double = AutoFoldAt): Unit =
+    upserting(spark, dir, docs, autoFoldAt)(writeRows(spark, dir, docs, _))
 
   /** Tokenize `docs` once and append postings + doclen at `gen` — the
     * shared write tail of [[update]] (gen 0, membership-filtered) and
@@ -158,77 +140,11 @@ object TermIndex {
     // statistics, and the reference's per-doc bulk indexing exposes
     // the same not-yet-everywhere state mid-batch. Upserts have no
     // such window at all: their writes sit above the commit watermark
-    // until GenMeta.commit flips them visible atomically.
+    // until the generation commits.
     fresh
       .select(col("doc_id"), size(col("toks")).cast("double").as("dl"))
       .withColumn("gen", lit(gen))
       .write.mode("append").parquet(s"$dir/doclen")
-  }
-
-  /** Tombstone-debt ratio past which [[delete]]/[[upsert]] trigger an
-    * automatic [[compact]] — the self-enforcing hygiene bound keeping
-    * the serving-side anti-join's tombstone set small relative to the
-    * store (pass `Double.PositiveInfinity` to opt out). Debt is
-    * measured on cheap reads: tombstone rows (tiny set) over doclen
-    * rows (a footer-stats count, no data pages).
-    */
-  val AutoFoldAt = 0.5
-
-  private def maybeAutoFold(spark: SparkSession, dir: String,
-      threshold: Double): Unit = {
-    if (threshold.isInfinite) return
-    val debt = Tombstones.pendingRows(spark, dir)
-    if (debt == 0L) return
-    val total = spark.read.parquet(s"$dir/doclen").count()
-    if (debt.toDouble >= threshold * math.max(total, 1L).toDouble)
-      compact(spark, dir)
-  }
-
-  /** DELETE documents from the serving index — the in-engine mirror of
-    * the reference's ES delete path (elasticsearch_integration.py:
-    * 453-566, without its 10k scan cap): tombstone ids append under
-    * `dir/tombstones` and every serving read ([[searchAll]]/[[search]]
-    * scoring AND the corpus statistics n/avgdl/df, [[phraseSearch]])
-    * subtracts them immediately, so a deleted document's results —
-    * and its influence on every OTHER document's BM25 score — vanish
-    * as if the store had been rebuilt on the post-delete corpus
-    * (`docs_bm25_indexed_deleted` gates exactly that, bit-for-bit).
-    * The rows physically fold out at the next [[compact]].
-    *
-    * A tombstoned id cannot RE-index through [[update]] (the doclen
-    * membership list still carries it physically) — but [[upsert]]
-    * re-adds it at a fresh write generation with no compact in
-    * between: the tombstone pins the CURRENT [[GenMeta]] generation,
-    * so it hides everything written so far and nothing written after.
-    * For a store that never upserted, the current generation is 0 =
-    * every row — the exact legacy hide-all semantics.
-    */
-  def delete(spark: SparkSession, dir: String, ids: DataFrame,
-      autoFoldAt: Double = AutoFoldAt): Unit = {
-    Tombstones.append(spark, dir, ids, "doc_id",
-      gen = GenMeta.current(spark, dir))
-    maybeAutoFold(spark, dir, autoFoldAt)
-  }
-
-  /** Fold tombstones out of the store: rewrite postings (bucket
-    * partition layout preserved) and doclen without the deleted rows,
-    * then clear the tombstone set. Serving is bit-identical before and
-    * after (`docs_bm25_compacted` shares the deleted oracle); after the
-    * fold, a previously-deleted id may re-index. Order matters for
-    * crash safety: tombstones clear LAST, so an interrupted fold keeps
-    * subtracting and a re-run finishes the job. Single-writer, like
-    * [[update]] and [[graft.sinks.DirCompaction]].
-    */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    Tombstones.fold(spark, dir, "postings", "doc_id", Seq("t_b"),
-      genCol = Some("gen"))
-    Tombstones.fold(spark, dir, "doclen", "doc_id", Nil,
-      genCol = Some("gen"))
-    Tombstones.clear(spark, dir)
-    // fold the per-upsert reservation rows too — PRESERVING the max
-    // (resetting it would let a later delete's threshold miss live
-    // higher-generation rows)
-    GenMeta.consolidate(spark, dir)
   }
 
   /** DESCRIBE the store — the [[graft.sinks.ParquetIndex.describe]]
@@ -248,12 +164,8 @@ object TermIndex {
       countDistinct(col("term"))).head()
     val dr = doclen.agg(count(lit(1))).head()
     val lr = liveLen.agg(count(lit(1)), avg("dl")).head()
-    val tombs =
-      if (Tombstones.exists(spark, dir))
-        spark.read.parquet(Tombstones.path(dir)).count()
-      else 0L
     Seq((pr.getLong(0), pr.getLong(1), NBuckets.toLong, pr.getLong(2),
-      dr.getLong(0), lr.getLong(0), tombs,
+      dr.getLong(0), lr.getLong(0), Tombstones.pendingRows(spark, dir),
       if (lr.isNullAt(1)) 0.0 else lr.getDouble(1)))
       .toDF("postings_rows", "buckets_occupied", "buckets_total",
         "distinct_terms", "indexed_docs", "live_docs", "tombstones",

@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.DirCompaction
+
 /** Shared DELETE/UPSERT lifecycle for the durable serving stores
   * ([[TermIndex]], [[AnnIndex]], [[NearDupIndex]]) — the in-engine
   * mirror of the reference's search-sink delete semantics
@@ -36,13 +38,10 @@ import org.apache.spark.sql.functions._
   * store has a [[GenMeta]] commit watermark, [[minus]] snapshots it
   * once at plan time and gates BOTH sides on it: tombstones with
   * `ts_wgen > watermark` and data rows with `gen > watermark` are
-  * in-flight (or torn) and do not serve. An upsert therefore appends
-  * its data AND its tombstone first — both invisible — and flips them
-  * visible together with [[GenMeta.commit]]'s one-file append: a
-  * concurrent reader serves the OLD version of every upserted doc
-  * throughout the window, never a gap and never both versions, and a
-  * crashed upsert's rows stay invisible until the re-run's higher
-  * tombstone hides them. Stores without a watermark table (insert-only
+  * in-flight (or torn) and do not serve. An upsert therefore writes
+  * its data AND its tombstone invisibly and flips them visible
+  * together with one commit — [[Lifecycle]] states the order and its
+  * reader and crash guarantees. Stores without a watermark table (insert-only
   * or pre-r13) read exactly as before — one existence check, same
   * plans.
   *
@@ -57,19 +56,16 @@ import org.apache.spark.sql.functions._
   * past `spark.graft.tombstone.broadcastBytes` (default 8 MB parquet)
   * it drops the broadcast hint and lets AQE pick a shuffle anti-join,
   * so a mass-delete cannot broadcast an over-large frame. The fold is
-  * one partition-layout-preserving rewrite through the tmp/old
-  * two-rename swap — a crash at any point leaves the rows in exactly
-  * one of live/tmp/old, and the tombstone set clears only after every
-  * data subdir has folded, so an interrupted compaction still serves
-  * correctly and a re-run finishes the job (subtracting
-  * already-removed ids is a no-op). Writers are single at a time per
+  * one partition-layout-preserving rewrite through
+  * [[graft.sinks.DirCompaction.swap]] — a crash at any point leaves the
+  * rows in exactly one of live/tmp/old, and the tombstone set clears
+  * only after every data subdir has folded, so an interrupted
+  * compaction still serves correctly and a re-run finishes the job
+  * (subtracting already-removed ids is a no-op). Writers are single at a time per
   * store (the stores' documented discipline); readers racing a merge
   * or fold see either layout, never a torn one.
   */
 private[operators] object Tombstones {
-
-  private val TmpSuffix = ".compact-tmp"
-  private val OldSuffix = ".compact-old"
 
   /** Generation threshold column of a tombstone row (hide gens <= it). */
   private val GenCol = "ts_gen"
@@ -93,9 +89,9 @@ private[operators] object Tombstones {
   private val BroadcastBytesKey = "spark.graft.tombstone.broadcastBytes"
   private val BroadcastBytesDefault = 8L * 1024 * 1024
 
-  def path(dir: String): String = s"$dir/tombstones"
+  private def path(dir: String): String = s"$dir/tombstones"
 
-  def exists(spark: SparkSession, dir: String): Boolean =
+  private def exists(spark: SparkSession, dir: String): Boolean =
     StoreUtil.exists(spark, path(dir))
 
   private def hfs(spark: SparkSession, p: HPath): FileSystem =
@@ -148,8 +144,7 @@ private[operators] object Tombstones {
     */
   private def readAll(spark: SparkSession, dir: String,
       watermark: Option[Long] = None): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(path(dir))
+    val raw = StoreUtil.readLeg(spark, path(dir))
     def norm(df: DataFrame, c: String, dflt: Long) =
       if (df.columns.contains(c))
         df.withColumn(c, coalesce(col(c), lit(dflt)))
@@ -217,72 +212,160 @@ private[operators] object Tombstones {
   }
 
   /** Rewrite `dir/$sub` without the tombstone-hidden rows, preserving
-    * its partition layout, via the tmp/old two-rename swap (recovering
-    * an interrupted earlier swap first). No-op when the store carries
-    * no tombstones.
+    * its partition layout, through [[graft.sinks.DirCompaction.swap]]
+    * (which first repairs an interrupted earlier swap). No-op when the
+    * store carries no tombstones.
     */
-  def fold(spark: SparkSession, dir: String, sub: String, idCol: String,
-      partitionCols: Seq[String],
-      genCol: Option[String] = None): Unit = {
+  private def fold(spark: SparkSession, dir: String, sub: String,
+      idCol: String, partitionCols: Seq[String]): Unit = {
     if (!exists(spark, dir)) return
     val base = new HPath(s"$dir/$sub")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, base)
-    if (!fs.exists(base)) return
-    val tmp = new HPath(s"$dir/$sub$TmpSuffix")
-    val old = new HPath(s"$dir/$sub$OldSuffix")
-    // mergeSchema: after a metadata-era evolution the dir holds files
-    // of different (additive) widths — a sampled-footer read would
-    // silently DROP a newer era's columns from the rewritten store
-    val kept = minus(spark, dir,
-      spark.read.option("mergeSchema", "true").parquet(base.toString),
-      idCol, genCol)
-    // the tmp parquet commit fully executes the filtered plan BEFORE
-    // the first rename — the live dir is never touched while a plan
-    // still reads it
-    val w = kept.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    require(fs.rename(base, old), s"fold: rename $base -> $old")
-    require(fs.rename(tmp, base), s"fold: rename $tmp -> $base")
-    fs.delete(old, true): Unit
+    DirCompaction.swap(hfs(spark, base), base) { tmp =>
+      // the tmp parquet commit fully executes the filtered plan BEFORE
+      // the swap's first rename — the live dir is never touched while
+      // a plan still reads it
+      val w = minus(spark, dir, StoreUtil.readLeg(spark, base.toString),
+        idCol, genCol = Some("gen")).write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp)
+    }: Unit
   }
 
   /** Drop the tombstone set — the LAST step of a compaction, after
     * every data subdir has folded (clearing first would resurrect the
     * hidden rows in any not-yet-folded subdir).
     */
-  def clear(spark: SparkSession, dir: String): Unit = {
+  private def clear(spark: SparkSession, dir: String): Unit = {
     val p = new HPath(path(dir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true): Unit
+    hfs(spark, p).delete(p, true): Unit
   }
 
   /** Tombstone rows currently pending (0 without a set) — the debt
-    * numerator the stores' ratio-triggered auto-fold alarms on.
+    * numerator of [[Lifecycle]]'s ratio-triggered auto-fold, and the
+    * `tombstones` column of each store's `describe`.
     */
   def pendingRows(spark: SparkSession, dir: String): Long =
     if (exists(spark, dir))
       spark.read.parquet(path(dir)).count()
     else 0L
 
-  /** Repair an interrupted swap of `base` —
-    * [[graft.sinks.DirCompaction]]'s state table: live dir present →
-    * the orphans are stale, drop them; live dir missing → the
-    * completed tmp (the first rename happens only after tmp's parquet
-    * commit) or the untouched old restores it.
+  /** The write lifecycle the three stores share: each store supplies
+    * only its id column, its data legs, its raw row count and its own
+    * write; [[delete]], [[compact]] and the auto-fold live here once.
+    *
+    * UPSERT ORDER (reader-atomic, crash-safe) — the one statement of
+    * it every store's `upsert` points at:
+    *  1. [[GenMeta.initCommitted]]: once the watermark table exists,
+    *     readers gate on it, so what follows stays invisible;
+    *  1. [[GenMeta.reserve]] generation `g` (a re-run after a crash
+    *     lands strictly higher);
+    *  1. the store's own write, every row stamped `gen = g` — above the
+    *     watermark, so no reader serves it yet;
+    *  1. a tombstone of the batch ids at threshold `g - 1` tagged
+    *     writer `g` — hiding every older row of those ids, but
+    *     inactive until `g` commits;
+    *  1. [[GenMeta.commit]]`(g)`: the one-file append that flips the
+    *     new rows and the tombstone visible together;
+    *  1. the auto-fold check.
+    * A reader anywhere in the window serves the OLD version of every
+    * upserted id — never absent, never both generations (readers
+    * snapshot the watermark once at plan time, see [[minus]]). A torn
+    * upsert's rows and tombstone stay invisible forever, and the
+    * re-run's own tombstone hides them the moment its commit raises
+    * the watermark past them. Recovery re-sends the batch through
+    * `upsert`, not `update`: the torn rows still occupy the raw
+    * membership list. Single writer per store, enforced by
+    * [[GenMeta.reserve]]'s atomic marker. TombstoneHygieneSpec replays
+    * this order for all three stores with a reader between every
+    * pair of steps.
+    *
+    * DELETE tombstones at the CURRENT generation: it hides everything
+    * written so far and nothing written after, so an upsert may re-add
+    * the id with no compact in between (for a never-upserted store the
+    * current generation is 0 = every row, the legacy hide-all rule).
+    * The plain `update` cannot re-add a tombstoned id before the fold:
+    * its membership check still sees the physical row.
+    *
+    * COMPACT folds every leg, runs the store's [[afterFold]] hook,
+    * clears the tombstones LAST (an interrupted fold keeps subtracting
+    * and a re-run finishes the job) and consolidates the generation
+    * tables, PRESERVING their max (a reset counter would let a later
+    * delete's threshold miss live higher-generation rows). Serving is
+    * bit-identical before and after; afterwards a deleted id may
+    * re-index through `update`.
     */
-  private def recover(fs: FileSystem, base: HPath): Unit = {
-    val tmp = new HPath(base.getParent, base.getName + TmpSuffix)
-    val old = new HPath(base.getParent, base.getName + OldSuffix)
-    if (fs.exists(base)) {
-      fs.delete(tmp, true)
-      fs.delete(old, true): Unit
-    } else if (fs.exists(tmp)) {
-      require(fs.rename(tmp, base), s"recover: rename $tmp -> $base")
-      fs.delete(old, true): Unit
-    } else if (fs.exists(old)) {
-      require(fs.rename(old, base), s"recover: rename $old -> $base")
+  trait Lifecycle {
+
+    /** Id column of the store's rows and of its tombstones. */
+    protected def idCol: String
+
+    /** The data legs [[compact]] folds, in order: (subdir, partition
+      * columns, preserved by the rewrite).
+      */
+    protected def legs: Seq[(String, Seq[String])]
+
+    /** Raw row count of the store's membership leg, superseded
+      * generations and tombstoned rows included — read cheaply
+      * (footer stats or a small side table), never the data pages.
+      */
+    protected def rawRows(spark: SparkSession, dir: String): Long
+
+    /** Runs in [[compact]] after every leg has folded and before the
+      * tombstones clear (a store's side table rebuilt from the folded
+      * legs).
+      */
+    protected def afterFold(spark: SparkSession, dir: String): Unit = ()
+
+    /** Tombstone-debt ratio past which [[delete]] and `upsert` compact
+      * the store themselves — the self-enforcing bound that keeps the
+      * serving anti-join's tombstone set small next to the store (pass
+      * `Double.PositiveInfinity` to opt out).
+      */
+    val AutoFoldAt = 0.5
+
+    /** DELETE ids: every serving read subtracts them at once, and the
+      * rows physically fold out at the next [[compact]].
+      */
+    def delete(spark: SparkSession, dir: String, ids: DataFrame,
+        autoFoldAt: Double = AutoFoldAt): Unit = {
+      append(spark, dir, ids, idCol, gen = GenMeta.current(spark, dir))
+      autoFold(spark, dir, autoFoldAt)
+    }
+
+    /** Fold the tombstones out of every leg, then clear them. */
+    def compact(spark: SparkSession, dir: String): Unit = {
+      legs.foreach { case (sub, parts) => fold(spark, dir, sub, idCol, parts) }
+      afterFold(spark, dir)
+      clear(spark, dir)
+      GenMeta.consolidate(spark, dir)
+    }
+
+    /** Run the store's `write` at a fresh generation inside the
+      * UPSERT ORDER above; `batch` carries the ids to supersede.
+      */
+    protected def upserting[T](spark: SparkSession, dir: String,
+        batch: DataFrame, autoFoldAt: Double)(write: Long => T): T = {
+      GenMeta.initCommitted(spark, dir)
+      val g = GenMeta.reserve(spark, dir)
+      val out = write(g)
+      append(spark, dir, batch, idCol, gen = g - 1, wgen = g)
+      GenMeta.commit(spark, dir, g)
+      autoFold(spark, dir, autoFoldAt)
+      out
+    }
+
+    /** Compact once debt >= threshold * max(raw - debt, 1): the raw
+      * count also holds superseded generations and deleted rows, so
+      * raw minus debt is the live-row proxy — a raw denominator would
+      * leave an upsert-heavy store under-triggered.
+      */
+    private def autoFold(spark: SparkSession, dir: String,
+        threshold: Double): Unit = {
+      if (threshold.isInfinite) return
+      val debt = pendingRows(spark, dir)
+      if (debt > 0L && debt.toDouble >=
+          threshold * math.max(rawRows(spark, dir) - debt, 1L).toDouble)
+        compact(spark, dir)
     }
   }
 }

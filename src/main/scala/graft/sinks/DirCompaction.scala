@@ -21,17 +21,10 @@ import org.apache.spark.sql.SparkSession
   * Single-writer stores only: callers pause updates for the swap (the
   * same discipline their `update()` already assumes — concurrent
   * appends to one store are undefined with or without compaction).
-  * The rewrite is restartable and never deletes live data mid-swap:
-  * the temp dir is written completely, then the original renames to
-  * `.compact-old`, the temp renames into place, and only then is the
-  * old copy removed — a crash at any point leaves the rows intact in
-  * exactly one of the three names. Every `compact()` begins with a
-  * RECOVERY sweep that repairs exactly those states: a missing live
-  * dir is restored from its completed `.compact-tmp` (crash between
-  * the two renames; the tmp write completed before the first rename)
-  * or from `.compact-old` (the untouched original), and only
-  * then are leftover orphans deleted — so no crash point leaves a
-  * store partition unreadable or corrupts partition discovery with a
+  * The rewrite is restartable and never deletes live data mid-swap
+  * ([[swap]]), and every `compact()` begins with a RECOVERY sweep
+  * ([[recoverDir]]'s state table) — so no crash point leaves a store
+  * partition unreadable or corrupts partition discovery with a
   * lingering suffixed sibling.
   */
 object DirCompaction {
@@ -55,43 +48,76 @@ object DirCompaction {
     else subdirs.flatMap(s => leafDirs(fs, s.getPath))
   }
 
-  /** Repair any interrupted swap under `root` before compacting.
+  /** The swap's (tmp, old) siblings of `base`. */
+  private def siblings(base: HPath): (HPath, HPath) =
+    (new HPath(base.getParent, base.getName + TmpSuffix),
+      new HPath(base.getParent, base.getName + OldSuffix))
+
+  /** Repair an interrupted swap of `base`.
     *
-    * State table (per base dir, from the swap protocol's crash points):
+    * State table (from the swap protocol's crash points):
     *  - base EXISTS + orphan(s): crash before the first rename (tmp may
     *    be incomplete) or after the second (old superseded) → the live
     *    dir is authoritative, delete orphans.
     *  - base MISSING + tmp exists: crash between the two renames. The
     *    tmp write had already completed (the first rename happens only
-    *    after the tmp parquet commit), so tmp IS the compacted result →
-    *    rename it into place, then drop old.
+    *    after the tmp parquet commit), so tmp IS the rewritten result
+    *    → rename it into place, then drop old.
     *  - base MISSING + only old: crash immediately after the first
     *    rename on a store whose tmp vanished (shouldn't occur, but
     *    restorable) → rename old back into place.
+    */
+  private def recoverDir(fs: FileSystem, base: HPath): Unit = {
+    val (tmp, old) = siblings(base)
+    if (fs.exists(base)) {
+      fs.delete(tmp, true)
+      fs.delete(old, true): Unit
+    } else if (fs.exists(tmp)) {
+      require(fs.rename(tmp, base), s"recover: rename $tmp -> $base")
+      fs.delete(old, true): Unit
+    } else if (fs.exists(old)) {
+      require(fs.rename(old, base), s"recover: rename $old -> $base")
+    }
+  }
+
+  /** [[recoverDir]] every interrupted swap under `root`: a suffixed dir
+    * names its base, which may itself be missing.
     */
   private def recover(fs: FileSystem, root: HPath): Unit = {
     if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return
     def walk(dir: HPath): Unit = listed(fs, dir).filter(_.isDirectory)
       .foreach { s =>
         val name = s.getPath.getName
-        if (name.endsWith(TmpSuffix) || name.endsWith(OldSuffix)) {
-          val baseName =
-            name.stripSuffix(TmpSuffix).stripSuffix(OldSuffix)
-          val base = new HPath(dir, baseName)
-          val tmp = new HPath(dir, baseName + TmpSuffix)
-          val old = new HPath(dir, baseName + OldSuffix)
-          if (fs.exists(base)) {
-            fs.delete(tmp, true)
-            fs.delete(old, true): Unit
-          } else if (fs.exists(tmp)) {
-            require(fs.rename(tmp, base), s"recover: rename $tmp -> $base")
-            fs.delete(old, true): Unit
-          } else if (fs.exists(old)) {
-            require(fs.rename(old, base), s"recover: rename $old -> $base")
-          }
-        } else walk(s.getPath)
+        if (name.endsWith(TmpSuffix) || name.endsWith(OldSuffix))
+          recoverDir(fs, new HPath(dir,
+            name.stripSuffix(TmpSuffix).stripSuffix(OldSuffix)))
+        else walk(s.getPath)
       }
     walk(root)
+  }
+
+  /** Rewrite `dir` in place through the two-rename swap — the one
+    * crash-safe directory swap of the serving stores (this compaction
+    * and [[graft.operators.Tombstones]]' fold). First repairs an
+    * interrupted earlier swap of `dir` ([[recoverDir]]); then `write`
+    * fills the tmp sibling (its path is the argument) and must have
+    * COMMITTED before it returns; only then does `dir` rename to old,
+    * tmp to `dir`, and old go — never a delete of live data, so a
+    * crash at any point leaves the rows in exactly one of dir / tmp /
+    * old, which the next swap or compaction repairs (rm-before-move
+    * would lose the dir on a crash between the two calls). Returns
+    * false, writing nothing, if `dir` is absent.
+    */
+  private[graft] def swap(fs: FileSystem, dir: HPath)(
+      write: String => Unit): Boolean = {
+    recoverDir(fs, dir)
+    if (!fs.exists(dir)) return false
+    val (tmp, old) = siblings(dir)
+    write(tmp.toString)
+    require(fs.rename(dir, old), s"swap: rename $dir -> $old")
+    require(fs.rename(tmp, dir), s"swap: rename $tmp -> $dir")
+    fs.delete(old, true)
+    true
   }
 
   /** Compact every over-fragmented leaf dir under `root` (recovering
@@ -103,37 +129,18 @@ object DirCompaction {
     val rootPath = new HPath(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, rootPath)
-    var done = 0
-    leafDirs(fs, rootPath).foreach { dir =>
+    leafDirs(fs, rootPath).count { dir =>
       val files = parquetFiles(fs, dir)
-      if (files.nonEmpty) {
-        val bytes = files.map(_.getLen).sum
-        val target = math.max(1,
-          math.ceil(bytes.toDouble / targetFileBytes).toInt)
-        // healthy = within the count bound OR already byte-sized wide
-        if (files.size > math.max(maxFilesPerDir, target)) {
-          val tmp = new HPath(dir.getParent, dir.getName + TmpSuffix)
-          val old = new HPath(dir.getParent, dir.getName + OldSuffix)
-          fs.delete(tmp, true)
-          fs.delete(old, true)
+      val target = math.max(1,
+        math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
+      // healthy = within the count bound OR already byte-sized wide
+      files.size > math.max(maxFilesPerDir, target) &&
+        swap(fs, dir) { tmp =>
           // mergeSchema: a leaf dir can hold files of different
-          // (additive) metadata eras — a sampled-footer read would
-          // silently drop a newer era's columns from the rewrite
-          spark.read.option("mergeSchema", "true")
-            .parquet(dir.toString).coalesce(target)
-            .write.mode("overwrite").parquet(tmp.toString)
-          // swap via two renames, never a delete of live data: a crash
-          // at any point leaves the rows in exactly one of dir /
-          // .compact-tmp / .compact-old — recoverable by the entry
-          // sweep above, never silently missing (rm-before-move would
-          // lose the dir on a crash between the two calls)
-          require(fs.rename(dir, old), s"compact: rename $dir -> $old")
-          require(fs.rename(tmp, dir), s"compact: rename $tmp -> $dir")
-          fs.delete(old, true)
-          done += 1
+          // (additive) metadata eras — see StoreUtil.readLeg
+          graft.operators.StoreUtil.readLeg(spark, dir.toString)
+            .coalesce(target).write.mode("overwrite").parquet(tmp)
         }
-      }
     }
-    done
   }
 }

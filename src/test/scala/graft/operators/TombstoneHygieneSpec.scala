@@ -48,6 +48,47 @@ class TombstoneHygieneSpec extends SparkSpecBase {
     assert(StoreUtil.exists(spark, s"$dir2/tombstones"))
   }
 
+  test("an upsert-heavy term store auto-folds on the live-row " +
+      "denominator: upserting 60 of 100 docs compacts") {
+    val dir = Files.createTempDirectory("tomb_autofold_upsert").toString
+    TermIndex.update(spark, dir, tinyDocs(100))
+    // debt 60 against 100 live docs crosses 0.5; doclen's raw 160 rows
+    // (the superseded generation included) would not
+    TermIndex.upsert(spark, dir, tinyDocs(60)
+      .withColumn("text", concat(col("text"), lit(" gamma"))))
+    assert(!StoreUtil.exists(spark, s"$dir/tombstones"))
+    assert(TermIndex.search(spark, dir, Seq("gamma"), 1000)
+      .collect().map(_.getLong(0)).toSet == (1L to 60L).toSet)
+  }
+
+  test("a fold interrupted between its two swap renames is repaired " +
+      "by the next compact; serving matches a from-scratch store") {
+    val dir = Files.createTempDirectory("tomb_fold_crash").toString
+    TermIndex.update(spark, dir, tinyDocs(40))
+    TermIndex.delete(spark, dir,
+      tinyDocs(40).filter(col("doc_id") % 4 === 0).select("doc_id"),
+      autoFoldAt = Double.PositiveInfinity)
+    // the fold of doclen died after rename(live -> old): tmp holds the
+    // complete folded leg, the live name is missing, tombstones remain
+    val live = java.nio.file.Paths.get(s"$dir/doclen")
+    Tombstones.minus(spark, dir, spark.read.parquet(live.toString),
+      "doc_id", genCol = Some("gen"))
+      .write.parquet(s"$live.compact-tmp")
+    Files.move(live, java.nio.file.Paths.get(s"$live.compact-old"))
+    TermIndex.compact(spark, dir)
+    assert(Files.exists(live))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$live.compact-tmp")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$live.compact-old")))
+    assert(!StoreUtil.exists(spark, s"$dir/tombstones"))
+    val ref = Files.createTempDirectory("tomb_fold_crash_ref").toString
+    TermIndex.update(spark, ref,
+      tinyDocs(40).filter(col("doc_id") % 4 =!= 0))
+    def res(d: String) = TermIndex.search(spark, d,
+      Seq("alpha", "beta"), 1000)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(res(dir) == res(ref))
+  }
+
   test("the ANN store auto-folds on the same debt ratio") {
     val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
     val dir = Files.createTempDirectory("tomb_autofold_ann").toString
